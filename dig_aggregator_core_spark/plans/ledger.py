@@ -4,11 +4,17 @@ Reproduces the reference's MySQL tables and their upsert semantics
 (reference runs.sql:1-12, Runs.scala:77-116; runstatus.sql:1-12,
 RunStatus.scala:56-128) on plain Parquet:
 
-- upsert on the unique key = old.antiJoin(new, key).union(new), written as a
-  NEW versioned directory (`v=N+1`) — no read-modify-overwrite of the
-  directory being scanned, and the previous version remains readable until
-  the new one is committed (poor-man's snapshot isolation; Delta MERGE INTO
-  is the drop-in upgrade where the dependency is allowed);
+- every write is a read-merge-write done on the driver in pyarrow: the
+  current version is read as an Arrow table, merged (upsert on the unique
+  key = left-anti join of the old rows against the new keys, then concat
+  of the new rows), and written as ONE parquet file into a NEW versioned
+  directory (`v=N+1`). No Spark job runs: the ledger is metadata (one row
+  per processed input-output), orders of magnitude smaller than the data,
+  so scheduling a job would cost far more than moving its rows. There is
+  no read-modify-overwrite of the directory being scanned, and the
+  previous version stays readable until the new one is committed
+  (poor-man's snapshot isolation; Delta MERGE INTO is the drop-in upgrade
+  where the dependency is allowed);
 - CONCURRENT writers are safe: every read-merge-write cycle runs under an
   exclusive flock on `<table>/.lock`, so two simultaneous upserts serialize
   and neither loses the other's rows — the semantics the reference gets for
@@ -19,16 +25,23 @@ RunStatus.scala:56-128) on plain Parquet:
   committed version. An object-store deployment swaps this class for a
   transactional table format;
 - `RunStatus.insert` on an existing key RESETS started/ended to NULL
-  (RunStatus.scala:79-83 — pinned by the ported RunsStatusTest).
+  (RunStatus.scala:79-83 — pinned by the ported RunsStatusTest);
+- `read()`/`of()`/`all()` still return Spark DataFrames/rows; `snapshot()`
+  is the same data as an Arrow table, read without a Spark job.
 
-The ledger is metadata (one row per processed input-output), orders of
-magnitude smaller than the data, so these merges stay cheap at any scale.
+Timestamps are stored as Parquet TIMESTAMP(MICROS, adjusted to UTC), which
+Spark reads as TimestampType. Naive datetimes map to instants exactly as
+PySpark maps them, so a value reads back through Spark as the one written,
+to the microsecond; versions Spark wrote (INT96) read as the same instants.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import shutil
+import time
+import uuid
 from contextlib import contextmanager
 from datetime import datetime, timezone
 from typing import Optional
@@ -38,6 +51,9 @@ try:  # POSIX only; the sandbox and every target deployment are Linux
 except ImportError:  # pragma: no cover - non-POSIX fallback, best effort
     fcntl = None  # type: ignore[assignment]
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -68,20 +84,64 @@ RUNSTATUS_SCHEMA = T.StructType(
     ]
 )
 
+TS = pa.timestamp("us", tz="UTC")
+_ARROW_TYPES = {T.StringType(): pa.string(), T.TimestampType(): TS}
+
+
+def _arrow_schema(schema: T.StructType) -> pa.Schema:
+    return pa.schema(
+        [pa.field(f.name, _ARROW_TYPES[f.dataType], f.nullable) for f in schema]
+    )
+
 
 def utc_now() -> datetime:
     """UTC wall clock (reference pins UTC everywhere: Implicits.scala:16)."""
     return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
+def to_instants(values: list[datetime]) -> pa.Array:
+    """Datetimes as `timestamp[us, UTC]`, mapped exactly as PySpark's
+    TimestampType.toInternal maps them (a naive value is a wall time in the
+    process's zone). Rows written from these read back through Spark as the
+    values passed, and compare like a frame Spark built from them."""
+    to_internal = T.TimestampType().toInternal
+    return pa.array([to_internal(d) for d in values], TS)
+
+
+def fresh(runs: pa.Table, pairs: list[tuple[str, str, datetime]]) -> list[int]:
+    """Positions of the candidate (output, input, version) `pairs` that the
+    runs snapshot `runs` (output, input, timestamp) does not cover: no
+    ledger row for the pair, or one whose timestamp is not STRICTLY after
+    the version (Stage.scala:249-266). The ledger key is unique, so a left
+    outer join keeping those rows is exactly the reference's left-anti
+    join. Runs in Arrow on the driver; no Spark job."""
+    cand = pa.table(
+        {
+            "output": pa.array([o for o, _, _ in pairs], pa.string()),
+            "input": pa.array([i for _, i, _ in pairs], pa.string()),
+            "version": to_instants([v for _, _, v in pairs]),
+            "pos": pa.array(range(len(pairs)), pa.int64()),
+        }
+    )
+    # a snapshot read through Spark carries the session zone; same instants
+    i = runs.schema.get_field_index("timestamp")
+    runs = runs.set_column(i, "timestamp", runs["timestamp"].cast(TS))
+    joined = cand.join(runs, keys=["output", "input"], join_type="left outer")
+    kept = joined.filter(
+        pc.field("timestamp").is_null()
+        | (pc.field("timestamp") <= pc.field("version"))
+    )
+    return kept["pos"].to_pylist()
+
+
 class _VersionedTable:
     """A Parquet table stored as versioned subdirectories `v=N`; the
-    current state is the highest N. Writes create N+1."""
+    current state is the highest N. Writes merge in Arrow and create N+1."""
 
     def __init__(self, spark: SparkSession, path: str, schema: T.StructType):
         # version discovery/GC walks the local filesystem (os.listdir /
-        # shutil) while reads/writes go through Spark — a remote path would
-        # list nothing and then collide on v=0. Fail loudly instead.
+        # shutil) and reads/writes go through local file I/O — a remote
+        # path would list nothing and then collide on v=0. Fail loudly.
         if re.match(r"^[a-z][a-z0-9+.-]*://", path) and not path.startswith(
             "file://"
         ):
@@ -94,6 +154,7 @@ class _VersionedTable:
         self.spark = spark
         self.path = path[len("file://"):] if path.startswith("file://") else path
         self.schema = schema
+        self.arrow_schema = _arrow_schema(schema)
 
     @contextmanager
     def locked(self):
@@ -125,6 +186,9 @@ class _VersionedTable:
             if (m := re.fullmatch(r"v=(\d+)", d))
         )
 
+    def _latest(self) -> int:
+        return (self._versions() or [-1])[-1]
+
     def exists(self) -> bool:
         return bool(self._versions())
 
@@ -136,7 +200,7 @@ class _VersionedTable:
                 # exactly the IF NOT EXISTS semantics, so ignore the loss
                 # (real failures propagate out of _publish; verify the
                 # IF-NOT-EXISTS outcome all the same)
-                staged = self._stage(self.spark.createDataFrame([], self.schema))
+                staged = self._stage(self.arrow_schema.empty_table())
                 if not self._publish(staged, 0) and not self.exists():
                     raise RuntimeError(
                         f"ledger migrate lost the v=0 race at {self.path!r}"
@@ -144,17 +208,31 @@ class _VersionedTable:
                     )
 
     def drop(self) -> None:
-        import shutil
-
         shutil.rmtree(self.path, ignore_errors=True)
 
     def read(self) -> DataFrame:
-        return self._read_version((self._versions() or [-1])[-1])
-
-    def _read_version(self, v: int) -> DataFrame:
+        v = self._latest()
         if v < 0:
             return self.spark.createDataFrame([], self.schema)
         return self.spark.read.schema(self.schema).parquet(f"{self.path}/v={v}")
+
+    def _read_arrow(self, v: int) -> pa.Table:
+        """Version `v` on the driver, in `arrow_schema` (Spark-written
+        INT96 timestamps become the same UTC instants)."""
+        if v < 0:
+            return self.arrow_schema.empty_table()
+        t = pq.read_table(f"{self.path}/v={v}", coerce_int96_timestamp_unit="us")
+        return t.select(self.arrow_schema.names).cast(self.arrow_schema)
+
+    def snapshot(self) -> pa.Table:
+        """The newest committed version as an Arrow table. Readers take no
+        lock, so a version GC'd between listing and reading is re-listed."""
+        for _ in range(self._CAS_MAX_RETRIES):
+            try:
+                return self._read_arrow(self._latest())
+            except FileNotFoundError:
+                continue
+        raise RuntimeError(f"ledger versions at {self.path!r} kept vanishing")
 
     # ------------------------------------------------- CAS commit protocol
     #
@@ -182,25 +260,21 @@ class _VersionedTable:
 
     _CAS_MAX_RETRIES = 16
 
-    def _stage(self, df: DataFrame) -> str:
-        import shutil
-        import uuid
-
+    def _stage(self, table: pa.Table) -> str:
         staged = os.path.join(self.path, f".staged-{uuid.uuid4().hex}")
         try:
+            os.makedirs(staged)
             # ledger is metadata-sized: one file keeps listing cheap
-            df.coalesce(1).write.mode("errorifexists").parquet(staged)
+            pq.write_table(table, os.path.join(staged, "part-00000.parquet"))
         except Exception:
-            # a failed/aborted write (expired pinned snapshot, executor
-            # death) must not abandon a half-written .staged-* orphan on
-            # the shared ledger path
+            # a failed write (full disk, dropped table) must not abandon a
+            # half-written .staged-* orphan on the shared ledger path
             shutil.rmtree(staged, ignore_errors=True)
             raise
         return staged
 
     def _publish(self, staged: str, version: int) -> bool:
         import errno
-        import shutil
 
         try:
             os.rename(staged, os.path.join(self.path, f"v={version}"))
@@ -232,20 +306,17 @@ class _VersionedTable:
         metadata table is writer-count-bounded, so hitting the bound
         indicates a livelock bug, not load."""
         for _ in range(self._CAS_MAX_RETRIES):
-            base = (self._versions() or [-1])[-1]
-            merged = merge_fn(self._read_version(base))
-            if merged is None:  # merge_fn declared the cycle a no-op
-                return
+            base = self._latest()
             try:
+                merged = merge_fn(self._read_arrow(base))
+                if merged is None:  # merge_fn declared the cycle a no-op
+                    return
                 staged = self._stage(merged)
-            except Exception as e:  # noqa: BLE001
-                # the pinned v=base snapshot can be GC'd mid-merge when
-                # enough other writers commit between pin and stage (the
-                # Delta/Iceberg "expired snapshot" shape) — that is a
-                # lost race, not an error; anything else propagates
-                if "PATH_NOT_FOUND" in str(e) or "FileNotFound" in str(e):
-                    continue
-                raise
+            except FileNotFoundError:
+                # the pinned v=base can be GC'd between pin and read when
+                # enough other writers commit in between (the Delta/Iceberg
+                # "expired snapshot" shape) — a lost race, not an error
+                continue
             if self._publish(staged, base + 1):
                 self._gc(keep=3)
                 return
@@ -259,9 +330,6 @@ class _VersionedTable:
     _STAGED_ORPHAN_GRACE_S = 3600.0
 
     def _gc(self, keep: int) -> None:
-        import shutil
-        import time
-
         for v in self._versions()[:-keep]:
             shutil.rmtree(f"{self.path}/v={v}", ignore_errors=True)
         # reap .staged-* orphans from writers that crashed between stage
@@ -278,8 +346,8 @@ class _VersionedTable:
             except OSError:
                 pass  # raced with its owner's publish/cleanup
 
-    def upsert(self, new: DataFrame, key: list[str]) -> None:
-        """Merge-on-key: drop old rows whose key appears in `new`, union
+    def upsert(self, new: pa.Table, key: list[str]) -> None:
+        """Merge-on-key: drop old rows whose key appears in `new`, append
         the new rows (reference Runs.scala:93-102 ON DUPLICATE KEY UPDATE).
         Safe under concurrency twice over: the flock fast path serializes
         co-located writers, and the CAS publish beneath it rejects any
@@ -287,20 +355,26 @@ class _VersionedTable:
         writer merges onto the first's committed version instead of losing
         its rows (RunsTest.scala upsert semantics under concurrency; CAS
         path exercised lock-disabled in tests/test_ledger.py)."""
+        keys = new.select(key)
         with self.locked():
             self._read_merge_commit(
-                lambda old: old.join(
-                    new.select(*key).distinct(), key, "left_anti"
-                ).unionByName(new)
+                lambda old: pa.concat_tables(
+                    [
+                        old.join(keys, keys=key, join_type="left anti").cast(
+                            self.arrow_schema
+                        ),
+                        new,
+                    ]
+                )
             )
 
-    def delete_where(self, cond) -> int:
+    def delete_where(self, cond: pc.Expression) -> int:
         deleted = 0
         with self.locked():
 
-            def merge(old: DataFrame) -> Optional[DataFrame]:
+            def merge(old: pa.Table) -> Optional[pa.Table]:
                 nonlocal deleted
-                deleted = old.filter(cond).count()
+                deleted = old.filter(cond).num_rows
                 # nothing matched on this snapshot: no version churn
                 return old.filter(~cond) if deleted else None
 
@@ -308,15 +382,14 @@ class _VersionedTable:
             return deleted
 
 
-class RunsLedger:
-    """The `runs` table: provenance of (input, version) -> output per
-    (project, method, stage). Unique key: (project, method, stage, input,
-    output) — reference runs.sql:11."""
+class _Ledger:
+    """What both ledgers share: one versioned table scoped to a (project,
+    method), read per stage."""
 
-    KEY = ["project", "method", "stage", "input", "output"]
+    SCHEMA: T.StructType
 
     def __init__(self, spark: SparkSession, path: str, project: str, method: str):
-        self.table = _VersionedTable(spark, path, RUNS_SCHEMA)
+        self.table = _VersionedTable(spark, path, self.SCHEMA)
         self.spark = spark
         self.project = project
         self.method = method
@@ -329,6 +402,44 @@ class RunsLedger:
 
     def all(self) -> list:
         return self.table.read().collect()
+
+    def _scope(self, stage: str) -> pc.Expression:
+        return (
+            (pc.field("project") == self.project)
+            & (pc.field("method") == self.method)
+            & (pc.field("stage") == stage)
+        )
+
+    def _new(self, stage: str, n: int, columns: dict) -> pa.Table:
+        """`n` rows of this ledger's scope for `stage`, plus `columns`."""
+        scope = {"project": self.project, "method": self.method, "stage": stage}
+        return pa.table(
+            {**{k: [v] * n for k, v in scope.items()}, **columns},
+            schema=self.table.arrow_schema,
+        )
+
+    def of(self, stage: str) -> DataFrame:
+        """All ledger rows for this (project, method, stage)
+        (reference Runs.scala:106-116)."""
+        return self.table.read().filter(
+            (F.col("project") == self.project)
+            & (F.col("method") == self.method)
+            & (F.col("stage") == stage)
+        )
+
+    def delete(self, stage: str, output: str) -> int:
+        return self.table.delete_where(
+            self._scope(stage) & (pc.field("output") == output)
+        )
+
+
+class RunsLedger(_Ledger):
+    """The `runs` table: provenance of (input, version) -> output per
+    (project, method, stage). Unique key: (project, method, stage, input,
+    output) — reference runs.sql:11."""
+
+    SCHEMA = RUNS_SCHEMA
+    KEY = ["project", "method", "stage", "input", "output"]
 
     def insert(
         self,
@@ -349,57 +460,45 @@ class RunsLedger:
     ) -> None:
         """Batched upsert covering every output of a run in ONE versioned
         write — a run with k outputs would otherwise pay k full-table
-        rewrites (each a Spark job) for pure metadata."""
+        rewrites for pure metadata."""
         ts = now or utc_now()
         rows = [
-            (self.project, self.method, stage, i.key, i.version, output, ts)
+            (output, i)
             for output in sorted(outputs_map)
             for i in sorted(outputs_map[output], key=lambda x: x.key)
         ]
         if not rows:
             return
-        new = self.spark.createDataFrame(rows, RUNS_SCHEMA)
+        new = self._new(
+            stage,
+            len(rows),
+            {
+                "input": [i.key for _, i in rows],
+                "version": to_instants([i.version for _, i in rows]),
+                "output": [o for o, _ in rows],
+                "timestamp": to_instants([ts] * len(rows)),
+            },
+        )
         self.table.upsert(new, self.KEY)
 
-    def of(self, stage: str) -> DataFrame:
-        """All ledger rows for this (project, method, stage)
-        (reference Runs.scala:106-116)."""
-        return self.table.read().filter(
-            (F.col("project") == self.project)
-            & (F.col("method") == self.method)
-            & (F.col("stage") == stage)
-        )
-
-    def delete(self, stage: str, output: str) -> int:
-        return self.table.delete_where(
-            (F.col("project") == self.project)
-            & (F.col("method") == self.method)
-            & (F.col("stage") == stage)
-            & (F.col("output") == output)
+    def snapshot(self, stage: str) -> pa.Table:
+        """(output, input, timestamp) of this stage's rows as an Arrow
+        table, read on the driver without a Spark job — what
+        Stage.get_work anti-joins against."""
+        return (
+            self.table.snapshot()
+            .filter(self._scope(stage))
+            .select(["output", "input", "timestamp"])
         )
 
 
-class RunStatusLedger:
+class RunStatusLedger(_Ledger):
     """The `runstatus` table: per-output lifecycle. Unique key: (project,
     method, stage, output) — reference runstatus.sql:11. Re-insert of an
     existing key RESETS started/ended (RunStatus.scala:79-83)."""
 
+    SCHEMA = RUNSTATUS_SCHEMA
     KEY = ["project", "method", "stage", "output"]
-
-    def __init__(self, spark: SparkSession, path: str, project: str, method: str):
-        self.table = _VersionedTable(spark, path, RUNSTATUS_SCHEMA)
-        self.spark = spark
-        self.project = project
-        self.method = method
-
-    def migrate(self) -> None:
-        self.table.migrate()
-
-    def drop(self) -> None:
-        self.table.drop()
-
-    def all(self) -> list:
-        return self.table.read().collect()
 
     def insert(self, stage: str, output: str, now: Optional[datetime] = None) -> None:
         self.insert_many(stage, [output], now)
@@ -411,13 +510,19 @@ class RunStatusLedger:
         of a run; re-inserted keys still reset started/ended to NULL
         (RunStatus.scala:79-83)."""
         ts = now or utc_now()
-        rows = [
-            (self.project, self.method, stage, o, None, None, ts)
-            for o in sorted(outputs)
-        ]
-        if not rows:
+        n = len(outputs)
+        if not n:
             return
-        new = self.spark.createDataFrame(rows, RUNSTATUS_SCHEMA)
+        new = self._new(
+            stage,
+            n,
+            {
+                "output": sorted(outputs),
+                "started": pa.nulls(n, TS),
+                "ended": pa.nulls(n, TS),
+                "created": to_instants([ts] * n),
+            },
+        )
         self.table.upsert(new, self.KEY)
 
     def _set_many(
@@ -425,18 +530,19 @@ class RunStatusLedger:
     ) -> None:
         if not outputs:
             return
-        k = (
-            (F.col("project") == self.project)
-            & (F.col("method") == self.method)
-            & (F.col("stage") == stage)
-            & (F.col("output").isin(list(outputs)))
-        )
-        with self.table.locked():
-            self.table._read_merge_commit(
-                lambda cur: cur.withColumn(
-                    col, F.when(k, F.lit(ts)).otherwise(F.col(col))
-                )
+        hit = self._scope(stage) & pc.field("output").isin(list(outputs))
+        value = to_instants([ts])[0]
+
+        def merge(cur: pa.Table) -> pa.Table:
+            touched = cur.filter(hit)
+            i = cur.schema.get_field_index(col)
+            touched = touched.set_column(
+                i, cur.schema.field(i), pa.repeat(value, touched.num_rows)
             )
+            return pa.concat_tables([cur.filter(~hit), touched])
+
+        with self.table.locked():
+            self.table._read_merge_commit(merge)
 
     def start(self, stage: str, output: str, now: Optional[datetime] = None) -> None:
         self._set_many(stage, [output], "started", now or utc_now())
@@ -453,18 +559,3 @@ class RunStatusLedger:
         self, stage: str, outputs: list[str], now: Optional[datetime] = None
     ) -> None:
         self._set_many(stage, list(outputs), "ended", now or utc_now())
-
-    def of(self, stage: str) -> DataFrame:
-        return self.table.read().filter(
-            (F.col("project") == self.project)
-            & (F.col("method") == self.method)
-            & (F.col("stage") == stage)
-        )
-
-    def delete(self, stage: str, output: str) -> int:
-        return self.table.delete_where(
-            (F.col("project") == self.project)
-            & (F.col("method") == self.method)
-            & (F.col("stage") == stage)
-            & (F.col("output") == output)
-        )

@@ -8,7 +8,8 @@ routing), and `make(output)` (the job). Running a stage:
    missed-input validation, only/exclude filtering (Stage.scala:168-216),
 3. computes the DELTA of work as a left-anti join against the runs ledger
    with a STRICT freshness inequality (ledger.timestamp > input.version —
-   Stage.scala:249-266; the anti-join runs in Spark),
+   Stage.scala:249-266; the join runs in Arrow on the driver against the
+   ledger's snapshot, so a no-op run launches no Spark job),
 4. executes jobs in-process with bounded parallelism (ThreadPoolExecutor,
    the reference's maxParallel cluster cap — Stage.scala:157), and
 5. commits provenance (insertRuns + RunStatus lifecycle — Stage.scala:270).
@@ -25,10 +26,9 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Callable, Optional
 
-from pyspark.sql import functions as F
-
 from .context import Context
 from .inputs import Input, Source
+from .ledger import fresh
 from .opts import Opts
 from .outputs import ALL, NULL, Named
 from .util import time_block
@@ -173,32 +173,14 @@ class Stage:
         # timestamp is STRICTLY after the input version (Stage.scala:256).
         # The same input may appear under multiple outputs — the key is the
         # pair, never the input alone.
-        spark = self.context.spark
-        cand = spark.createDataFrame(
-            [
-                (o, i.key, i.version)
-                for o, inputs_ in output_map.items()
-                for i in inputs_
-            ],
-            "output string, input string, version timestamp",
-        )
-        runs = self.context.runs.of(self.name).select(
-            F.col("output").alias("r_output"),
-            F.col("input").alias("r_input"),
-            F.col("timestamp").alias("r_timestamp"),
-        )
-        fresh = cand.join(
-            runs,
-            (cand.output == runs.r_output)
-            & (cand.input == runs.r_input)
-            & (runs.r_timestamp > cand.version),
-            "left_anti",
-        )
-
-        by_key = {(o, i.key): i for o, s in output_map.items() for i in s}
+        pairs = [(o, i) for o, s in output_map.items() for i in s]
         out: OutputMap = {}
-        for row in fresh.collect():
-            out.setdefault(row.output, set()).add(by_key[(row.output, row.input)])
+        for pos in fresh(
+            self.context.runs.snapshot(self.name),
+            [(o, i.key, i.version) for o, i in pairs],
+        ):
+            o, i = pairs[pos]
+            out.setdefault(o, set()).add(i)
         return out
 
     # -- execution (Stage.scala:110-162, 270-318) ------------------------
@@ -208,6 +190,18 @@ class Stage:
         return f"{root}/{self.context.method_name}/{self.name}"
 
     def process_outputs(self, output_map: OutputMap, opts: Opts) -> None:
+        """Run every output's job, at most `opts.max_clusters` at a time.
+
+        All or nothing, like the reference: if any job raises, the other
+        jobs still run to completion (the pool drains), then the error of
+        the first failed output, in sorted order, propagates. No output of
+        the run then gets `runs` provenance — not even the ones whose jobs
+        finished — and every output's `runstatus` row stays started with
+        `ended` NULL, so the next run redoes the whole delta.
+
+        Each job's Spark work runs in the job group
+        `<method>/<stage>/<output>`, so event logs attribute it per output.
+        """
         if not output_map:
             return
         jobs = {o: self.make(o) for o in output_map}
@@ -216,13 +210,17 @@ class Stage:
         # one versioned write each for the whole run, not one per output
         self.context.runstatus.insert_many(self.name, sorted(output_map))
         self.context.runstatus.start_many(self.name, sorted(output_map))
+        spark, method = self.context.spark, self.context.method_name
 
         def run_job(o: str) -> None:
+            spark.sparkContext.setJobGroup(
+                f"{method}/{self.name}/{o}", f"{method} {self.name} {o}"
+            )
             with time_block(f"output {o} of stage {self.name}"):
                 jobs[o](
                     JobContext(
-                        spark=self.context.spark,
-                        method=self.context.method_name,
+                        spark=spark,
+                        method=method,
                         stage=self.name,
                         output=o,
                         prefix=self._prefix(opts),

@@ -502,6 +502,12 @@ class JdbcRunsLedger:
             & (F.col("stage") == stage)
         )
 
+    def snapshot(self, stage: str):
+        """(output, input, timestamp) of this stage's rows as an Arrow
+        table — the Parquet twin's snapshot surface, so Stage.get_work has
+        one code path. Here it is one Spark read of the database."""
+        return self.of(stage).select("output", "input", "timestamp").toArrow()
+
     def delete(self, stage: str, output: str) -> int:
         # parameterless DELETE via one statement; Derby needs literal
         # escaping — identifiers here come from test/driver code, not

@@ -264,7 +264,7 @@ def test_cas_publish_rejects_stale_version(runs_no_flock):
     runs = runs_no_flock
     runs.migrate()
     t = runs.table
-    staged = t._stage(t.read())  # snapshot at v=0, would publish as v=1
+    staged = t._stage(t.snapshot())  # snapshot at v=0, would publish as v=1
     runs.insert("TestStage", "winner", [inp("w", 1)])  # commits v=1 first
     assert t._publish(staged, 1) is False
     assert not os.path.exists(staged)  # loser's staging cleaned up
@@ -312,8 +312,8 @@ def test_cas_concurrent_upserts_lose_nothing_without_flock(runs_no_flock):
 
 def test_cas_retries_when_pinned_snapshot_expires(runs_no_flock):
     """If the pinned v=base snapshot is GC'd between pin and stage (other
-    writers committed and collected it), the stage read fails with a
-    missing-path error — the loop must treat that as a lost race and
+    writers committed and collected it), the cycle fails with a
+    missing-file error — the loop must treat that as a lost race and
     re-merge, not surface an error (the expired-snapshot shape every
     versioned table format has)."""
     runs = runs_no_flock
@@ -322,11 +322,11 @@ def test_cas_retries_when_pinned_snapshot_expires(runs_no_flock):
     real_stage = type(t)._stage
     calls = {"n": 0}
 
-    def flaky_stage(self, df):
+    def flaky_stage(self, table):
         calls["n"] += 1
         if calls["n"] == 1:
-            raise RuntimeError("[PATH_NOT_FOUND] Path does not exist: v=0")
-        return real_stage(self, df)
+            raise FileNotFoundError(2, "Failed to open local file", "v=0")
+        return real_stage(self, table)
 
     import pytest as _pytest
 
@@ -338,6 +338,50 @@ def test_cas_retries_when_pinned_snapshot_expires(runs_no_flock):
         mp.undo()
     assert calls["n"] == 2  # first attempt lost, second committed
     assert {r["output"] for r in runs.all()} == {"after_expiry"}
+
+
+@pytest.mark.parametrize("when", ["before_read", "after_read"])
+def test_cas_retries_when_pinned_version_is_really_removed(
+    runs_no_flock, spark, monkeypatch, when
+):
+    """Other writers commit three versions while one writer's cycle is
+    between pinning v=base and staging, so _gc really removes v=base:
+    before the eager snapshot read (the read finds no file) or after it
+    (the publish onto base+1 loses). Either way the writer re-merges onto
+    the newest version and no row is lost."""
+    import os
+
+    runs = runs_no_flock
+    runs.migrate()
+    runs.insert("TestStage", "first", [inp("f", 1)])  # v=1
+    t = runs.table
+    other = RunsLedger(spark, t.path, "test", "TestMethod")
+    real_read = type(t)._read_arrow
+    pinned: list[int] = []
+
+    def interlude(v):
+        pinned.append(v)
+        for n in range(3):
+            other.insert("TestStage", f"other_{n}", [inp(f"o{n}", n)])
+        assert not os.path.exists(f"{t.path}/v={v}")  # really gone
+
+    def racing_read(self, v):
+        if self is not t or pinned:
+            return real_read(self, v)
+        if when == "before_read":
+            interlude(v)
+            return real_read(self, v)
+        table = real_read(self, v)
+        interlude(v)
+        return table
+
+    monkeypatch.setattr(type(t), "_read_arrow", racing_read)
+    runs.insert("TestStage", "racer", [inp("r", 1)])
+    assert pinned == [1]
+    assert {r["output"] for r in runs.all()} == {
+        "first", "other_0", "other_1", "other_2", "racer"
+    }
+    assert t._versions()[-1] == 5
 
 
 def test_cas_publish_propagates_real_failures(runs_no_flock, monkeypatch):
@@ -355,7 +399,7 @@ def test_cas_publish_propagates_real_failures(runs_no_flock, monkeypatch):
     def denied(src, dst):
         raise OSError(errno.EACCES, "Permission denied", dst)
 
-    staged = t._stage(t.read())
+    staged = t._stage(t.snapshot())
     monkeypatch.setattr(_os, "rename", denied)
     with pytest.raises(OSError) as ei:
         t._publish(staged, 1)
@@ -376,7 +420,7 @@ def test_cas_publish_enoent_source_is_lost_race(runs_no_flock):
     runs.migrate()
     t = runs.table
 
-    staged = t._stage(t.read())
+    staged = t._stage(t.snapshot())
     shutil.rmtree(staged)  # simulate a peer's orphan reaper
     assert t._publish(staged, 1) is False
 
