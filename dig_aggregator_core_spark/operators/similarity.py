@@ -2276,17 +2276,12 @@ def ann_index_compact(
         r["pbucket"]
         for r in survivors.select("pbucket").distinct().collect()
     }
-    before = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        if nonempty:
-            survivors.repartition("pbucket").write.partitionBy(
-                "pbucket"
-            ).mode("overwrite").parquet(data_dir)
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", before
-        )
+    if nonempty:
+        # dynamic overwrite as a writer option: only the survivors'
+        # buckets are replaced, and the session conf is left alone
+        survivors.repartition("pbucket").write.partitionBy("pbucket").option(
+            "partitionOverwriteMode", "dynamic"
+        ).mode("overwrite").parquet(data_dir)
     for b in set(affected) - nonempty:
         shutil.rmtree(
             os.path.join(data_dir, f"pbucket={b}"), ignore_errors=True

@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 
 from ..plans.inputs import Input
 from ..plans.ledger import RunsLedger, utc_now
+from .stateful import run_available_now
 
 # transform: batch DataFrame for this epoch -> result DataFrame
 Transform = Callable[[DataFrame], DataFrame]
@@ -80,11 +81,7 @@ def run_incremental(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.format(file_format).load(source_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream, state_partitions=None, sink=process, checkpoint=checkpoint_dir
     )
-    q.awaitTermination()
     return epochs

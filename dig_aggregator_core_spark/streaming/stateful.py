@@ -16,11 +16,15 @@ plan runs continuously with a real watermark-driven eviction.
 from __future__ import annotations
 
 import itertools
+import json
+import logging
 import os
 import re
 import shutil
 import tempfile
-from typing import Iterable, Iterator
+import threading
+import time
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 
@@ -35,6 +39,7 @@ from ..registry import query
 from ..tables import load, ntz_as_utc_instant
 
 _sink_counter = itertools.count()
+_log = logging.getLogger(__name__)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -76,22 +81,23 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
-# state-partition counts by operator family — the two pull in opposite
-# directions and a single value cannot serve both (the r7 benchdiff
-# caught the 4-everywhere pin making the Python folds 1.45x SLOWER while
-# it made the JVM joins 3x faster):
+# State partitions by operator family. Each family asks for its own
+# count and run_available_now caps it at the session's task slots
+# (defaultParallelism):
 # - JVM stateful ops (stream-stream joins, window aggs, dedup): the
 #   micro-batch constant is per-partition state-store commit (delta file
-#   + fsync per store instance per batch; an outer join carries 4 store
-#   instances per partition) — fewer partitions win. Measured on the
-#   right-outer join at sf0.1: 16 ≈ 4.3–5.6 s, 8 ≈ 2.7 s, 4 ≈ 2.0 s.
-# - applyInPandasWithState folds: each partition is ONE Arrow-batched
-#   Python worker stream, so partitions = fold parallelism; the commit
-#   constant is smaller than the Python time it serializes.
-#   Measured over 5 fold twins at sf0.1 (min-of-2 each): 4 parts =
-#   15.9 s, 8 = 11.6 s, 16 = 10.2 s, 32 = 13.0 s — 16 is the knee;
-#   32 re-enters commit-constant territory.
-# At real scale both knobs size to state volume, not data volume.
+#   per store instance per batch; an outer join carries 4 store instances
+#   per partition), so fewer partitions win.
+# - applyInPandasWithState folds: each partition is one Arrow-batched
+#   Python worker stream, so partitions = fold parallelism, up to the
+#   slots that can run them.
+# A partition beyond the task slots adds a wave of Python-worker handoff
+# and state-store commit but no parallelism. On local[4] (4-core VM),
+# with identical results, stream_stateful_user_stats took 3.1 s warm at
+# 16 partitions and 1.7 s at 4 on the sf0.001 benchmark fixture, and at
+# sf0.1 5.0-6.9 s (addBatch 4.4-6.1 s) at 16 against 3.6-3.7 s (addBatch
+# 3.0-3.1 s) at 4.
+# History: 16 (fold knee) and 4 (join) were tuned on 32 cores, uncapped.
 _JOIN_STATE_PARTS = 4
 _FOLD_STATE_PARTS = 16
 
@@ -113,27 +119,25 @@ _DRAIN_LOCAL_MAX_BYTES = 4 << 20
 # test-observable drain telemetry: which leg the last drain took
 _DRAIN_STATS = {"local": 0, "checkpoint": 0}
 
+# Serializes run_available_now's start() with its save/set/restore of
+# spark.sql.shuffle.partitions (Stage jobs share one session across
+# threads), and the _DRAIN_STATS increments.
+_RUN_LOCK = threading.RLock()
 
-def _progress_rowcount(q, output_mode: str):
+
+def _progress_rowcount(progress: list[dict], output_mode: str):
     """Drained-sink row count from the query's OWN progress metrics —
     zero jobs (a count() over a 92k-row sink measured ~0.5 s; the
     metrics are free). Memory-sink semantics per mode: complete
     REPLACES the table each batch (table = last batch's output rows);
     append/update ACCUMULATE (table = sum over batches). Returns None
     when any batch didn't report, and the caller falls back to count()."""
-    import json as _json
-
-    try:
-        counts = []
-        for p in q.recentProgress:
-            d = _json.loads(p.json) if hasattr(p, "json") else dict(p)
-            n = int((d.get("sink") or {}).get("numOutputRows", -1))
-            counts.append(n)
-        if not counts or any(c < 0 for c in counts):
-            return None
-        return counts[-1] if output_mode == "complete" else sum(counts)
-    except Exception:
+    counts = [
+        int((p.get("sink") or {}).get("numOutputRows", -1)) for p in progress
+    ]
+    if not counts or any(c < 0 for c in counts):
         return None
+    return counts[-1] if output_mode == "complete" else sum(counts)
 
 
 def _drain_sink(
@@ -156,37 +160,97 @@ def _drain_sink(
         small = est <= _DRAIN_LOCAL_MAX_BYTES
     if small:
         out = spark.createDataFrame(tbl.collect(), tbl.schema)
-        _DRAIN_STATS["local"] += 1
     else:
         out = tbl.localCheckpoint()
-        _DRAIN_STATS["checkpoint"] += 1
+    with _RUN_LOCK:
+        _DRAIN_STATS["local" if small else "checkpoint"] += 1
     spark.catalog.dropTempView(sink)
     return out
 
 
-def _run_to_memory(
-    df: DataFrame, output_mode: str, state_partitions: int = _JOIN_STATE_PARTS
-) -> DataFrame:
-    sink = f"stateful_sink_{next(_sink_counter)}"
+def _log_progress(
+    name: str | None, progress: list[dict], wall_s: float
+) -> None:
+    """One JSON record per finished query, from its own progress reports:
+    batch count, input rows, each batch's durationMs phases (latestOffset,
+    queryPlanning, addBatch, walCommit, commitOffsets, ...) and, per state
+    operator, its partitions and total state rows after the last batch."""
+    last = progress[-1] if progress else {}
+    _log.info(
+        "%s",
+        json.dumps(
+            {
+                "event": "stream_run",
+                "query": name,
+                "wall_ms": round(wall_s * 1000),
+                "batches": len(progress),
+                "numInputRows": sum(p["numInputRows"] for p in progress),
+                "durationMs": [p["durationMs"] for p in progress],
+                "stateOperators": [
+                    {
+                        "operatorName": o.get("operatorName"),
+                        "numShufflePartitions": o.get("numShufflePartitions"),
+                        "numRowsTotal": o.get("numRowsTotal"),
+                    }
+                    for o in last.get("stateOperators", [])
+                ],
+            },
+            sort_keys=True,
+        ),
+    )
+
+
+def run_available_now(
+    df: DataFrame,
+    mode: str = "append",
+    state_partitions: int | None = _JOIN_STATE_PARTS,
+    *,
+    sink: Callable[[DataFrame, int], None] | None = None,
+    checkpoint: str | None = None,
+) -> DataFrame | None:
+    """Run a streaming frame to idle under Trigger.AvailableNow.
+
+    With no ``sink`` the rows go to a memory sink, which is drained
+    (``_drain_sink``) and returned. A ``sink(batch, epoch_id)`` callable
+    is run through foreachBatch instead, and None is returned.
+    ``checkpoint`` is passed through as the query's checkpointLocation.
+
+    The first micro-batch pins the state partition count into the
+    checkpoint, so it is chosen here: ``min(state_partitions,
+    defaultParallelism)`` (rationale above ``_JOIN_STATE_PARTS``).
+    The query copies the session conf inside ``start()``, so
+    spark.sql.shuffle.partitions is set only around ``start()`` and
+    restored before the query runs. Every start holds ``_RUN_LOCK``, so
+    no query of one session copies another runner's temporary value.
+    ``state_partitions=None`` leaves the session's value, which the batch
+    frames a foreachBatch sink builds then plan with.
+    """
     spark = df.sparkSession
-    # The first micro-batch pins state-store partitioning into the
-    # checkpoint, so choose it deliberately (rationale above): state for
-    # this fixture is tiny and 200 partitions would be pure per-partition
-    # overhead.
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-    return _drain_sink(spark, sink, _progress_rowcount(q, output_mode))
+    writer = df.writeStream.outputMode(mode).trigger(availableNow=True)
+    if sink is None:
+        # the memory sink's table is the query name
+        name = f"stream_sink_{next(_sink_counter)}"
+        writer = writer.format("memory").queryName(name)
+    else:
+        writer = writer.foreachBatch(sink)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    t0 = time.perf_counter()
+    with _RUN_LOCK:
+        before = spark.conf.get("spark.sql.shuffle.partitions")
+        if state_partitions is not None:
+            parts = min(state_partitions, spark.sparkContext.defaultParallelism)
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+        try:
+            q = writer.start()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", before)
+    q.awaitTermination()
+    progress = [json.loads(p.json) for p in q.recentProgress]
+    _log_progress(q.name, progress, time.perf_counter() - t0)
+    if sink is not None:
+        return None
+    return _drain_sink(spark, name, _progress_rowcount(progress, mode))
 
 
 @query(
@@ -204,7 +268,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    return _run_to_memory(deduped, "append")
+    return run_available_now(deduped, "append")
 
 
 _USER_STATS_OUT = (
@@ -266,7 +330,7 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _run_to_memory(stats, "update", state_partitions=_FOLD_STATE_PARTS)
+    return run_available_now(stats, "update", state_partitions=_FOLD_STATE_PARTS)
 
 
 @query(
@@ -316,7 +380,7 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= F.col("click_ts") + F.expr("INTERVAL 6 HOURS")
         ),
     ).select("click_id", "purchase_id", "user_id")
-    return _run_to_memory(joined, "append")
+    return run_available_now(joined, "append")
 
 
 @query(
@@ -355,7 +419,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("total"),
         )
     )
-    return _run_to_memory(enriched, "complete")
+    return run_available_now(enriched, "complete")
 
 
 def _protobuf_available() -> bool:
@@ -439,7 +503,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         # update mode re-emits a key on every batch that touches it;
         # AvailableNow runs one batch here, but keep the last emission per
         # key for batch-boundary invariance
-        out = _run_to_memory(stats, "update", state_partitions=_FOLD_STATE_PARTS)
+        out = run_available_now(stats, "update", state_partitions=_FOLD_STATE_PARTS)
     finally:
         if before is None:
             spark.conf.unset(provider_key)
@@ -510,7 +574,7 @@ def stream_kafka_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("k_total"),
     )
-    return _run_to_memory(out, "complete")
+    return run_available_now(out, "complete")
 
 
 _EWMA_STATE = "n bigint, ewma double"
@@ -584,7 +648,7 @@ def stream_ewma_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    result = _run_to_memory(out, "update", state_partitions=_FOLD_STATE_PARTS)
+    result = run_available_now(out, "update", state_partitions=_FOLD_STATE_PARTS)
     # update mode re-emits a key on every batch that touches it; keep the
     # final (max-n) emission per user
     from pyspark.sql import Window
@@ -779,7 +843,7 @@ def stream_stream_left_outer_join(
     # nodes and the flush would silently stop working. The sentinel pair
     # instead emits its one deterministic matched row (click -1,
     # purchase -2, user -1), which the oracle appends verbatim.
-    return _run_to_memory(joined, "append")
+    return run_available_now(joined, "append")
 
 
 @query(
@@ -845,7 +909,7 @@ def stream_stream_right_outer_join(
         "purchase_id",
         F.col("p_user_id").alias("user_id"),
     )
-    return _run_to_memory(joined, "append")
+    return run_available_now(joined, "append")
 
 
 @query(
@@ -907,7 +971,7 @@ def stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "leftSemi",
     ).select("click_id", "user_id")
-    return _run_to_memory(joined, "append")
+    return run_available_now(joined, "append")
 
 
 _FUNNEL_STAGES = ("view", "click", "purchase")
@@ -1022,7 +1086,7 @@ def stream_funnel_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    result = _run_to_memory(out, "update", state_partitions=_FOLD_STATE_PARTS)
+    result = run_available_now(out, "update", state_partitions=_FOLD_STATE_PARTS)
     # update mode re-emits a user's row in EVERY micro-batch that touches
     # the user; a multi-file source therefore yields several rows per
     # user_id. Stage times only ever fill in (t1 before t2 before t3,
@@ -1101,7 +1165,7 @@ def stream_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    result = _run_to_memory(out, "update", state_partitions=_FOLD_STATE_PARTS)
+    result = run_available_now(out, "update", state_partitions=_FOLD_STATE_PARTS)
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.desc("n_days"))
@@ -1219,7 +1283,7 @@ def stream_attribution_last_touch(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _run_to_memory(out, "update", state_partitions=_FOLD_STATE_PARTS)
+    return run_available_now(out, "update", state_partitions=_FOLD_STATE_PARTS)
 
 
 _ZANOM_MIN_N = 5
@@ -1353,7 +1417,7 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _run_to_memory(out, "update", state_partitions=_FOLD_STATE_PARTS)
+    return run_available_now(out, "update", state_partitions=_FOLD_STATE_PARTS)
 
 
 stream_anomaly_zscore.__doc__ = stream_anomaly_zscore.__doc__.format(
@@ -1458,7 +1522,7 @@ def stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_shared_ngrams"))
     )
-    return _run_to_memory(flagged, "complete")
+    return run_available_now(flagged, "complete")
 
 
 @query(
@@ -1570,7 +1634,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_seen").alias("first_seen"),
         )
     )
-    return _run_to_memory(hits, "complete")
+    return run_available_now(hits, "complete")
 
 
 def _cdc_apply(spark: SparkSession, stream: DataFrame, checkpoint: str | None = None) -> DataFrame | None:
@@ -1602,11 +1666,9 @@ def _cdc_apply(spark: SparkSession, stream: DataFrame, checkpoint: str | None = 
         merged.write.mode("overwrite").parquet(path)
         state["df"] = batch.sparkSession.read.parquet(path)
 
-    writer = stream.writeStream.foreachBatch(apply_batch)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_available_now(
+        stream, state_partitions=None, sink=apply_batch, checkpoint=checkpoint
+    )
     return state["df"]
 
 
@@ -1683,7 +1745,7 @@ def stream_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sums = quality_drift_sums(_documents_stream(spark, sf_dir))
-    grid = _run_to_memory(sums, "complete")
+    grid = run_available_now(sums, "complete")
     return quality_drift_finalize(grid)
 
 
@@ -1753,7 +1815,7 @@ def stream_stream_full_outer_join(
         "purchase_id",
         F.coalesce(F.col("user_id"), F.col("p_user_id")).alias("user_id"),
     )
-    return _run_to_memory(joined, "append")
+    return run_available_now(joined, "append")
 
 
 @query(
@@ -1790,7 +1852,7 @@ def stream_dedup_within_watermark(
         .dropDuplicatesWithinWatermark(["user_id", "event_type", "day"])
         .select("user_id", "event_type", "day")
     )
-    return _run_to_memory(deduped, "append")
+    return run_available_now(deduped, "append")
 
 
 @query("stream_assoc_rules")
@@ -1811,7 +1873,7 @@ def stream_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = stream.groupBy("user_id").agg(
         F.collect_set("event_type").alias("ets")
     )
-    drained = _run_to_memory(baskets, "complete")
+    drained = run_available_now(baskets, "complete")
     from ..operators.behavioral import assoc_finalize
 
     return assoc_finalize(drained)
@@ -1893,7 +1955,7 @@ def stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    drained = _run_to_memory(deltas, "append", state_partitions=_FOLD_STATE_PARTS)
+    drained = run_available_now(deltas, "append", state_partitions=_FOLD_STATE_PARTS)
     from ..operators.graph import transition_grid
 
     edges = drained.groupBy("src", "dst").agg(
@@ -1933,7 +1995,7 @@ def stream_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     v = golden_attr_versions(stream, F.unix_micros(F.col("ts")))
     merged = golden_merge(v)
-    return _run_to_memory(merged, "complete", state_partitions=_FOLD_STATE_PARTS)
+    return run_available_now(merged, "complete", state_partitions=_FOLD_STATE_PARTS)
 
 
 from ..operators import warehouse as _warehouse  # noqa: E402
@@ -2016,7 +2078,7 @@ def stream_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    drained = _run_to_memory(deltas, "append", state_partitions=_FOLD_STATE_PARTS)
+    drained = run_available_now(deltas, "append", state_partitions=_FOLD_STATE_PARTS)
     from pyspark.sql import Window
 
     wp = Window.partitionBy("event_type")
@@ -2193,7 +2255,7 @@ def stream_session_timeout_close(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    return _run_to_memory(out, "append", state_partitions=_FOLD_STATE_PARTS)
+    return run_available_now(out, "append", state_partitions=_FOLD_STATE_PARTS)
 
 
 # observable gate telemetry for stream_cc_incremental, reset per run —
@@ -2313,7 +2375,6 @@ def stream_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
     import tempfile
-    import time as _time
 
     from ..operators import dedup as _dedup
     from ..operators.dedup import (
@@ -2557,7 +2618,7 @@ def stream_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
         dest = os.path.join(data_dir, f"{chr(97 + i)}.parquet")
         shutil.copy(os.path.join(tmp, part), dest)
-        ts_file = _time.time() - (10 - i)
+        ts_file = time.time() - (10 - i)
         os.utime(dest, (ts_file, ts_file))
 
     stream = (
@@ -2565,13 +2626,12 @@ def stream_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(data_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
+    run_available_now(
+        stream,
+        state_partitions=None,
+        sink=apply_batch,
+        checkpoint=os.path.join(base, "ckpt"),
     )
-    q.awaitTermination()
     shutil.rmtree(base, ignore_errors=True)
     # the per-batch band pieces are dead once the stream drains;
     # freeing them keeps repeated runs memory-flat. sh is the SHARED
@@ -2705,7 +2765,6 @@ def stream_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     stands in for the maintained TABLE a production deployment keeps
     (ledger-versioned, exactly as the dedup band index's durable
     form)."""
-    import time as _time
 
     from ..operators.similarity import (
         _clone_committed_index,
@@ -2731,7 +2790,7 @@ def stream_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(2):
         dest = os.path.join(data_dir, f"{chr(97 + i)}.parquet")
         shutil.copy(os.path.join(halves, f"half{i}.parquet"), dest)
-        ts_file = _time.time() - (10 - i)
+        ts_file = time.time() - (10 - i)
         os.utime(dest, (ts_file, ts_file))
 
     stream = (
@@ -2747,13 +2806,12 @@ def stream_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         ann_index_append(spark, idx_dir, batch)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
+    run_available_now(
+        stream,
+        state_partitions=None,
+        sink=apply_batch,
+        checkpoint=os.path.join(base, "ckpt"),
     )
-    q.awaitTermination()
     with open(os.path.join(idx_dir, "_width")) as wf:
         width = int(wf.read().strip())
     out = _serve_appended_index(
@@ -2869,12 +2927,7 @@ def stream_jdbc_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _events_stream(spark, sf_dir).select(
         "user_id", "ts", "event_id", "value", "event_type"
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, state_partitions=None, sink=apply_batch)
     final = read_jdbc(
         spark,
         url,

@@ -15,13 +15,12 @@ events); the oracle pins semantics with a gaps-and-islands rewrite.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import instant_as_ntz, load, ntz_as_utc_instant
+from .stateful import run_available_now
 
 _TUMBLING_ORACLE = """
 SELECT time_bucket(INTERVAL 1 DAY, ts) AS window_start,
@@ -120,9 +119,6 @@ def session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_stream_counter = itertools.count()
-
-
 def _events_stream_ntz(spark: SparkSession, sf_dir: str):
     """File-source stream over events.parquet plus the event-time embed.
 
@@ -170,37 +166,6 @@ def _events_stream_ntz(spark: SparkSession, sf_dir: str):
     return stream, to_ntz
 
 
-def _run_complete(agg) -> DataFrame:
-    """Run a windowed streaming agg to idle (AvailableNow) into a memory
-    sink and return the sink table. The first micro-batch pins state
-    partitioning into the checkpoint — size it to state volume (tiny
-    here), not the 200-partition default. 4 partitions: per-partition
-    state-store commit is the micro-batch constant at fixture scale
-    (measured in stateful._run_to_memory — 16→4 partitions halves the
-    warm wall with identical results)."""
-    spark = agg.sparkSession
-    sink = f"stream_window_sink_{next(_stream_counter)}"
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-    # size-gated drain + sink drop — see stateful._drain_sink (driver-
-    # heap sink accumulation OOM'd the r11 x100 campaign; the r12 gate
-    # hands small drained results back without the checkpoint job)
-    from .stateful import _drain_sink, _progress_rowcount
-
-    return _drain_sink(spark, sink, _progress_rowcount(q, "complete"))
-
-
 @query("stream_tumbling_availablenow", oracle=_TUMBLING_ORACLE)
 def stream_tumbling_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tumbling-window agg executed as a REAL Structured Streaming query:
@@ -223,7 +188,7 @@ def stream_tumbling_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return _run_complete(agg)
+    return run_available_now(agg, "complete")
 
 
 @query("stream_sliding_availablenow", oracle=_SLIDING_ORACLE)
@@ -243,7 +208,7 @@ def stream_sliding_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(to_ntz("w.start", "window_start"), "n_events", "total_value")
     )
-    return _run_complete(agg)
+    return run_available_now(agg, "complete")
 
 
 @query("stream_session_availablenow", oracle=_SESSION_ORACLE)
@@ -273,7 +238,7 @@ def stream_session_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return _run_complete(agg)
+    return run_available_now(agg, "complete")
 
 
 _TOPK_N = 3
@@ -319,7 +284,7 @@ def stream_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
             to_ntz("w.start", "window_start"), "event_type", "n_events"
         )
     )
-    counts = _run_complete(agg)
+    counts = run_available_now(agg, "complete")
     from pyspark.sql import Window as W
 
     rk = F.row_number().over(
@@ -412,4 +377,4 @@ def stream_interval_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return _run_complete(agg)
+    return run_available_now(agg, "complete")
