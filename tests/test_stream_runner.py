@@ -41,6 +41,7 @@ from dig_aggregator_core_spark.streaming.stateful import (
 from dig_aggregator_core_spark.streaming.windows import (
     stream_tumbling_availablenow,
 )
+from dig_aggregator_core_spark.tables import load
 
 _PHASES = {"latestOffset", "queryPlanning", "addBatch", "walCommit", "commitOffsets"}
 _SHARED = (
@@ -81,7 +82,7 @@ def test_run_record_explains_the_query(spark, sf_dir, caplog):
     caplog.set_level(logging.INFO, logger=stateful.__name__)
     got = stream_stateful_user_stats(spark, sf_dir)
     (run,) = _runs(caplog)
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    events = load(spark, sf_dir, "events")
     assert run["batches"] == len(run["durationMs"]) >= 1
     for phases in run["durationMs"]:
         assert _PHASES <= set(phases)
