@@ -8,7 +8,7 @@ driver-side collect cost).
 
 Methodology note (ADVICE r8): warm min-of-N timings INCLUDE session
 memos where an op ships one — e.g. dedup_minhash_lsh reads the
-session-persisted signature/band relation (_SH_CACHE/_BANDS_CACHE) on
+session-persisted signature/band relation (tables.session_memo) on
 runs 2..N, and the scratch-index ops (ann_index_persist,
 ann_index_append, dedup_incremental_minhash) pay their build-once index
 write only on the first cold run per content fingerprint. That is the

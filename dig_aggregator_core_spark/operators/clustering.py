@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load
+from ..tables import load, session_memo
 
 K = 4  # clusters
 ITERS = 3  # Lloyd iterations (the last one fused into the returned plan)
@@ -117,13 +117,6 @@ def _assign(emb: DataFrame, cdf: DataFrame) -> DataFrame:
     )
 
 
-# session memo for the trained centroid set (the _SH_CACHE convention:
-# keyed by dir fingerprint, one corpus per session) — a pipeline trains
-# its quantizer once per corpus; kmeans_embeddings and
-# ann_ivf_pq_trained both consume the same training run
-_CENT_CACHE: dict = {}
-
-
 def trained_centroids(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, list[float]]]:
@@ -132,16 +125,17 @@ def trained_centroids(
     Factored so ann_ivf_pq_trained (similarity.py) can use the TRAINED
     coarse quantizer; every coordinate is 6dp-rounded each round, so
     the set is bit-identical cross-engine and the DuckDB chained-CTE
-    replay reproduces it exactly."""
-    from ..tables import dir_fingerprint
+    replay reproduces it exactly.
 
-    key = (spark, sf_dir, dir_fingerprint(sf_dir))
-    hit = _CENT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from ..tables import evict_memo
+    Session-memoized (tables.session_memo): a pipeline trains its
+    quantizer once per corpus; kmeans_embeddings and ann_ivf_pq_trained
+    both consume the same training run."""
+    return session_memo(
+        "centroids", spark, sf_dir, (), lambda: _train_centroids(spark, sf_dir)
+    )
 
-    evict_memo(_CENT_CACHE, spark, sf_dir)
+
+def _train_centroids(spark: SparkSession, sf_dir: str):
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
@@ -164,7 +158,6 @@ def trained_centroids(
             (cid, [dims[p] for p in sorted(dims)])
             for cid, dims in sorted(by_cid.items())
         ]
-    _CENT_CACHE[key] = cents
     return cents
 
 

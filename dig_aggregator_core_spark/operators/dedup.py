@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import dir_fingerprint, load, maybe_spread
+from ..tables import build_once, load, maybe_spread, once_in, session_memo
 
 MUT_OFFSET = 1_000_000
 
@@ -84,11 +84,6 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionByName(mut)
 
 
-# keyed by (SparkSession, sf_dir); entries die with the session, and the
-# persisted partitions themselves are evicted LRU by the block manager
-_SH_CACHE: dict = {}
-
-
 def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, sh_set): distinct word-3-gram shingles per corpus doc.
 
@@ -98,21 +93,16 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     each consumer (it was the slowest headline query's dominant cost).
 
     A BOUNDED number of corpus dirs is cached per session
-    (tables.evict_memo): mutating a dir's files in place evicts exactly
+    (tables.session_memo): mutating a dir's files in place evicts exactly
     that dir's stale entry (the key carries the listing fingerprint),
     switching dirs keeps recent corpora warm (an alternating
     sf0.01/sf0.1 sweep alternates hits, ADVICE r10), and beyond the
     bound the oldest dir is unpersisted — so a long-lived session
     iterating many corpus dirs can't accumulate persisted RDDs or read
     stale data."""
-    key = (spark, sf_dir, dir_fingerprint(sf_dir))
-    sh = _SH_CACHE.get(key)
-    if sh is None:
-        from ..tables import evict_memo
-
-        evict_memo(_SH_CACHE, spark, sf_dir,
-                   unpersist=lambda df: df.unpersist())
-        sh = _corpus(spark, sf_dir).select(
+    return session_memo(
+        "shingled", spark, sf_dir, (),
+        lambda: _corpus(spark, sf_dir).select(
             "doc_id",
             "lang",
             F.expr(
@@ -121,9 +111,9 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "    i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))"
                 "ELSE array(concat_ws(' ', toks)) END"
             ).alias("sh_set"),
-        ).persist()
-        _SH_CACHE[key] = sh
-    return sh
+        ).persist(),
+        release=lambda df: df.unpersist(),
+    )
 
 
 # ---------------------------------------------------------------- exact
@@ -313,54 +303,22 @@ def dedup_minhash_lsh(
 # shuffle and answers "too big" without ever building the O(n^2) pair set.
 _CAND_BROADCAST_MAX_PAIRS = 2_000_000  # ~ tens of MB of (doc_a, doc_b)
 
-# (session, sf_dir + listing fingerprint) -> (persisted band relation,
-# occupancy pair bound). The bound aggregation doubles as the action that
-# materializes the persist, so a session pays the signature map ONCE: the
-# candidate self-join (both branches) and every later call read the
-# in-memory (doc_id, band, band_key) relation instead of re-deriving
-# scan -> shingle -> 8 md5 minhashes. This closes both r7 findings about
-# the gate: the extra linear pass it cost per query (VERDICT r7 task 4)
-# and the eager Spark job it ran on EVERY plan-building call (ADVICE r7)
-# — now at most one job per session/corpus. 4 narrow rows per doc; at
-# real scale the persist spills to disk (MEMORY_AND_DISK default) and the
-# bound is recomputed only when the corpus listing changes.
-_BANDS_CACHE: dict = {}
-
 
 def _bands_with_bound(spark: SparkSession, sf_dir: str):
-    key = (spark, sf_dir, dir_fingerprint(sf_dir))
-    hit = _BANDS_CACHE.get(key)
-    if hit is None:
-        from ..tables import evict_memo
+    """(persisted band relation, occupancy pair bound), session-memoized.
+    The bound aggregation doubles as the action that materializes the
+    persist, so a session pays the signature map ONCE: the candidate
+    self-join (both branches) and every later call read the in-memory
+    (doc_id, band, band_key) relation instead of re-deriving scan ->
+    shingle -> 8 md5 minhashes. This closes both r7 findings about the
+    gate: the extra linear pass it cost per query (VERDICT r7 task 4) and
+    the eager Spark job it ran on EVERY plan-building call (ADVICE r7) —
+    now at most one job per session/corpus. 4 narrow rows per doc; at
+    real scale the persist spills to disk (MEMORY_AND_DISK default) and
+    the bound is recomputed only when the corpus listing changes."""
 
-        evict_memo(_BANDS_CACHE, spark, sf_dir,
-                   unpersist=lambda hit: hit[0].unpersist())
-        sh = _shingled(spark, sf_dir)
-        mh = sh.select(
-            "doc_id",
-            *[
-                F.array_min(
-                    F.expr(f"transform(sh_set, s -> md5(concat('{i}|', s)))")
-                ).alias(f"h{i}")
-                for i in range(_N_HASH)
-            ],
-        )
-        bands = mh.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.concat(
-                                F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}")
-                            ).alias("band_key"),
-                        )
-                        for b in range(_N_BANDS)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("doc_id", "bb.band", "bb.band_key").persist()
+    def derive():
+        bands = _bands_of(_shingled(spark, sf_dir)).persist()
         # The bound sums C(occ, 2) in DOUBLE: the LONG product
         # count*(count-1) wraps negative past ~3e9 members in one bucket
         # — exactly the hot-bucket regime the gate guards — and a wrapped
@@ -378,9 +336,12 @@ def _bands_with_bound(spark: SparkSession, sf_dir: str):
             )
             .first()["pairs"]
         )
-        hit = (bands, int(bound or 0))
-        _BANDS_CACHE[key] = hit
-    return hit
+        return bands, int(bound or 0)
+
+    return session_memo(
+        "bands", spark, sf_dir, (), derive,
+        release=lambda hit: hit[0].unpersist(),
+    )
 
 
 def _minhash_verify_join(
@@ -414,9 +375,8 @@ def _minhash_verify_join(
 
 
 def _bands_of(sh: DataFrame) -> DataFrame:
-    """(doc_id, band, band_key) for a shingle relation — the same
-    signature fold _bands_with_bound inlines (8 md5 minhashes as a
-    narrow per-row array_min map, 4 two-row bands, one explode)."""
+    """(doc_id, band, band_key) for a shingle relation: 8 md5 minhashes
+    as a narrow per-row array_min map, 4 two-row bands, one explode."""
     mh = sh.select(
         "doc_id",
         *[
@@ -450,56 +410,17 @@ def _band_index_path(spark: SparkSession, sf_dir: str) -> str:
     partitioned by band. This is ann_index_persist's offline/online split
     applied to near-dup dedup — the committed side's signatures are paid
     once at commit time, and every later ingest batch joins the index
-    instead of re-hashing the corpus. Cache discipline is
-    _persisted_index_path's: content fingerprint in the path, flock
-    around the build, _done written last."""
-    import fcntl
+    instead of re-hashing the corpus. Built once per corpus listing
+    (tables.build_once)."""
     import os
-    import re
-    import shutil
-    import tempfile
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    sig = "0"
-    try:
-        paths = (
-            [
-                os.path.join(src, f)
-                for f in os.listdir(src)
-                if not f.startswith((".", "_"))
-            ]
-            if os.path.isdir(src)
-            else [src]
+    def build(out):
+        committed = _shingled(spark, sf_dir).filter(F.col("doc_id") < MUT_OFFSET)
+        _bands_of(committed).write.partitionBy("band").mode("overwrite").parquet(
+            os.path.join(out, "index.parquet")
         )
-        stats = [os.stat(p) for p in paths]
-        sig = "%d_%d" % (
-            sum(s.st_size for s in stats),
-            max((s.st_mtime_ns for s in stats), default=0),
-        )
-    except OSError:
-        pass
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_scratch",
-        "band_index_%s_%s"
-        % (re.sub(r"[^A-Za-z0-9.]", "_", sf_dir.rstrip("/")), sig),
-    )
-    done = os.path.join(out, "_done")
-    if not os.path.exists(done):
-        os.makedirs(out, exist_ok=True)
-        with open(os.path.join(out, ".lock"), "a") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            if not os.path.exists(done):
-                committed = _shingled(spark, sf_dir).filter(
-                    F.col("doc_id") < MUT_OFFSET
-                )
-                data_dir = os.path.join(out, "index.parquet")
-                shutil.rmtree(data_dir, ignore_errors=True)
-                _bands_of(committed).write.partitionBy("band").mode(
-                    "overwrite"
-                ).parquet(data_dir)
-                open(done, "w").close()
-    return os.path.join(out, "index.parquet")
+
+    return os.path.join(build_once("band_index", sf_dir, build), "index.parquet")
 
 
 def append_band_index(spark: SparkSession, index_path: str, batch_bands: DataFrame) -> None:
@@ -674,21 +595,17 @@ def dedup_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-partitions on (band, key-prefix) to get it back, and until a
     rewrite runs the serve-side anti-join is the mechanism (tombstone
     set bounded by the delete log, broadcast)."""
-    import fcntl
     import os
 
     index_path = _band_index_path(spark, sf_dir)
     base = os.path.dirname(index_path)
-    marker = os.path.join(base, "_tombstoned")
-    if not os.path.exists(marker):
-        with open(os.path.join(base, ".lock"), "a") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            if not os.path.exists(marker):
-                panel = _shingled(spark, sf_dir).filter(
-                    F.expr(_DEDUP_DELETED_FILTER)
-                )
-                delete_band_index(spark, index_path, panel)
-                open(marker, "w").close()
+    once_in(
+        "band_index", base, "_tombstoned",
+        lambda _dir: delete_band_index(
+            spark, index_path,
+            _shingled(spark, sf_dir).filter(F.expr(_DEDUP_DELETED_FILTER)),
+        ),
+    )
     tombs = spark.read.parquet(
         os.path.join(base, "tombstones.parquet")
     ).select("doc_id")
@@ -1003,31 +920,22 @@ reach AS (
 """
 
 
-# memo keyed by (SparkSession, sf_dir) — the shingle-cache precedent: the
-# verified near-dup pair set is the composition point for LPA, connected
-# components (and through it cluster representative), and the split
-# leakage audit; a production pipeline computes pairs once and feeds
-# every downstream audit. Caching layers, bottom-up: since r8 the
-# registered dedup_minhash_lsh query itself reads the session-memoized
-# signature/band relation and gate bound (_SH_CACHE / _BANDS_CACHE /
-# _GATE_CACHE below), so warm bench runs measure band-join + verify-join
-# on a persisted band table, not signature recomputation — bench
-# methodology note: min-of-N timings for dedup_minhash_lsh include those
-# memos (first run pays the build). This _PAIR_CACHE layer additionally
-# memoizes the FINAL verified pair set for composing consumers only.
-_PAIR_CACHE: dict = {}
-
-
+# session memo (tables.session_memo): the verified near-dup pair set is
+# the composition point for LPA, connected components (and through it
+# cluster representative), and the split leakage audit; a production
+# pipeline computes pairs once and feeds every downstream audit. Caching
+# layers, bottom-up: since r8 the registered dedup_minhash_lsh query
+# itself reads the session-memoized shingle and band memos, so warm
+# bench runs measure band-join + verify-join on a persisted band table,
+# not signature recomputation — bench methodology note: min-of-N timings
+# for dedup_minhash_lsh include those memos (first run pays the build).
+# This "neardup_pairs" memo additionally keeps the FINAL verified pair
+# set for composing consumers only.
 def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir, dir_fingerprint(sf_dir))
-    pairs = _PAIR_CACHE.get(key)
-    if pairs is None:
-        from ..tables import evict_memo
-
-        evict_memo(_PAIR_CACHE, spark, sf_dir)
-        pairs = dedup_minhash_lsh(spark, sf_dir).localCheckpoint()
-        _PAIR_CACHE[key] = pairs
-    return pairs
+    return session_memo(
+        "neardup_pairs", spark, sf_dir, (),
+        lambda: dedup_minhash_lsh(spark, sf_dir).localCheckpoint(),
+    )
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -1119,7 +1027,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-single-query operator is hash-checked, not just smoke-tested.
 
     The finished labeling is session-memoized per corpus listing via
-    _full_cc_labels / _CC_FULL_CACHE (the maintained-table convention —
+    _full_cc_labels' session_memo (the maintained-table convention —
     in production the component labels are a table the incremental CC
     ops update, not a fixpoint re-run per consumer): the star-
     contraction fixpoint (_cc_labels, the factored identical engine)
@@ -1214,29 +1122,21 @@ def _cc_labels_delta(spark: SparkSession, edge_pairs: DataFrame) -> DataFrame:
     return spark.createDataFrame(out, "u bigint, component bigint")
 
 
-# stored committed labeling for the incremental CC step — the
-# _neardup_pairs memo convention (keyed by session + corpus fingerprint;
-# in production this is a maintained table, not a cache)
-_CC_BASE_CACHE: dict = {}
-
-
+# stored committed labeling for the incremental CC step — a session
+# memo (tables.session_memo) like _neardup_pairs; in production this is
+# a maintained table, not a cache
 def _committed_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir, dir_fingerprint(sf_dir))
-    hit = _CC_BASE_CACHE.get(key)
-    if hit is None:
-        from ..tables import evict_memo
-
-        evict_memo(_CC_BASE_CACHE, spark, sf_dir)
+    def derive():
         committed = _neardup_pairs(spark, sf_dir).filter(
             (F.col("doc_a") < MUT_OFFSET) & (F.col("doc_b") < MUT_OFFSET)
         )
-        hit = _cc_labels(
+        return _cc_labels(
             committed.select(
                 F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
             )
         ).localCheckpoint()
-        _CC_BASE_CACHE[key] = hit
-    return hit
+
+    return session_memo("cc_committed", spark, sf_dir, (), derive)
 
 
 @query(
@@ -1335,30 +1235,22 @@ def dedup_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # their min-id root (labels must shift), and some SPLIT
 _CC_DELETED_FILTER = "doc_id % 7 = 2"
 
+
 # stored full-graph labeling — the maintained state dedup_cc_delete
-# updates (the _CC_BASE_CACHE convention, over ALL edges not just the
+# updates (like _committed_cc_labels, over ALL edges not just the
 # committed subgraph)
-_CC_FULL_CACHE: dict = {}
-
-
 def _full_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir, dir_fingerprint(sf_dir))
-    hit = _CC_FULL_CACHE.get(key)
-    if hit is None:
-        from ..tables import evict_memo
-
-        # unpersist on eviction (ADVICE r12): localCheckpointed label
-        # relation — free the storage blocks, _SH_CACHE convention
-        evict_memo(_CC_FULL_CACHE, spark, sf_dir,
-                   unpersist=lambda df: df.unpersist())
-        pairs = _neardup_pairs(spark, sf_dir)
-        hit = _cc_labels(
-            pairs.select(
+    # unpersist on eviction (ADVICE r12): localCheckpointed label
+    # relation — free the storage blocks
+    return session_memo(
+        "cc_full", spark, sf_dir, (),
+        lambda: _cc_labels(
+            _neardup_pairs(spark, sf_dir).select(
                 F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
             )
-        ).localCheckpoint()
-        _CC_FULL_CACHE[key] = hit
-    return hit
+        ).localCheckpoint(),
+        release=lambda df: df.unpersist(),
+    )
 
 
 @query(
@@ -1578,11 +1470,6 @@ def dedup_incremental_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SJ_T = 0.5  # Jaccard threshold over 5-token shingle sets
 
-# memoized like _SH_CACHE: the ranked-set subtree (scan -> shingle-hash ->
-# df join -> per-doc sort) feeds BOTH the prefix index and the verify
-# branch; without the persist Spark recomputes it per consumer
-_SJ_CACHE: dict = {}
-
 
 def _sj_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh, prefix): per-doc 5-token shingle set as xxhash64
@@ -1594,14 +1481,14 @@ def _sj_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     never text. Jaccard over hashed sets equals Jaccard over the string
     sets absent an intra-pair xxhash64 collision (~2^-64 per candidate —
     the standard production trade; the string-side oracle double-checks
-    it holds here)."""
-    key = (spark, sf_dir, dir_fingerprint(sf_dir))
-    r = _SJ_CACHE.get(key)
-    if r is None:
-        from ..tables import evict_memo
+    it holds here).
 
-        evict_memo(_SJ_CACHE, spark, sf_dir,
-                   unpersist=lambda df: df.unpersist())
+    Persisted and session-memoized (tables.session_memo): the ranked-set
+    subtree (scan -> shingle-hash -> df join -> per-doc sort) feeds BOTH
+    the prefix index and the verify branch; without the persist Spark
+    recomputes it per consumer."""
+
+    def derive():
         d = load(spark, sf_dir, "documents").select(
             "doc_id",
             F.array_distinct(
@@ -1614,7 +1501,7 @@ def _sj_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         e = d.select("doc_id", F.explode("sh").alias("t"))
         df_tbl = e.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
-        r = (
+        return (
             e.join(df_tbl, "t")
             .groupBy("doc_id")
             .agg(
@@ -1632,8 +1519,11 @@ def _sj_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .persist()
         )
-        _SJ_CACHE[key] = r
-    return r
+
+    return session_memo(
+        "sj_ranked", spark, sf_dir, (), derive,
+        release=lambda df: df.unpersist(),
+    )
 
 
 # exact, but via a different path than the operator (intersection-count

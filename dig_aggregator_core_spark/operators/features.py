@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load, maybe_spread, ntz_epoch_us
+from ..tables import build_once, load, maybe_spread, ntz_epoch_us
 
 Z_THRESHOLD = 2.5  # |z| above this is an outlier row
 WINSOR_LO, WINSOR_HI = 0.05, 0.95  # clamp percentiles
@@ -3136,65 +3136,29 @@ def _fitted_cuts_path(spark: SparkSession, sf_dir: str) -> str:
     the TRAIN split only, persisted once per source-content fingerprint
     as a 1-row parquet — the 'fitted transformer' artifact a feature
     platform versions so training and serving apply byte-identical
-    parameters. Build-once discipline: fingerprint in the path, flock,
-    _done last (the _persisted_index_path convention)."""
-    import fcntl
+    parameters. Built once per corpus listing (tables.build_once)."""
     import os
-    import re
-    import tempfile
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    sig = "0"
-    try:
-        paths = (
-            [
-                os.path.join(src, f)
-                for f in os.listdir(src)
-                if not f.startswith((".", "_"))
-            ]
-            if os.path.isdir(src)
-            else [src]
+    def build(out):
+        h = (
+            F.conv(
+                F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
+                16,
+                10,
+            ).cast("bigint")
+            % 10
         )
-        stats = [os.stat(p) for p in paths]
-        sig = "%d_%d" % (
-            sum(s.st_size for s in stats),
-            max((s.st_mtime_ns for s in stats), default=0),
+        train = load(spark, sf_dir, "orders").filter(h < 8)
+        cuts = train.agg(
+            F.expr("percentile(o_totalprice, 0.25)").alias("q1"),
+            F.expr("percentile(o_totalprice, 0.50)").alias("q2"),
+            F.expr("percentile(o_totalprice, 0.75)").alias("q3"),
         )
-    except OSError:
-        pass
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_scratch",
-        "fitted_cuts_%s_%s"
-        % (re.sub(r"[^A-Za-z0-9.]", "_", sf_dir.rstrip("/")), sig),
-    )
-    done = os.path.join(out, "_done")
-    if not os.path.exists(done):
-        os.makedirs(out, exist_ok=True)
-        with open(os.path.join(out, ".lock"), "a") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            if not os.path.exists(done):
-                h = (
-                    F.conv(
-                        F.substring(
-                            F.md5(F.col("o_orderkey").cast("string")), 1, 8
-                        ),
-                        16,
-                        10,
-                    ).cast("bigint")
-                    % 10
-                )
-                train = load(spark, sf_dir, "orders").filter(h < 8)
-                cuts = train.agg(
-                    F.expr("percentile(o_totalprice, 0.25)").alias("q1"),
-                    F.expr("percentile(o_totalprice, 0.50)").alias("q2"),
-                    F.expr("percentile(o_totalprice, 0.75)").alias("q3"),
-                )
-                cuts.coalesce(1).write.mode("overwrite").parquet(
-                    os.path.join(out, "cuts.parquet")
-                )
-                open(done, "w").close()
-    return os.path.join(out, "cuts.parquet")
+        cuts.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(out, "cuts.parquet")
+        )
+
+    return os.path.join(build_once("fitted_cuts", sf_dir, build), "cuts.parquet")
 
 
 @query("feature_fit_transform_persist", oracle=_FIT_ORACLE)

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import dir_fingerprint, load
+from ..tables import load, session_memo
 
 DAMPING = 0.85
 PR_ITERS = 5
@@ -771,16 +771,6 @@ link_prediction_adamic_adar.__doc__ = (
 )
 
 
-# memo keyed by (SparkSession, sf_dir, band, symmetric) — the _SH_CACHE
-# precedent (dedup.py): six graph queries derive the SAME edge relation
-# from events, and a session (the driver's 50-query run, a real pipeline's
-# graph stage) should pay the cooc scan + rank window + band join once.
-# Entries for a different sf_dir on the same session are dropped so a
-# long-lived session iterating corpora can't accumulate checkpointed RDDs;
-# the checkpointed blocks die with their last DataFrame reference.
-_EDGE_CACHE: dict = {}
-
-
 def banded_cooc_edges(
     spark: SparkSession,
     sf_dir: str,
@@ -814,20 +804,24 @@ def banded_cooc_edges(
     consumer fans the edges into multiple joins or an iterative loop
     (lineage re-embeds the full derivation per consumer otherwise; the
     BFS first draft linted at 187 shuffles uncheckpointed). Checkpointed
-    results are memoized per (session, sf_dir + listing fingerprint,
-    band, symmetric) so the derivation runs once per session, not once
-    per consuming query — and an in-place corpus mutation invalidates."""
-    key = (spark, sf_dir, dir_fingerprint(sf_dir), band, symmetric)
+    results are session-memoized (tables.session_memo) per (session,
+    sf_dir + listing fingerprint, band, symmetric) so the derivation runs
+    once per session, not once per consuming query — and an in-place
+    corpus mutation invalidates. Six graph queries derive the SAME edge
+    relation; the unmemoized `checkpoint=False` path never touches the
+    memo."""
     if checkpoint:
-        hit = _EDGE_CACHE.get(key)
-        if hit is not None:
-            return hit
-        # keep sibling (band, symmetric) variants of the SAME dir+listing
-        # and recent other dirs (bounded); evict stale listings of this
-        # dir (ADVICE r10 via tables.evict_memo)
-        from ..tables import evict_memo
+        return session_memo(
+            "banded_edges", spark, sf_dir, (band, symmetric),
+            lambda: _banded_edges(spark, sf_dir, band, symmetric)
+            .localCheckpoint(),
+        )
+    return _banded_edges(spark, sf_dir, band, symmetric)
 
-        evict_memo(_EDGE_CACHE, spark, sf_dir, keep_fingerprint=key[2])
+
+def _banded_edges(
+    spark: SparkSession, sf_dir: str, band: int, symmetric: bool
+) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     cooc = ev.select(
         "event_type", F.date_trunc("hour", "ts").alias("h"), "user_id"
@@ -862,10 +856,6 @@ def banded_cooc_edges(
         edges = edges.unionByName(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
-    if not checkpoint:
-        return edges
-    edges = edges.localCheckpoint()
-    _EDGE_CACHE[key] = edges
     return edges
 
 
@@ -873,40 +863,29 @@ def banded_cooc_edges(
 # smallest-id neighbors) — FoF and Adamic-Adar derive the IDENTICAL
 # relation (same cap, same orientation) and each used to re-run the
 # full cooc derivation + cap window per call (checkpoint=False bypassed
-# the _EDGE_CACHE memo entirely, so even the banded edges were rebuilt
-# per bench run). Same convention as _EDGE_CACHE/_SH_CACHE: in
-# production this is the maintained capped-adjacency table a graph
-# stage derives once per corpus snapshot.
-_CAPPED_CACHE: dict = {}
-
-
+# the banded-edge memo entirely, so even the banded edges were rebuilt
+# per bench run). A session_memo like banded_cooc_edges: in production
+# this is the maintained capped-adjacency table a graph stage derives
+# once per corpus snapshot.
 def capped_cooc_edges(spark: SparkSession, sf_dir: str,
                       cap: int = _FOF_CAP) -> DataFrame:
     """Symmetric banded adjacency capped to each node's `cap` smallest-id
     neighbors, localCheckpointed and memoized per (session, corpus
     listing, cap). Deterministic cap (row_number by v) keeps the FoF/AA
-    oracles exact; the base relation rides the _EDGE_CACHE memo."""
-    key = (spark, sf_dir, dir_fingerprint(sf_dir), cap)
-    hit = _CAPPED_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from ..tables import evict_memo
-
-    # unpersist on eviction (ADVICE r12): these are localCheckpointed
-    # edge relations — without the callback the evicted blocks stay
-    # pinned until driver GC (the _SH_CACHE convention)
-    evict_memo(_CAPPED_CACHE, spark, sf_dir, keep_fingerprint=key[2],
-               unpersist=lambda df: df.unpersist())
-    edges = banded_cooc_edges(spark, sf_dir, symmetric=True)
+    oracles exact; the base relation rides the banded-edge memo."""
     wcap = Window.partitionBy("u").orderBy("v")
-    ec = (
-        edges.withColumn("rk", F.row_number().over(wcap))
+    # unpersist on eviction (ADVICE r12): these are localCheckpointed
+    # edge relations — without the release the evicted blocks stay
+    # pinned until driver GC
+    return session_memo(
+        "capped_edges", spark, sf_dir, (cap,),
+        lambda: banded_cooc_edges(spark, sf_dir, symmetric=True)
+        .withColumn("rk", F.row_number().over(wcap))
         .filter(F.col("rk") <= cap)
         .drop("rk")
-        .localCheckpoint()
+        .localCheckpoint(),
+        release=lambda df: df.unpersist(),
     )
-    _CAPPED_CACHE[key] = ec
-    return ec
 
 
 _ASSORT_ORACLE = f"""

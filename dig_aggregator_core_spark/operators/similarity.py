@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load, maybe_spread
+from ..tables import build_once, load, maybe_spread, once_in, session_memo
 
 _TOPK = 5
 _QUERY_FILTER = "vec_id % 100 = 0"
@@ -913,60 +913,25 @@ def _persisted_index_path(spark: SparkSession, sf_dir: str) -> str:
 
     The partition value is prefixed ('b0101') because Spark's partition
     inference would otherwise parse '0101' as the integer 101 and corrupt
-    the key. Cache discipline is _events_with_flush_sentinel's: content
-    fingerprint in the path, flock around the build, _done written last.
+    the key. Built once per corpus listing (tables.build_once).
     """
-    import fcntl
     import os
-    import re
-    import shutil
-    import tempfile
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    sig = "0"
-    try:
-        paths = (
-            [
-                os.path.join(src, f)
-                for f in os.listdir(src)
-                if not f.startswith((".", "_"))
-            ]
-            if os.path.isdir(src)
-            else [src]
+    def build(out):
+        vecs = _adaptive_keyed(spark, sf_dir).withColumn(
+            "pbucket", F.concat(F.lit("b"), F.col("bucket"))
+        ).drop("bucket")
+        # an empty corpus has no first() row to derive the bucket width
+        # from — width 0 takes _write_bucketed's direct
+        # (non-repartitioned) leg, matching the pre-compact-layout
+        # behavior on empty input
+        head = vecs.select("pbucket").first()
+        width = len(head[0]) - 1 if head is not None else 0
+        _write_bucketed(
+            vecs, width, os.path.join(out, "index.parquet"), "overwrite"
         )
-        stats = [os.stat(p) for p in paths]
-        sig = "%d_%d" % (
-            sum(s.st_size for s in stats),
-            max((s.st_mtime_ns for s in stats), default=0),
-        )
-    except OSError:
-        pass
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_scratch",
-        "ann_index_%s_%s"
-        % (re.sub(r"[^A-Za-z0-9.]", "_", sf_dir.rstrip("/")), sig),
-    )
-    done = os.path.join(out, "_done")
-    if not os.path.exists(done):
-        os.makedirs(out, exist_ok=True)
-        with open(os.path.join(out, ".lock"), "a") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            if not os.path.exists(done):
-                vecs = _adaptive_keyed(spark, sf_dir).withColumn(
-                    "pbucket", F.concat(F.lit("b"), F.col("bucket"))
-                ).drop("bucket")
-                data_dir = os.path.join(out, "index.parquet")
-                shutil.rmtree(data_dir, ignore_errors=True)
-                # an empty corpus has no first() row to derive the
-                # bucket width from — width 0 takes _write_bucketed's
-                # direct (non-repartitioned) leg, matching the
-                # pre-compact-layout behavior on empty input
-                head = vecs.select("pbucket").first()
-                width = len(head[0]) - 1 if head is not None else 0
-                _write_bucketed(vecs, width, data_dir, "overwrite")
-                open(done, "w").close()
-    return os.path.join(out, "index.parquet")
+
+    return os.path.join(build_once("ann_index", sf_dir, build), "index.parquet")
 
 
 _PROBE_INLIST_MAX = 256
@@ -1631,40 +1596,6 @@ eval_rank_fusion_rrf.__doc__ = eval_rank_fusion_rrf.__doc__.format(k=_RRF_K)
 _INC_COMMIT_FILTER = "vec_id % 10 <> 1"  # committed 90%; batch = the rest
 
 
-def _inc_scratch_dir(sf_dir: str, suffix: str = "") -> str:
-    """Content-fingerprinted scratch path for an incremental index of
-    `sf_dir`'s embeddings (no build side effect — path math only)."""
-    import os
-    import re
-    import tempfile
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    sig = "0"
-    try:
-        paths = (
-            [
-                os.path.join(src, f)
-                for f in os.listdir(src)
-                if not f.startswith((".", "_"))
-            ]
-            if os.path.isdir(src)
-            else [src]
-        )
-        stats = [os.stat(p) for p in paths]
-        sig = "%d_%d" % (
-            sum(s.st_size for s in stats),
-            max((s.st_mtime_ns for s in stats), default=0),
-        )
-    except OSError:
-        pass
-    return os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_scratch",
-        "ann_inc_index%s_%s_%s"
-        % (suffix, re.sub(r"[^A-Za-z0-9.]", "_", sf_dir.rstrip("/")), sig),
-    )
-
-
 def _inc_index_path(
     spark: SparkSession, sf_dir: str, suffix: str = ""
 ) -> str:
@@ -1677,19 +1608,10 @@ def _inc_index_path(
     occupancy target, which the content fingerprint in the path forces
     here). `suffix` names an independent instance of the same build
     (the streaming twin's never-appended seed)."""
-    import fcntl
-    import os
-
-    out = _inc_scratch_dir(sf_dir, suffix)
-    done = os.path.join(out, "_done")
-    if not os.path.exists(done):
-        os.makedirs(out, exist_ok=True)
-        with open(os.path.join(out, ".lock"), "a") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            if not os.path.exists(done):
-                _build_committed_index(spark, sf_dir, out)
-                open(done, "w").close()
-    return out
+    return build_once(
+        "ann_inc_index" + suffix, sf_dir,
+        lambda out: _build_committed_index(spark, sf_dir, out),
+    )
 
 
 def _clone_committed_index(
@@ -1699,7 +1621,7 @@ def _clone_committed_index(
     task 1): the streaming maintenance twin must append into a dir no
     other run shares, but the committed build itself is a pure function
     of the corpus fingerprint — so build it ONCE per fingerprint in a
-    dedicated never-appended seed (flocked, `_seed` suffix so
+    dedicated never-appended seed (build_once, `_seed` suffix so
     _append_bootstrap's batch append can never interleave with it) and
     hardlink its immutable part files into `dest`. Parquet files are
     write-once, and appends only ADD files to the partition dirs, so
@@ -1726,7 +1648,7 @@ def _build_committed_index(
     spark: SparkSession, sf_dir: str, out: str
 ) -> None:
     """Write the committed-only bucketed index + `_width` sidecar into
-    `out` (shared by _inc_index_path's flocked scratch build and the
+    `out` (shared by _inc_index_path's build_once scratch build and the
     streaming maintenance twin's per-run private dir)."""
     import os
     import shutil
@@ -1764,44 +1686,30 @@ def _build_committed_index(
 
 def _stream_ingest_halves(spark: SparkSession, sf_dir: str) -> str:
     """Staged ingest files for the streaming ANN twin, built once per
-    corpus fingerprint (flocked, same discipline as _inc_index_path):
+    corpus listing (tables.build_once, like _inc_index_path):
     the 10% ingest split as two single-file parquet halves. The split
     is a pure function of the corpus, so re-deriving it per run paid
     two Spark filter+coalesce write jobs for identical bytes. Callers
     copy the files into their private stream dir and re-pin mtimes
     (a REAL copy, not a hardlink: os.utime on a linked file would
     mutate the shared inode's mtime under a concurrent run)."""
-    import fcntl
     import os
     import shutil
 
-    out = _inc_scratch_dir(sf_dir, "_halves")
-    done = os.path.join(out, "_done")
-    if not os.path.exists(done):
-        os.makedirs(out, exist_ok=True)
-        with open(os.path.join(out, ".lock"), "a") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            if not os.path.exists(done):
-                batch = _vecs(spark, sf_dir).filter(
-                    ~F.expr(_INC_COMMIT_FILTER)
-                )
-                splits = ("vec_id % 20 = 1", "vec_id % 20 = 11")
-                for i, flt in enumerate(splits):
-                    tmp = os.path.join(out, f"tmp{i}")
-                    batch.filter(F.expr(flt)).coalesce(1).write.mode(
-                        "overwrite"
-                    ).parquet(tmp)
-                    part = [
-                        f for f in os.listdir(tmp)
-                        if f.endswith(".parquet")
-                    ][0]
-                    shutil.copy(
-                        os.path.join(tmp, part),
-                        os.path.join(out, f"half{i}.parquet"),
-                    )
-                    shutil.rmtree(tmp, ignore_errors=True)
-                open(done, "w").close()
-    return out
+    def build(out):
+        batch = _vecs(spark, sf_dir).filter(~F.expr(_INC_COMMIT_FILTER))
+        for i, flt in enumerate(("vec_id % 20 = 1", "vec_id % 20 = 11")):
+            tmp = os.path.join(out, f"tmp{i}")
+            batch.filter(F.expr(flt)).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(tmp)
+            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
+            shutil.copy(
+                os.path.join(tmp, part), os.path.join(out, f"half{i}.parquet")
+            )
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    return build_once("ann_inc_index_halves", sf_dir, build)
 
 
 def ann_index_append(
@@ -2039,21 +1947,16 @@ def _serve_appended_index(
 def _append_bootstrap(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """Shared bootstrap for the append-maintained index consumers:
     build the committed index once, append the ingest batch once (both
-    flock-idempotent), and return (index_dir, recorded_width)."""
-    import fcntl
+    under tables.once_in's flock), and return (index_dir, recorded_width)."""
     import os
 
     idx_dir = _inc_index_path(spark, sf_dir)
-    appended = os.path.join(idx_dir, "_appended")
-    if not os.path.exists(appended):
-        with open(os.path.join(idx_dir, ".lock"), "a") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            if not os.path.exists(appended):
-                batch = _vecs(spark, sf_dir).filter(
-                    ~F.expr(_INC_COMMIT_FILTER)
-                )
-                ann_index_append(spark, idx_dir, batch)
-                open(appended, "w").close()
+    once_in(
+        "ann_inc_index", idx_dir, "_appended",
+        lambda d: ann_index_append(
+            spark, d, _vecs(spark, sf_dir).filter(~F.expr(_INC_COMMIT_FILTER))
+        ),
+    )
     with open(os.path.join(idx_dir, "_width")) as wf:
         width = int(wf.read().strip())
     return idx_dir, width
@@ -2298,30 +2201,19 @@ def ann_index_compact(
 
 
 def _delete_bootstrap(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    """Flock-idempotent bootstrap for the deletion-lifecycle consumers:
-    a PRIVATE index scratch (the shared _inc_index_path one must never
+    """Build-once bootstrap for the deletion-lifecycle consumers: a
+    PRIVATE index scratch (the shared _inc_index_path one must never
     carry deletions — its consumers pin no-deletion semantics), built
-    committed -> appended -> tombstoned once per corpus fingerprint."""
-    import fcntl
+    committed -> appended -> tombstoned once per corpus listing."""
     import os
 
-    base = _inc_scratch_dir(sf_dir, suffix="_del")
-    os.makedirs(base, exist_ok=True)
-    ready = os.path.join(base, "_deleted")
-    if not os.path.exists(ready):
-        with open(os.path.join(base, ".lock"), "a") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            if not os.path.exists(ready):
-                _build_committed_index(spark, sf_dir, base)
-                batch = _vecs(spark, sf_dir).filter(
-                    ~F.expr(_INC_COMMIT_FILTER)
-                )
-                ann_index_append(spark, base, batch)
-                ann_index_delete(
-                    spark, base,
-                    _vecs(spark, sf_dir).filter(F.expr(_DELETED_FILTER)),
-                )
-                open(ready, "w").close()
+    def build(base):
+        _build_committed_index(spark, sf_dir, base)
+        vecs = _vecs(spark, sf_dir)
+        ann_index_append(spark, base, vecs.filter(~F.expr(_INC_COMMIT_FILTER)))
+        ann_index_delete(spark, base, vecs.filter(F.expr(_DELETED_FILTER)))
+
+    base = build_once("ann_inc_index_del", sf_dir, build, marker="_deleted")
     with open(os.path.join(base, "_width")) as wf:
         width = int(wf.read().strip())
     return base, width
@@ -2423,17 +2315,11 @@ def ann_index_compact_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned via the tombstones' recorded buckets), so its cost tracks
     the delete rate, not the index size; the serve-side anti-join
     stays bounded by the under-threshold tombstone residue."""
-    import fcntl
-    import os
-
     idx_dir, width = _delete_bootstrap(spark, sf_dir)
-    marker = os.path.join(idx_dir, "_compacted")
-    if not os.path.exists(marker):
-        with open(os.path.join(idx_dir, ".lock"), "a") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            if not os.path.exists(marker):
-                ann_index_compact(spark, idx_dir)
-                open(marker, "w").close()
+    once_in(
+        "ann_inc_index_del", idx_dir, "_compacted",
+        lambda d: ann_index_compact(spark, d),
+    )
     return _serve_deleted_index(spark, sf_dir, idx_dir, width)
 
 
@@ -2854,13 +2740,6 @@ FROM (
 """
 
 
-# session memo for the IVF+PQ index artifacts (assigned cells, probe
-# pairs, PQ codes) — the _SH_CACHE convention: one corpus per session,
-# keyed by the dir fingerprint so in-place mutation invalidates; a
-# pipeline builds its index once per corpus, repeat queries reuse it
-_IVFPQ_CACHE: dict = {}
-
-
 @query("ann_ivf_pq", oracle=_IVFPQ_ORACLE)
 def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF + PQ composed (VERDICT r9 task 4) — the billion-vector
@@ -2885,21 +2764,12 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines share."""
     vecs = _vecs(spark, sf_dir)
     zvecs = _pq_zvecs(spark, sf_dir)
-    from ..tables import dir_fingerprint
 
-    key = (spark, sf_dir, dir_fingerprint(sf_dir))
-    art = _IVFPQ_CACHE.get(key)
-    if art is None:
-        # evict only THIS corpus's stale fingerprints (ADVICE r10):
-        # unpersisting other sf_dirs' entries would thrash the memo on
-        # an alternating sf0.01/sf0.1 sweep, and truncate the lineage
-        # under any still-held result DataFrame from the other corpus
-        from ..tables import evict_memo
-
-        evict_memo(
-            _IVFPQ_CACHE, spark, sf_dir,
-            unpersist=lambda dfs: [df.unpersist() for df in dfs],
-        )
+    # the IVF+PQ index artifacts (assigned cells, probe pairs, PQ codes)
+    # are a session memo (tables.session_memo): keyed by the dir
+    # fingerprint so in-place mutation invalidates; a pipeline builds
+    # its index once per corpus, repeat queries reuse it
+    def derive():
         cents = F.broadcast(
             vecs.filter(F.expr(_CENTROID_FILTER_SQL)).select(
                 F.col("vec_id").alias("cent_id"),
@@ -2926,7 +2796,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         # join, shortlist, rerank) recomputes those subtrees inside one
         # DAG (measured 222 s vs 52 s at the x100 proof). In serving
         # these ARE persisted tables (ann_index_persist's layout); the
-        # narrow checkpoints + _IVFPQ_CACHE are their in-session
+        # narrow checkpoints + this session memo are their in-session
         # stand-in, matching bench.py's build-once methodology note.
         assigned = (
             ranked.filter(F.col("rk") == 1)
@@ -2946,9 +2816,12 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(assigned, "vec_id")
             .localCheckpoint()
         )
-        art = (assigned, probes, codes)
-        _IVFPQ_CACHE[key] = art
-    assigned, probes, codes = art
+        return assigned, probes, codes
+
+    assigned, probes, codes = session_memo(
+        "ivfpq", spark, sf_dir, (), derive,
+        release=lambda dfs: [df.unpersist() for df in dfs],
+    )
     # per-query distance table as an M x K array (broadcast: |q| rows,
     # ~1 KB each) — the FAISS layout, looked up per candidate instead of
     # joined per (m, code): the first draft's (cent, m, code) equi-join

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import dir_fingerprint, load, maybe_spread
+from ..tables import load, maybe_spread, session_memo
 
 CHUNK_TOKENS = 512  # token budget per packed training chunk
 
@@ -905,32 +905,23 @@ _BPE_MERGES_DUCK = (
     "[" + ", ".join(f"'{m}'" for m in _BPE_MERGES) + "]"
 )
 
-# memo keyed by (SparkSession, sf_dir) — the shingle-cache precedent
-# (dedup.py _SH_CACHE): the BPE merge fold is the heaviest narrow map in
-# the repo, and BOTH tokenizer_bpe_apply and tokenizer_vocab_coverage
-# fold the identical per-word encode; a session pays it once. Entries
-# for a different corpus dir on the same session are evicted.
-_BPE_ENC_CACHE: dict = {}
-
 
 def _bpe_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, n_chars, ew): per-doc BPE-encoded words, where
     ew[i] is word i's token sequence joined by '~'. Persisted and
-    memoized per (session, sf_dir + listing fingerprint)."""
-    key = (spark, sf_dir, dir_fingerprint(sf_dir))
-    enc = _BPE_ENC_CACHE.get(key)
-    if enc is None:
-        from ..tables import evict_memo
+    session-memoized (tables.session_memo): the BPE merge fold is the
+    heaviest narrow map in the repo, and BOTH tokenizer_bpe_apply and
+    tokenizer_vocab_coverage fold the identical per-word encode; a
+    session pays it once."""
 
-        evict_memo(_BPE_ENC_CACHE, spark, sf_dir,
-                   unpersist=lambda df: df.unpersist())
+    def derive():
         # the merge fold is the heaviest narrow map in the repo — spread
         # a small-file scan first (tables.maybe_spread; measured 4.75 s
         # -> 0.68 s at sf0.1 on 32 cores, r6)
         d = maybe_spread(
             load(spark, sf_dir, "documents"), sf_dir, "documents", "doc_id"
         )
-        enc = d.select(
+        return d.select(
             "doc_id",
             "source",
             F.col("n_chars").cast("long").alias("n_chars"),
@@ -951,8 +942,11 @@ def _bpe_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "      THEN concat(a, t) ELSE concat(a, '~', t) END)))"
             ).alias("ew"),
         ).persist()
-        _BPE_ENC_CACHE[key] = enc
-    return enc
+
+    return session_memo(
+        "bpe_encoded", spark, sf_dir, (), derive,
+        release=lambda df: df.unpersist(),
+    )
 
 
 

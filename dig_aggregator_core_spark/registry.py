@@ -358,7 +358,7 @@ _VERIFIED_PRIOR_ROUNDS: frozenset[str] = frozenset(
             "tokenizer_unigram_em_step", "tokenizer_bpe_merges",
             # r13 build-side change (the standing convention): the
             # streaming ANN twin's committed index is now a hardlink
-            # clone of a flocked content-fingerprinted seed instead of
+            # clone of a build-once content-fingerprinted seed instead of
             # a per-run rebuild (similarity._clone_committed_index);
             # serving plan unchanged, bytes identical, but build-side
             # changed -> re-verify (it is also in the carry-over).

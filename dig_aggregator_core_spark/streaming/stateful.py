@@ -19,7 +19,6 @@ import itertools
 import json
 import logging
 import os
-import re
 import shutil
 import tempfile
 import threading
@@ -36,7 +35,7 @@ from ..operators.behavioral import _ATTR_ORACLE as _BATCH_ATTR_ORACLE
 from ..operators.behavioral import _COHORT_ORACLE as _BATCH_COHORT_ORACLE
 from ..operators.warehouse import QUALITY_DRIFT_ORACLE as _QUALITY_DRIFT_ORACLE
 from ..registry import query
-from ..tables import load, ntz_as_utc_instant
+from ..tables import build_once, load, ntz_as_utc_instant, session_memo
 
 _sink_counter = itertools.count()
 _log = logging.getLogger(__name__)
@@ -670,95 +669,49 @@ def _events_with_flush_sentinel(spark: SparkSession, sf_dir: str) -> str:
     null-emission tail stays in state forever. Production streams flush
     naturally (data keeps arriving); a run-to-idle replay must append a
     watermark-advancing sentinel past every real row's expiration. The
-    sentinel pair matches only itself and is filtered from the output."""
-    # key the scratch dir on a content fingerprint of the SOURCE (total
-    # size + max mtime over its files), not just the path: regenerating
-    # the fixture at the same path must invalidate the cache, and two
-    # concurrent runs against different source contents must not share a
-    # directory. A half-written cache is never served (_done written last).
-    src = os.path.join(sf_dir, "events.parquet")
-    sig = "0"
-    try:
-        paths = (
-            [
-                os.path.join(src, f)
-                for f in os.listdir(src)
-                if not f.startswith((".", "_"))
-            ]
-            if os.path.isdir(src)
-            else [src]
+    sentinel pair matches only itself and is filtered from the output.
+    Built once per corpus listing (tables.build_once): regenerating the
+    fixture at the same path invalidates it, and two concurrent runs
+    against different source contents never share a directory."""
+
+    def build(out):
+        ev = load(spark, sf_dir, "events")
+        sent = (
+            ev.agg(F.max("ts").alias("ts"))
+            .crossJoin(spark.range(2))
+            .select(
+                (-1 - F.col("id")).alias("event_id"),
+                F.expr("ts + INTERVAL 30 DAYS").alias("ts"),
+                F.lit(-1).cast("bigint").alias("user_id"),
+                F.when(F.col("id") == 0, F.lit("click"))
+                .otherwise(F.lit("purchase"))
+                .alias("event_type"),
+                F.lit(0.0).alias("value"),
+                F.lit("{}").alias("props"),
+            )
         )
-        stats = [os.stat(p) for p in paths]
-        sig = "%d_%d" % (
-            sum(s.st_size for s in stats),
-            max((s.st_mtime_ns for s in stats), default=0),
-        )
-    except OSError:
-        pass
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_scratch",
-        "outer_sentinel_%s_%s"
-        % (re.sub(r"[^A-Za-z0-9.]", "_", sf_dir.rstrip("/")), sig),
+        data_dir = os.path.join(out, "events.parquet")
+        ev.coalesce(4).write.mode("overwrite").parquet(data_dir)
+        # the sentinel goes in its OWN, later file: the file source must
+        # deliver it in a LATER micro-batch (maxFilesPerTrigger below) so
+        # the watermark advances past the real data's expiration while
+        # the query is still running — in a single batch the final
+        # watermark update has no subsequent batch to flush evictions
+        sent.coalesce(1).write.mode("append").parquet(data_dir)
+
+    return os.path.join(
+        build_once("outer_sentinel", sf_dir, build), "events.parquet"
     )
-    done = os.path.join(out, "_done")
-    if not os.path.exists(done):
-        # exclusive flock for the build: two processes keyed to the SAME
-        # fingerprint must not interleave rmtree/write; the loser re-checks
-        # _done under the lock and reuses the winner's build
-        os.makedirs(out, exist_ok=True)
-        with open(os.path.join(out, ".lock"), "a") as lockf:
-            try:
-                import fcntl
-
-                fcntl.flock(lockf, fcntl.LOCK_EX)
-            except ImportError:  # pragma: no cover - non-POSIX
-                pass
-            if not os.path.exists(done):
-                ev = load(spark, sf_dir, "events")
-                sent = (
-                    ev.agg(F.max("ts").alias("ts"))
-                    .crossJoin(spark.range(2))
-                    .select(
-                        (-1 - F.col("id")).alias("event_id"),
-                        F.expr("ts + INTERVAL 30 DAYS").alias("ts"),
-                        F.lit(-1).cast("bigint").alias("user_id"),
-                        F.when(F.col("id") == 0, F.lit("click"))
-                        .otherwise(F.lit("purchase"))
-                        .alias("event_type"),
-                        F.lit(0.0).alias("value"),
-                        F.lit("{}").alias("props"),
-                    )
-                )
-                data_dir = os.path.join(out, "events.parquet")
-                shutil.rmtree(data_dir, ignore_errors=True)
-                ev.coalesce(4).write.mode("overwrite").parquet(data_dir)
-                # the sentinel goes in its OWN, later file: the file source
-                # must deliver it in a LATER micro-batch (maxFilesPerTrigger
-                # below) so the watermark advances past the real data's
-                # expiration while the query is still running — in a single
-                # batch the final watermark update has no subsequent batch
-                # to flush evictions
-                sent.coalesce(1).write.mode("append").parquet(data_dir)
-                open(done, "w").close()
-    return os.path.join(out, "events.parquet")
-
-
-# schema memo for the flush-sentinel scratch dirs (VERDICT r12 task 7):
-# the per-call spark.read.parquet(path).schema paid a fresh listing +
-# footer read (~0.1 s) TWICE per stream-stream query build. A scratch
-# path is content-fingerprinted and immutable once its _done marker
-# exists (_events_with_flush_sentinel's flock build), so the footer
-# schema is a pure function of the path — plain dict, schema objects
-# are session-independent Python StructTypes.
-_SCRATCH_SCHEMA_CACHE: dict = {}
 
 
 def _scratch_events_stream(spark: SparkSession, path: str) -> DataFrame:
-    schema = _SCRATCH_SCHEMA_CACHE.get(path)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCRATCH_SCHEMA_CACHE[path] = schema
+    # the footer schema is session-memoized on the scratch path (VERDICT
+    # r12 task 7): a fresh listing + footer read cost ~0.1 s TWICE per
+    # stream-stream query build, and the build_once path is immutable
+    schema = session_memo(
+        "scratch_schema", spark, path, (),
+        lambda: spark.read.parquet(path).schema,
+    )
     stream = (
         spark.readStream.schema(schema)
         # several batches, sentinel file last (latest mtime): eviction
@@ -2635,7 +2588,7 @@ def stream_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     # the per-batch band pieces are dead once the stream drains;
     # freeing them keeps repeated runs memory-flat. sh is the SHARED
-    # _SH_CACHE entry — never unpersisted here.
+    # "shingled" session_memo entry — never unpersisted here.
     for piece in bands_pieces[1:]:
         piece.unpersist()
     # ONE corpus-sized materialization after the drain (was: one full

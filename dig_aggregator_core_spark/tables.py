@@ -2,8 +2,14 @@
 
 from __future__ import annotations
 
+import collections
+import fcntl
+import hashlib
 import itertools
 import os
+import re
+import shutil
+import tempfile
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,29 +63,61 @@ TABLES = (
 )
 
 
-# Memo of the UNEXECUTED scan DataFrames per (session, dir, table,
-# listing fingerprint) — optimization guide §5 (the driver should do
-# almost no data work) / §6 (file listing is a per-scan driver cost
-# worth caching). ``spark.read.parquet`` builds a fresh InMemoryFileIndex
-# and re-reads the footer schema on EVERY call — measured ~95-120 ms per
-# call on this host — and the registry's queries call load() 1-4 times
-# per build, on every bench run. The memo caches only the lazy plan
-# object: no data, no persist — every action still scans the parquet
-# files, so nothing about execution or results changes (plans are
-# byte-identical; see OPTIMIZATION_r12.md). The fingerprint key gives
-# the same staleness contract as _SH_CACHE and friends: any file change
-# under the dir misses the memo and re-lists.
-_LOAD_CACHE: dict = {}
+# Session memos: one dict per kind, keyed (session, dir, listing
+# fingerprint, *params). Every memo in the package goes through
+# session_memo, so one lock rule and one eviction rule hold for all.
+_MEMOS: dict = {}
+_MEMO_MAX_DIRS = 4  # distinct corpus dirs kept per session and kind
 
-# Guards every session-memo cache that routes through evict_memo
-# (ADVICE r12): two driver threads (guide §2.6 concurrent jobs, e.g.
-# sink_bucketed_partitioned_write's ingest pool) can double-miss the
-# same key — evict_memo's comprehension then iterates the dict while
-# the other thread inserts (RuntimeError), or both pop the same stale
-# key (KeyError). RLock: cache-owning helpers take it around their
-# lookup+derive+insert, and evict_memo re-takes it for callers that
-# invoke it directly.
+# Guards every session memo and MEMO_STATS. Two driver threads (guide
+# §2.6 concurrent jobs, e.g. sink_bucketed_partitioned_write's ingest
+# pool) can double-miss the same key; holding the lock across lookup,
+# eviction, derive and insert makes each key derive once. RLock: nested
+# memos (_neardup_pairs -> _bands_with_bound -> _shingled -> load)
+# re-enter it on the same thread. No derive may start a streaming query
+# (a foreachBatch callback taking the lock would deadlock against it) or
+# call build_once (builds take this lock while holding their flock).
 _MEMO_LOCK = threading.RLock()
+
+# (kind, "hit" | "miss" | "build") -> count, for memos and scratch builds
+MEMO_STATS: collections.Counter = collections.Counter()
+
+
+def session_memo(kind: str, spark, sf_dir: str, params: tuple, derive,
+                 release=None):
+    """``derive()`` memoized per (session, ``sf_dir`` listing, ``params``).
+
+    A miss first evicts, passing each evicted value to ``release``:
+
+    1. entries of THIS ``sf_dir`` under a stale listing fingerprint (an
+       in-place mutation invalidates exactly its own entries; current
+       siblings with other params survive);
+    2. the oldest other dirs of this session, so at most
+       ``_MEMO_MAX_DIRS`` distinct dirs stay memoized per kind (ADVICE
+       r10: evicting every other dir thrashed an alternating
+       sf0.01/sf0.1 sweep and could unpersist blocks under a still-held
+       result of the other corpus)."""
+    fp = dir_fingerprint(sf_dir)
+    key = (spark, sf_dir, fp, *params)
+    with _MEMO_LOCK:
+        memo = _MEMOS.setdefault(kind, {})
+        if key in memo:
+            MEMO_STATS[kind, "hit"] += 1
+            return memo[key]
+        MEMO_STATS[kind, "miss"] += 1
+        free = release or (lambda _v: None)
+        others = list(dict.fromkeys(
+            k[1] for k in memo if k[0] is spark and k[1] != sf_dir
+        ))
+        gone = set(others[: max(0, len(others) - (_MEMO_MAX_DIRS - 1))])
+        for k in [
+            k for k in memo
+            if k[0] is spark
+            and (k[1] in gone or (k[1] == sf_dir and k[2] != fp))
+        ]:
+            free(memo.pop(k))
+        value = memo[key] = derive()
+        return value
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -89,41 +127,38 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     reader rejects; read it as long nanos (legacy conf) and convert to a
     microsecond timestamp column-side (floor division — matches DuckDB's
     ns->us truncation).
+
+    The UNEXECUTED scan DataFrame is memoized (optimization guide §5/§6):
+    ``spark.read.parquet`` builds a fresh InMemoryFileIndex and re-reads
+    the footer schema on every call (~95-120 ms), and the registry's
+    queries call load() 1-4 times per build. Only the lazy plan object is
+    kept — no data, no persist — so plans stay byte-identical
+    (OPTIMIZATION_r12.md) and any file change under the dir re-lists.
     """
     if name == "events":
         # unconditionally, BEFORE the memo lookup (ADVICE r12): a memo
         # hit must not assume the conf survived since the miss that set
         # it — idempotent one-liner, the memo still saves the listing
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    fp = dir_fingerprint(sf_dir)
-    key = (spark, sf_dir, fp, name)
-    with _MEMO_LOCK:
-        hit = _LOAD_CACHE.get(key)
-        if hit is not None:
-            return hit
-        # keep_fingerprint: a miss on a NEW table name must not evict the
-        # current listing's sibling tables (the _EDGE_CACHE param pattern)
-        evict_memo(_LOAD_CACHE, spark, sf_dir, keep_fingerprint=fp)
+
+    def derive():
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if name == "events" and dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts div 1000"))
             )
-        _LOAD_CACHE[key] = df
         return df
 
-
-_SCHEMA_CACHE: dict = {}
+    return session_memo("load", spark, sf_dir, (name,), derive)
 
 
 def raw_schema(spark: SparkSession, sf_dir: str, name: str):
     """RAW parquet footer schema (no ts conversion — the streaming
     sources do their own event-time embed and need the on-disk types),
-    memoized per (session, dir, listing fingerprint, table) exactly like
-    ``load``. Every streaming query used to pay a fresh file listing +
-    footer read (~95-120 ms) per call just to declare its readStream
-    schema; the schema object is immutable metadata, so the memo changes
-    nothing about execution."""
+    memoized exactly like ``load``. Every streaming query used to pay a
+    fresh file listing + footer read (~95-120 ms) per call just to
+    declare its readStream schema; the schema object is immutable
+    metadata, so the memo changes nothing about execution."""
     if name == "events":
         # TIMESTAMP(NANOS) columns need the legacy long read to parse.
         # Set unconditionally BEFORE the memo lookup (ADVICE r12): the
@@ -131,28 +166,23 @@ def raw_schema(spark: SparkSession, sf_dir: str, name: str):
         # on the miss that populated the memo — idempotent one-liner,
         # the memo still saves the listing + footer read.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    fp = dir_fingerprint(sf_dir)
-    key = (spark, sf_dir, fp, name)
-    with _MEMO_LOCK:
-        hit = _SCHEMA_CACHE.get(key)
-        if hit is not None:
-            return hit
-        evict_memo(_SCHEMA_CACHE, spark, sf_dir, keep_fingerprint=fp)
-        schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
-        _SCHEMA_CACHE[key] = schema
-        return schema
+    return session_memo(
+        "raw_schema", spark, sf_dir, (name,),
+        lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet").schema,
+    )
 
 
 def dir_fingerprint(sf_dir: str) -> tuple:
     """Cheap listing fingerprint of a corpus dir: sorted (relative path,
     mtime_ns, size) of every data file under it (one driver-side walk, no
-    Spark job). Session memo caches (_SH_CACHE and friends) fold this into
-    their keys so a file appended to or overwritten in the SAME dir
-    invalidates the memo — previously only *switching* dirs evicted, and a
-    long-lived session mutating its corpus in place read stale persisted
-    data (VERDICT r7 task 3; stale-mutation case pinned in
-    tests/test_session_caches.py). Non-local / unlistable paths fingerprint
-    as a constant, preserving the prior switch-only eviction there.
+    Spark job). session_memo and build_once fold this into their keys so
+    a file appended to or overwritten in the SAME dir invalidates the
+    memo or scratch build — previously only *switching* dirs evicted, and
+    a long-lived session mutating its corpus in place read stale
+    persisted data (VERDICT r7 task 3; stale-mutation case pinned in
+    tests/test_session_caches.py). Non-local / unlistable paths
+    fingerprint as a constant, preserving the prior switch-only eviction
+    there.
 
     Failure semantics: a mid-walk OSError (file deleted during an
     in-place rewrite) returns a UNIQUE sentinel, never the non-local
@@ -184,52 +214,61 @@ def dir_fingerprint(sf_dir: str) -> tuple:
 _FP_ERR_SEQ = itertools.count()
 
 
-def evict_memo(cache: dict, spark, sf_dir: str, unpersist=None,
-               max_dirs: int = 4, keep_fingerprint=None) -> None:
-    """Shared eviction for the session memo caches keyed
-    ``(spark, sf_dir, dir_fingerprint, *params)`` (_SH_CACHE and
-    friends). Called on a cache MISS, before the fresh derivation.
+def build_once(kind: str, sf_dir: str, build, marker: str = "_done") -> str:
+    """Scratch dir ``<tmp>/spark_graft_scratch/<kind>_<slug>_<hash>``
+    built once per ``sf_dir`` listing (``dir_fingerprint``), shared by
+    every process. ``build(dir)`` runs under an exclusive ``flock``
+    (see ``once_in``); a build never writes under ``sf_dir``. After a
+    build, sibling dirs of an older listing of the same kind and dir are
+    removed — each only if its lock is free, so a build still running in
+    another process is never pulled out from under it."""
+    root = os.path.join(tempfile.gettempdir(), "spark_graft_scratch")
+    prefix = f"{kind}_{re.sub(r'[^A-Za-z0-9.]', '_', sf_dir.rstrip('/'))}_"
+    fp = repr(dir_fingerprint(sf_dir)).encode()
+    out = os.path.join(root, prefix + hashlib.sha1(fp).hexdigest()[:16])
+    if once_in(kind, out, marker, build):
+        for name in os.listdir(root):
+            sibling = os.path.join(root, name)
+            if sibling != out and re.fullmatch(
+                re.escape(prefix) + "[0-9a-f]{16}", name
+            ):
+                _remove_if_idle(sibling)
+    return out
 
-    Two rules (ADVICE r10 — the old "evict everything for this session"
-    thrashed the memo on an alternating sf0.01/sf0.1 sweep, and could
-    unpersist localCheckpoint blocks out from under a still-held result
-    DataFrame of the OTHER corpus, truncating its lineage):
 
-    1. stale fingerprints of THIS corpus dir are evicted (an in-place
-       mutation invalidates exactly its own entries). Caches whose keys
-       carry extra params (graph._EDGE_CACHE's band/symmetric variants)
-       pass `keep_fingerprint` so CURRENT-listing siblings survive a
-       miss that is merely a new param combination;
-    2. the number of DISTINCT corpus dirs memoized per session is
-       bounded at `max_dirs` TOTAL including the current dir (the loop
-       keeps at most max_dirs-1 others), oldest-inserted evicted first,
-       so a long-lived session iterating many corpora still cannot
-       accumulate unbounded persisted state.
-
-    `unpersist` receives each evicted VALUE (caches store different
-    shapes: a DataFrame, a tuple of DataFrames, a (df, bound) pair).
-
-    Thread-safe under _MEMO_LOCK (re-entrant): callers that hold the
-    lock around their own lookup+insert nest harmlessly; direct callers
-    get the mutation guarded here (ADVICE r12)."""
-    free = unpersist or (lambda _v: None)
+def once_in(kind: str, path: str, marker: str, build) -> bool:
+    """Run ``build(path)`` once per ``marker`` file in ``path``: under an
+    exclusive ``flock`` on ``path/.lock``, re-check the marker (the loser
+    of a race reuses the winner's work), build, and touch the marker
+    LAST so a half-written build is never served. True when this call
+    built. In-place stages (append, delete, compact) chain markers in a
+    dir ``build_once`` already made."""
+    done = os.path.join(path, marker)
+    built = False
+    if not os.path.exists(done):
+        os.makedirs(path, exist_ok=True)
+        with open(os.path.join(path, ".lock"), "a") as lockf:
+            fcntl.flock(lockf, fcntl.LOCK_EX)
+            if not os.path.exists(done):
+                build(path)
+                open(done, "w").close()
+                built = True
     with _MEMO_LOCK:
-        for k in [
-            k for k in cache
-            if k[0] is spark and k[1] == sf_dir
-            and (keep_fingerprint is None or k[2] != keep_fingerprint)
-        ]:
-            free(cache.pop(k))
-        while True:
-            other_dirs: list = []
-            for k in cache:
-                if k[0] is spark and k[1] != sf_dir and k[1] not in other_dirs:
-                    other_dirs.append(k[1])
-            if len(other_dirs) < max_dirs:
-                return
-            oldest = other_dirs[0]
-            for k in [k for k in cache if k[0] is spark and k[1] == oldest]:
-                free(cache.pop(k))
+        MEMO_STATS[kind, "build" if built else "hit"] += 1
+    return built
+
+
+def _remove_if_idle(path: str) -> None:
+    try:
+        lockf = open(os.path.join(path, ".lock"), "a")
+    except OSError:
+        return
+    with lockf:
+        try:
+            fcntl.flock(lockf, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except OSError:
+            return
+        shutil.rmtree(path, ignore_errors=True)
 
 
 _SPLIT_BYTES = 128 * 1024 * 1024  # spark.sql.files.maxPartitionBytes default

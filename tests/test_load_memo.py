@@ -4,7 +4,7 @@ The memo caches the UNEXECUTED scan DataFrame per (session, dir,
 listing-fingerprint, table). It must (1) serve hits without a fresh
 spark.read.parquet, (2) keep same-dir sibling tables warm across a miss
 on a new table name, (3) miss — and re-read — after an in-place file
-mutation (the _SH_CACHE staleness contract), and (4) never change what a
+mutation (the session_memo staleness contract), and (4) never change what a
 query computes (values come from the parquet files on every action).
 """
 

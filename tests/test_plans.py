@@ -343,15 +343,16 @@ def test_bpe_apply_shuffle_free(spark, sf_dir):
     # raw-text shuffle bought a measured 7x on the fold, r6). Any Python
     # node means someone broke the codegen fold.
     # Pin the COLD derivation: since the r11 bounded memo policy, the
-    # _BPE_ENC_CACHE entry survives earlier test files, and explaining
+    # "bpe_encoded" memo entry survives earlier test files, and explaining
     # the memo HIT renders the persisted relation's STORED subtree
     # (whose formatted form counts extra Exchange detail nodes even
     # though a hit executes zero shuffles) — clear it so the pin
     # measures the op's own plan regardless of session history.
-    from dig_aggregator_core_spark.operators import training
+    from dig_aggregator_core_spark import tables
 
-    for k in list(training._BPE_ENC_CACHE):
-        training._BPE_ENC_CACHE.pop(k).unpersist()
+    memo = tables._MEMOS.get("bpe_encoded", {})
+    for k in list(memo):
+        memo.pop(k).unpersist()
     plan = plan_of("tokenizer_bpe_apply", spark, sf_dir)
     assert n_shuffles(plan) <= 1
     assert "EvalPython" not in plan and "InPandas" not in plan

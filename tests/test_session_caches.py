@@ -1,6 +1,7 @@
-"""Contract tests for the session-scoped derivation memos — the shingle
-cache (dedup._SH_CACHE), the banded-edge cache (graph._EDGE_CACHE) and
-the BPE-encode cache (training._BPE_ENC_CACHE). Each exists so a session
+"""Contract tests for the session-scoped derivation memos
+(tables.session_memo) — the shingle memo (dedup._shingled), the
+banded-edge memo (graph.banded_cooc_edges) and the BPE-encode memo
+(training._bpe_encoded). Each exists so a session
 pays a heavy shared derivation once; these pin the parts a refactor
 could silently break: hit-returns-same-frame, parameter keys are
 distinct, switching corpus dir evicts (no stale data, no unbounded
@@ -16,6 +17,7 @@ import pytest
 # (pytest.ini); the full suite runs with -m "slow or not slow"
 pytestmark = pytest.mark.slow
 
+from dig_aggregator_core_spark import tables
 from dig_aggregator_core_spark.operators import dedup, graph, training
 
 
@@ -42,8 +44,8 @@ def test_banded_edges_dir_switch_keeps_recent_bounded(spark, sf_dir, tmp_path):
     """ADVICE r10: switching corpus dir must NOT evict the other dir's
     entry (an alternating sf0.01/sf0.1 sweep would thrash the memo and
     truncate lineage under still-held results) — but the number of
-    distinct dirs memoized per session stays BOUNDED (evict_memo's
-    max_dirs, oldest first)."""
+    distinct dirs memoized per session stays BOUNDED (session_memo's
+    _MEMO_MAX_DIRS, oldest first)."""
     import pyspark.sql.functions as F
     import datetime
 
@@ -67,7 +69,7 @@ def test_banded_edges_dir_switch_keeps_recent_bounded(spark, sf_dir, tmp_path):
     # but distinct dirs are bounded: after >max_dirs others, the oldest go
     for i in range(1, 6):
         graph.banded_cooc_edges(spark, mk(i))
-    dirs = {k[1] for k in graph._EDGE_CACHE if k[0] is spark}
+    dirs = {k[1] for k in tables._MEMOS["banded_edges"] if k[0] is spark}
     # bound is max_dirs TOTAL including the current dir (the loop keeps
     # at most max_dirs-1 = 3 others) — r12 ADVICE doc alignment
     assert len(dirs) <= 4
@@ -81,8 +83,9 @@ def test_bpe_encode_hit_and_row_parity(spark, sf_dir):
     # cold recompute (cache cleared WITH unpersist — a bare clear()
     # orphans the persisted relation, which keeps participating in
     # Spark's cached-plan substitution for the rest of the session)
-    for k in list(training._BPE_ENC_CACHE):
-        training._BPE_ENC_CACHE.pop(k).unpersist()
+    memo = tables._MEMOS["bpe_encoded"]
+    for k in list(memo):
+        memo.pop(k).unpersist()
     cold = training._bpe_encoded(spark, sf_dir)
     assert cold is not a
     assert sorted(map(tuple, cold.collect())) == sorted(
@@ -178,8 +181,8 @@ def test_dir_fingerprint_oserror_never_aliases(monkeypatch, tmp_path):
 
 def test_cc_full_labels_memo_shared_across_consumers(spark, sf_dir):
     """dedup_cc_delete and dedup_connected_components share ONE stored
-    full-graph labeling (_full_cc_labels / _CC_FULL_CACHE). Regression:
-    a duplicate module-level _CC_FULL_CACHE declaration once made the
+    full-graph labeling (_full_cc_labels' "cc_full" memo). Regression:
+    a duplicate module-level cache declaration once made the
     two functions collide on the same key with different column shapes
     ((u, component) vs (doc_id, component)) — running cc_delete FIRST
     then the registered CC query raised UNRESOLVED_USING_COLUMN in
