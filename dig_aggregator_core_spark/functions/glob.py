@@ -1,9 +1,9 @@
 """Glob -> regex compiler with capture extraction and partial (prefix) mode.
 
 Re-implements the semantics of the reference's parser-combinator glob
-(reference Glob.scala:4-67) as a compiled Python regex usable both
-driver-side (`Glob.matches` / `Glob.captures`) and column-side
-(`col.rlike(glob.regex(partial))`, `regexp_extract(col, glob.regex(), i)`).
+(reference Glob.scala:4-67) as one unanchored regex, `Glob.pattern`, that
+Python's `re` runs one path at a time (`Glob.matches` / `Glob.captures`) and
+RE2 runs in Arrow (`Source.inputs` matches whole listings with it).
 
 Semantics (pinned by the ported reference tests in tests/test_glob.py):
 - a glob is an alternation of exact text runs and ``*`` captures;
@@ -11,15 +11,15 @@ Semantics (pinned by the ported reference tests in tests/test_glob.py):
   glob character that follows it (which must then be present), never
   crossing the path separator; a trailing ``*`` matches to the separator;
 - captures may match empty;
-- full match anchors both ends; partial match anchors only the start
-  (Glob.scala:64-66 — used for S3 prefix matching);
+- full match anchors both ends, exactly (a trailing newline is not
+  ignored); partial match anchors only the start (Glob.scala:64-66 —
+  used for S3 prefix matching);
 - capture extraction is always prefix-mode (Glob.scala:53-58).
 """
 
 from __future__ import annotations
 
 import re
-from functools import cached_property
 
 # the reference's validChar: letters, digits, or one of these
 # (Glob.scala:12) — anything else in a glob is a parse error.
@@ -37,7 +37,9 @@ class Glob:
             raise ValueError("Empty glob")
         self.glob = glob
         self.path_sep = path_sep
-        self._pattern = self._compile()
+        # unanchored; the same text is valid in Python `re` and RE2
+        self.pattern = self._compile()
+        self._re = re.compile(self.pattern)
 
     def _compile(self) -> str:
         sep = re.escape(self.path_sep)
@@ -69,29 +71,15 @@ class Glob:
                 raise ValueError(f"Invalid character {c!r} in glob {g!r}")
         return "".join(out)
 
-    def regex(self, partial: bool = False) -> str:
-        """The compiled regex, anchored at the start; add the end anchor
-        unless partial. Usable directly in Spark `rlike` / `regexp_extract`
-        and DuckDB `regexp_matches`."""
-        return "^" + self._pattern + ("" if partial else "$")
-
-    @cached_property
-    def _full(self) -> re.Pattern:
-        return re.compile(self.regex(partial=False))
-
-    @cached_property
-    def _prefix(self) -> re.Pattern:
-        return re.compile(self.regex(partial=True))
-
     def matches(self, path: str, partial: bool = False) -> bool:
         """True if the glob matches `path` (prefix-only when partial)."""
-        pat = self._prefix if partial else self._full
-        return pat.match(path) is not None
+        m = self._re.match(path) if partial else self._re.fullmatch(path)
+        return m is not None
 
     def captures(self, path: str) -> list[str] | None:
         """Wildcard captures (prefix-mode, like the reference's extractor:
         Glob.scala:53-58); None if no match."""
-        m = self._prefix.match(path)
+        m = self._re.match(path)
         return list(m.groups()) if m else None
 
     def __repr__(self) -> str:

@@ -1,11 +1,6 @@
-"""S3-key-style path string functions (reference Implicits.scala:15-32),
-as plain Python (driver-side) and as column expressions (Spark-side).
-"""
+"""S3-key-style path string functions (reference Implicits.scala:15-32)."""
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 
 def basename(key: str) -> str:
@@ -24,13 +19,3 @@ def common_prefix(key: str) -> str:
     d = dirname(key)
     n = d.find("*")
     return d[:n] if n >= 0 else d
-
-
-def basename_col(col: Column) -> Column:
-    """Column form: '' when the key ends with '/'."""
-    return F.regexp_extract(col, "([^/]*)$", 1)
-
-
-def dirname_col(col: Column) -> Column:
-    """Column form: up to and including the last '/' ('' if none)."""
-    return F.regexp_extract(col, "^(.*/)", 1)

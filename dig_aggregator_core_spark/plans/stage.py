@@ -3,7 +3,8 @@
 A stage declares `sources` (input families), `rules` (input -> Outputs
 routing), and `make(output)` (the job). Running a stage:
 
-1. discovers inputs (lister under each source's common prefix),
+1. discovers inputs (lister under each source's common prefix, each prefix
+   listed once per run; the keys are glob-matched in Arrow),
 2. builds the output map — rules, inversion, grouping, ALL-propagation,
    missed-input validation, only/exclude filtering (Stage.scala:168-216),
 3. computes the DELTA of work as a left-anti join against the runs ledger
@@ -23,7 +24,8 @@ from __future__ import annotations
 
 import logging
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
+from functools import cache
 from typing import Callable, Optional
 
 from .context import Context
@@ -113,18 +115,13 @@ class Stage:
     def build_output_map(self, inputs: list[Input], opts: Opts) -> OutputMap:
         routed = [(i, self.rules(i)) for i in inputs]
 
-        named = [
-            (name, i)
-            for i, out in routed
-            if isinstance(out, Named)
-            for name in out.names
-        ]
+        output_map: OutputMap = {}
+        for i, out in routed:
+            if isinstance(out, Named):
+                for name in out.names:
+                    output_map.setdefault(name, set()).add(i)
         ignored = {i for i, out in routed if out is NULL}
         in_all = {i for i, out in routed if out is ALL}
-
-        output_map: OutputMap = {}
-        for name, i in named:
-            output_map.setdefault(name, set()).add(i)
 
         # ALL-inputs propagate into every named output (Stage.scala:186-192)
         final_map = {o: s | in_all for o, s in output_map.items()}
@@ -153,9 +150,11 @@ class Stage:
     def get_work(self, opts: Opts) -> OutputMap:
         """Discover inputs, build the output map, and subtract
         already-processed work via the ledger anti-join."""
+        # sources sharing a common prefix share one LIST per call
+        context = replace(self.context, lister=cache(self.context.lister))
         inputs: list[Input] = []
         for source in self.sources:
-            inputs.extend(source.inputs(self.context))
+            inputs.extend(source.inputs(context))
 
         output_map = self.build_output_map(inputs, opts)
 

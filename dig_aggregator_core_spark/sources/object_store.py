@@ -33,6 +33,8 @@ from typing import Callable, Optional
 
 from pyspark.sql import SparkSession
 
+from ..functions.paths import dirname
+
 Lister = Callable[[str], list]
 
 
@@ -67,10 +69,10 @@ def hadoop_lister(spark: SparkSession, root: str) -> Lister:
     (key, mtime) pairs relative to the root, exactly the local lister's
     contract (Input.scala:38-45's LIST shape).
 
-    The walk is a single recursive LIST against the store's namespace —
+    The walk is a single recursive LIST below the prefix's directory —
     for S3 that is the flat paginated LIST call, not a per-directory
-    crawl. Catalogs beyond driver metadata scale belong in
-    sources/listing.py's DataFrame form."""
+    crawl. Matching the listed keys against a Source's globs is one
+    Arrow regex pass (plans.inputs.Source.inputs)."""
     root = root.rstrip("/")
 
     def ls(prefix: str) -> list[tuple[str, datetime]]:
@@ -78,13 +80,14 @@ def hadoop_lister(spark: SparkSession, root: str) -> Lister:
         hconf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
         jpath = jvm.org.apache.hadoop.fs.Path(root)
         fs = jpath.getFileSystem(hconf)
+        top = jvm.org.apache.hadoop.fs.Path(f"{root}/{dirname(prefix)}")
         # drop-in parity with local_lister (ADVICE r10): a nonexistent
-        # root lists as EMPTY (os.walk semantics), it does not raise —
-        # a method pointed at a not-yet-created input root sees "no
-        # inputs yet" on either lister
-        if not fs.exists(jpath):
+        # root or prefix directory lists as EMPTY (os.walk semantics), it
+        # does not raise — a method pointed at a not-yet-created input
+        # root sees "no inputs yet" on either lister
+        if not fs.exists(top):
             return []
-        it = fs.listFiles(jpath, True)
+        it = fs.listFiles(top, True)
         out: list[tuple[str, datetime]] = []
         base = fs.makeQualified(jpath).toString().rstrip("/") + "/"
         while it.hasNext():

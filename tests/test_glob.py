@@ -4,6 +4,7 @@ ImplicitsTest.scala, InputTest.scala, OptsTest.scala (every cited case)."""
 from __future__ import annotations
 
 from datetime import datetime
+from types import SimpleNamespace
 
 import pytest
 
@@ -151,6 +152,26 @@ def test_source_factories():
     assert Source.success("out/*/").basename == "_SUCCESS"
     with pytest.raises(ValueError):
         Source.raw("nofolder")
+
+
+def test_full_match_rejects_trailing_newline():
+    """Not a reference case: Python's `$` also matches before a final
+    newline. A full match ends at the end of the key, as in RE2, which
+    `Source.inputs` matches with."""
+    assert not Glob("metadata").matches("metadata\n")
+    assert Glob("metadata").matches("metadata\n", partial=True)
+    source = Source("cat/*/", "metadata")
+    key = "cat/x/metadata\n"
+    assert not source.matches(inp(key))
+    assert source.inputs(SimpleNamespace(lister=lambda p: [(key, NOW)])) == []
+
+
+def test_basename_glob_with_separator_matches_nothing():
+    """A basename never holds '/', so neither the per-key match nor
+    the Arrow match of the whole key may accept one."""
+    source = Source("a/", "b/c")
+    assert not source.matches(inp("a/b/c"))
+    assert source.inputs(SimpleNamespace(lister=lambda p: [("a/b/c", NOW)])) == []
 
 
 # --- OptsTest.scala ---

@@ -1,19 +1,15 @@
-"""Sinks (S5/S10) and the DataFrame-native listing/glob path (S1, P5-P8):
-driver-side Source semantics must agree with the rlike/regexp_extract form.
+"""Sinks (S5/S10) and columnar input discovery (S1, P5-P8): the Arrow
+match in `Source.inputs` must agree with `Source.matches`, key by key.
 """
 
 from __future__ import annotations
 
 from datetime import datetime
+from types import SimpleNamespace
 
 from pyspark.sql import functions as F
 
 from dig_aggregator_core_spark.plans.inputs import Input, Source
-from dig_aggregator_core_spark.sources.listing import (
-    extract_captures,
-    inputs_df,
-    match_source,
-)
 from dig_aggregator_core_spark.sources.sinks import (
     write_json_partitioned,
     write_merged_csv,
@@ -32,32 +28,29 @@ LISTING = [
 ]
 
 
-def test_match_source_df_agrees_with_driver(spark):
-    df = inputs_df(spark, LISTING)
+CONTEXT = SimpleNamespace(lister=lambda prefix: LISTING)
+
+
+def test_source_inputs_agree_with_matches():
     for source in [
         Source("a/*/", "*"),
         Source("b/test=*/", "whee"),
         Source("variants/*/*/", "metadata"),
         Source("variants/*/*/", "part-*"),
     ]:
-        spark_keys = {r.key for r in match_source(df, source).collect()}
-        driver_keys = {
-            k for k, v in LISTING if source.matches(Input(k, v))
-        }
-        assert spark_keys == driver_keys, source
+        arrow_keys = {i.key for i in source.inputs(CONTEXT)}
+        expected = {k for k, v in LISTING if source.matches(Input(k, v))}
+        assert arrow_keys == expected, source
 
 
-def test_extract_captures_df(spark):
-    df = inputs_df(spark, LISTING)
+def test_source_inputs_captures():
     source = Source("variants/*/*/", "part-*")
-    out = extract_captures(
-        match_source(df, source), source, ["dataset", "phenotype", "part"]
-    ).collect()
+    out = source.inputs(CONTEXT)
     assert len(out) == 1
     row = out[0]
-    assert (row.dataset, row.phenotype, row.part) == ("ds1", "T2D", "00000")
-    # agrees with the driver-side extractor
-    assert source.captures(Input(row.key, NOW)) == ["ds1", "T2D", "00000"]
+    assert row == Input("variants/ds1/T2D/part-00000", NOW)
+    dataset, phenotype, part = source.captures(row)
+    assert (dataset, phenotype, part) == ("ds1", "T2D", "00000")
 
 
 def test_write_merged_csv_single_header(spark, tmp_path):

@@ -12,10 +12,11 @@ import pytest
 
 pytestmark = pytest.mark.slow
 
+import os
 from datetime import datetime, timedelta
+from types import SimpleNamespace
 
-
-from dig_aggregator_core_spark.plans.context import Context
+from dig_aggregator_core_spark.plans.context import Context, local_lister
 from dig_aggregator_core_spark.plans.inputs import Input, Source
 from dig_aggregator_core_spark.plans.method import Method
 from dig_aggregator_core_spark.plans.opts import Opts
@@ -298,3 +299,63 @@ def test_job_context_prefix_and_test_mode(context):
     assert seen["prefix"] == "test/TestMethod/S"
     assert seen["dryrun"] is True
     assert seen["output"] == "foo"
+
+
+def test_get_work_lists_each_prefix_once_per_call(context):
+    """Sources sharing a common prefix share one LIST within a get_work;
+    the next get_work lists again, so it sees new objects."""
+    listing = [("a/foo/bar", T0), ("a/foo/metadata", T0)]
+    calls = []
+
+    def lister(prefix):
+        calls.append(prefix)
+        return [kv for kv in listing if kv[0].startswith(prefix)]
+
+    context.lister = lister
+
+    class S(TestStage):
+        sources = [Source("a/*/", "bar"), Source("a/*/", "metadata")]
+
+    s = S(context)
+    context.runs.migrate()
+    assert {i.key for i in s.get_work(Opts())["foo"]} == {
+        "a/foo/bar",
+        "a/foo/metadata",
+    }
+    assert calls == ["a/"]
+    listing.append(("a/whee/bar", T0))
+    assert set(s.get_work(Opts())) == {"foo", "whee"}
+    assert calls == ["a/", "a/"]
+
+
+def test_non_utf8_junk_key_changes_no_work(context, tmp_path):
+    """A non-UTF-8 file name reaches Python surrogate-escaped, which an
+    Arrow string cannot hold; the sources match it as before: junk that
+    no glob accepts leaves the work unchanged."""
+    data = tmp_path / "data"
+    for key in ["cat/g0/part-00000", "cat/g0/metadata", "cat/g1/part-00000"]:
+        (data / key).parent.mkdir(parents=True, exist_ok=True)
+        (data / key).write_text("")
+    context.lister = local_lister(str(data))
+
+    class S(TestStage):
+        part = Source("cat/*/", "part-*")
+        sources = [part, Source("cat/*/", "metadata")]
+
+        def rules(self, input_):
+            caps = self.part.captures(input_)
+            return Named(caps[0]) if caps else ALL
+
+    s = S(context)
+    context.runs.migrate()
+    before = s.get_work(Opts())
+    assert set(before) == {"g0", "g1"}
+    with open(os.fsencode(data / "cat" / "g0") + b"/\xff.tmp", "wb"):
+        pass
+    assert "cat/g0/\udcff.tmp" in {k for k, _ in context.lister("cat/")}
+    assert s.get_work(Opts()) == before
+    # a junk name a glob does accept is matched, as by Source.matches
+    junk = [("cat/\udcff/part-1", T0), ("cat/g0/part-1", T0)]
+    assert S.part.inputs(SimpleNamespace(lister=lambda p: junk)) == [
+        Input(k, v) for k, v in junk
+    ]
