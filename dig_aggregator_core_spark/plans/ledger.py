@@ -1,8 +1,20 @@
-"""Parquet-backed provenance ledgers: `runs` and `runstatus`.
+"""Provenance ledgers: `runs` and `runstatus`, defined once.
 
 Reproduces the reference's MySQL tables and their upsert semantics
 (reference runs.sql:1-12, Runs.scala:77-116; runstatus.sql:1-12,
-RunStatus.scala:56-128) on plain Parquet:
+RunStatus.scala:56-128). `RunsLedger`/`RunStatusLedger` own each table's
+schema, unique key, (project, method, stage) scope, row building and the
+RunStatus reset rule, and run them against a small storage backend — the
+primitives migrate/drop, read/snapshot, upsert on a key, set a timestamp
+column where a scope matches, and delete where it matches. Two backends
+implement them:
+
+- `_VersionedTable` below, plain Parquet (the default);
+- `sources.jdbcio.JdbcTable`, a database over JDBC — the reference's own
+  modality — behind the thin `JdbcRunsLedger`/`JdbcRunStatusLedger`
+  constructors there.
+
+The Parquet backend:
 
 - every write is a read-merge-write done on the driver in pyarrow: the
   current version is read as an Arrow table, merged (upsert on the unique
@@ -37,6 +49,8 @@ to the microsecond; versions Spark wrote (INT96) read as the same instants.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import re
 import shutil
@@ -87,11 +101,24 @@ RUNSTATUS_SCHEMA = T.StructType(
 TS = pa.timestamp("us", tz="UTC")
 _ARROW_TYPES = {T.StringType(): pa.string(), T.TimestampType(): TS}
 
+# the columns every ledger row is scoped by (Runs.scala:106-116)
+SCOPE = ("project", "method", "stage")
+
 
 def _arrow_schema(schema: T.StructType) -> pa.Schema:
     return pa.schema(
         [pa.field(f.name, _ARROW_TYPES[f.dataType], f.nullable) for f in schema]
     )
+
+
+def _match(where: dict, col=pc.field):
+    """`where` ({column: value, or a list of values}) as an Arrow filter,
+    or as a Spark one with `col=F.col`."""
+    conds = [
+        col(c).isin(v) if isinstance(v, list) else col(c) == v
+        for c, v in where.items()
+    ]
+    return functools.reduce(operator.and_, conds)
 
 
 def utc_now() -> datetime:
@@ -224,14 +251,16 @@ class _VersionedTable:
         t = pq.read_table(f"{self.path}/v={v}", coerce_int96_timestamp_unit="us")
         return t.select(self.arrow_schema.names).cast(self.arrow_schema)
 
-    def snapshot(self) -> pa.Table:
-        """The newest committed version as an Arrow table. Readers take no
-        lock, so a version GC'd between listing and reading is re-listed."""
+    def snapshot(self, where: Optional[dict] = None) -> pa.Table:
+        """The newest committed version as an Arrow table, or its rows
+        `where` matches. Readers take no lock, so a version GC'd between
+        listing and reading is re-listed."""
         for _ in range(self._CAS_MAX_RETRIES):
             try:
-                return self._read_arrow(self._latest())
+                t = self._read_arrow(self._latest())
             except FileNotFoundError:
                 continue
+            return t if where is None else t.filter(_match(where))
         raise RuntimeError(f"ledger versions at {self.path!r} kept vanishing")
 
     # ------------------------------------------------- CAS commit protocol
@@ -368,7 +397,25 @@ class _VersionedTable:
                 )
             )
 
-    def delete_where(self, cond: pc.Expression) -> int:
+    def set_where(self, where: dict, col: str, ts: datetime) -> None:
+        """Set timestamp column `col` to `ts` on the rows `where` matches."""
+        hit = _match(where)
+        value = to_instants([ts])[0]
+
+        def merge(cur: pa.Table) -> pa.Table:
+            touched = cur.filter(hit)
+            i = cur.schema.get_field_index(col)
+            touched = touched.set_column(
+                i, cur.schema.field(i), pa.repeat(value, touched.num_rows)
+            )
+            return pa.concat_tables([cur.filter(~hit), touched])
+
+        with self.locked():
+            self._read_merge_commit(merge)
+
+    def delete_where(self, where: dict) -> int:
+        """Delete the rows `where` matches; returns how many."""
+        cond = _match(where)
         deleted = 0
         with self.locked():
 
@@ -383,16 +430,25 @@ class _VersionedTable:
 
 
 class _Ledger:
-    """What both ledgers share: one versioned table scoped to a (project,
-    method), read per stage."""
+    """What both ledgers share: one table scoped to a (project, method),
+    read per stage. The table is this module's `_VersionedTable` unless a
+    subclass's `_open` returns another backend with the same primitives
+    (migrate, drop, read, snapshot, upsert, set_where, delete_where and
+    `arrow_schema`), as `sources.jdbcio.JdbcTable` does. Rows are matched
+    by `where` dicts ({column: value, or a list of values})."""
 
     SCHEMA: T.StructType
+    NAME: str  # the table's name where a backend names tables
+    KEY: list[str]
 
     def __init__(self, spark: SparkSession, path: str, project: str, method: str):
-        self.table = _VersionedTable(spark, path, self.SCHEMA)
+        self.table = self._open(spark, path)
         self.spark = spark
         self.project = project
         self.method = method
+
+    def _open(self, spark: SparkSession, path: str):
+        return _VersionedTable(spark, path, self.SCHEMA)
 
     def migrate(self) -> None:
         self.table.migrate()
@@ -403,34 +459,29 @@ class _Ledger:
     def all(self) -> list:
         return self.table.read().collect()
 
+    def _where(self, stage: str, **more) -> dict:
+        """This ledger's scope for `stage`, plus `more` column matches."""
+        return dict(zip(SCOPE, (self.project, self.method, stage)), **more)
+
     def _scope(self, stage: str) -> pc.Expression:
-        return (
-            (pc.field("project") == self.project)
-            & (pc.field("method") == self.method)
-            & (pc.field("stage") == stage)
-        )
+        return _match(self._where(stage))
 
     def _new(self, stage: str, n: int, columns: dict) -> pa.Table:
         """`n` rows of this ledger's scope for `stage`, plus `columns`."""
-        scope = {"project": self.project, "method": self.method, "stage": stage}
         return pa.table(
-            {**{k: [v] * n for k, v in scope.items()}, **columns},
+            {**{k: [v] * n for k, v in self._where(stage).items()}, **columns},
             schema=self.table.arrow_schema,
         )
 
     def of(self, stage: str) -> DataFrame:
         """All ledger rows for this (project, method, stage)
         (reference Runs.scala:106-116)."""
-        return self.table.read().filter(
-            (F.col("project") == self.project)
-            & (F.col("method") == self.method)
-            & (F.col("stage") == stage)
-        )
+        return self.table.read().filter(_match(self._where(stage), F.col))
 
     def delete(self, stage: str, output: str) -> int:
-        return self.table.delete_where(
-            self._scope(stage) & (pc.field("output") == output)
-        )
+        """Delete this stage's rows for `output`; returns how many
+        (reference Runs.scala:108-116)."""
+        return self.table.delete_where(self._where(stage, output=output))
 
 
 class RunsLedger(_Ledger):
@@ -439,6 +490,7 @@ class RunsLedger(_Ledger):
     output) — reference runs.sql:11."""
 
     SCHEMA = RUNS_SCHEMA
+    NAME = "runs"
     KEY = ["project", "method", "stage", "input", "output"]
 
     def insert(
@@ -485,10 +537,8 @@ class RunsLedger(_Ledger):
         """(output, input, timestamp) of this stage's rows as an Arrow
         table, read on the driver without a Spark job — what
         Stage.get_work anti-joins against."""
-        return (
-            self.table.snapshot()
-            .filter(self._scope(stage))
-            .select(["output", "input", "timestamp"])
+        return self.table.snapshot(self._where(stage)).select(
+            ["output", "input", "timestamp"]
         )
 
 
@@ -498,6 +548,7 @@ class RunStatusLedger(_Ledger):
     existing key RESETS started/ended (RunStatus.scala:79-83)."""
 
     SCHEMA = RUNSTATUS_SCHEMA
+    NAME = "runstatus"
     KEY = ["project", "method", "stage", "output"]
 
     def insert(self, stage: str, output: str, now: Optional[datetime] = None) -> None:
@@ -528,21 +579,8 @@ class RunStatusLedger(_Ledger):
     def _set_many(
         self, stage: str, outputs: list[str], col: str, ts: datetime
     ) -> None:
-        if not outputs:
-            return
-        hit = self._scope(stage) & pc.field("output").isin(list(outputs))
-        value = to_instants([ts])[0]
-
-        def merge(cur: pa.Table) -> pa.Table:
-            touched = cur.filter(hit)
-            i = cur.schema.get_field_index(col)
-            touched = touched.set_column(
-                i, cur.schema.field(i), pa.repeat(value, touched.num_rows)
-            )
-            return pa.concat_tables([cur.filter(~hit), touched])
-
-        with self.table.locked():
-            self.table._read_merge_commit(merge)
+        if outputs:
+            self.table.set_where(self._where(stage, output=list(outputs)), col, ts)
 
     def start(self, stage: str, output: str, now: Optional[datetime] = None) -> None:
         self._set_many(stage, [output], "started", now or utc_now())

@@ -1,4 +1,5 @@
-"""JDBC source/sink + MERGE upsert over the bundled Derby embedded driver.
+"""JDBC source/sink + MERGE upsert over the bundled Derby embedded driver,
+and the database backend of the provenance ledgers.
 
 The reference's provenance ledger is not a file format at all — it is a
 MySQL database reached over JDBC (reference Db.scala:53 builds the
@@ -20,7 +21,12 @@ Spark-first:
   ``ON DUPLICATE KEY UPDATE`` (Derby, Postgres 15+, Oracle, SQL Server
   and MySQL 8.0.19+ all accept this MERGE). The merge is transactional
   in the database, so concurrent writers serialize there, exactly as the
-  reference's MySQL ledger does.
+  reference's MySQL ledger does;
+- **ledger backend**: ``JdbcTable`` keeps a ledger table in the
+  database. ``runs`` and ``runstatus`` are defined once, in
+  plans/ledger.py, against two backends — Parquet there and this one;
+  ``JdbcRunsLedger``/``JdbcRunStatusLedger`` only put those ledgers on
+  a JdbcTable (the DDL is derived from the ledger's schema and key).
 
 In this sandbox the engine is Apache Derby's embedded driver
 (derby-10.16.1.1.jar ships in ``$SPARK_HOME/jars``, so it is already on
@@ -42,6 +48,16 @@ import tempfile
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..plans.ledger import (
+    SCOPE,
+    RunsLedger,
+    RunStatusLedger,
+    _arrow_schema,
+    _match,
+)
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
@@ -119,8 +135,6 @@ def varchar_types(df: DataFrame, length: int = 1024) -> str:
     """createTableColumnTypes mapping every string column to
     VARCHAR(length) — Derby's CLOB default cannot sit in a MERGE ON
     clause or a unique key."""
-    from pyspark.sql import types as T
-
     return ", ".join(
         f"{f.name} VARCHAR({length})"
         for f in df.schema.fields
@@ -170,6 +184,25 @@ def _connect(spark: SparkSession, url: str, user: Optional[str] = None,
             url, user, password or ""
         )
     return jvm.java.sql.DriverManager.getConnection(url)
+
+
+def table_exists(
+    spark: SparkSession, url: str, table: str,
+    user: Optional[str] = None, password: Optional[str] = None,
+) -> bool:
+    """Whether the catalog holds `table` (exact, case-sensitive name).
+    Quiets Derby first: a probe that is the JVM's first Derby call would
+    otherwise boot it with derby.log in the working directory."""
+    _quiet_derby(spark)
+    conn = _connect(spark, url, user, password)
+    try:
+        rs = conn.getMetaData().getTables(None, None, table, None)
+        try:
+            return bool(rs.next())
+        finally:
+            rs.close()
+    finally:
+        conn.close()
 
 
 def jdbc_execute(
@@ -389,33 +422,148 @@ def jdbc_upsert(
             raise
 
 
-class JdbcRunsLedger:
-    """The reference `runs` table on its NATIVE modality: a JDBC
-    database with MERGE upsert (reference runs.sql:1-12 declares the
-    table + unique key; Runs.scala:77-116 the insert/of/delete
-    surface). Twin of plans.ledger.RunsLedger (parquet), same public
-    API, pinned by the same upsert-semantics test."""
+def _lit(value) -> str:
+    """A SQL string literal. Scope values come from driver code, not user
+    input, but quotes are escaped anyway."""
+    return "'" + str(value).replace("'", "''") + "'"
 
-    KEY = ["project", "method", "stage", "input", "output"]
+
+def _sql_where(where: dict) -> str:
+    """`where` ({column: value, or a list of values}) as a SQL condition."""
+    return " AND ".join(
+        f"{_q(c)} IN ({', '.join(_lit(x) for x in sorted(v))})"
+        if isinstance(v, list)
+        else f"{_q(c)} = {_lit(v)}"
+        for c, v in where.items()
+    )
+
+
+def _ts_literal(dt) -> str:
+    """A Derby/standard TIMESTAMP literal with microsecond precision
+    (JDBC escape syntax, accepted by Derby, MySQL and Postgres)."""
+    return "{ts '" + dt.strftime("%Y-%m-%d %H:%M:%S.%f") + "'}"
+
+
+class JdbcTable:
+    """A ledger table in a database: the storage primitives
+    plans.ledger's ledgers run on (the Parquet backend is
+    plans.ledger._VersionedTable), here as SQL over JDBC. The DDL is
+    derived from the ledger's schema and key (reference runs.sql:1-12,
+    runstatus.sql:1-12): scope columns VARCHAR(200), other strings
+    VARCHAR(1024), timestamps TIMESTAMP, NOT NULL where the schema says
+    so, and a `<table>_uk` UNIQUE constraint on the key — the key the
+    MERGE upsert rides on."""
+
+    def __init__(
+        self, spark: SparkSession, url: str, name: str, schema, key,
+        driver: str = DERBY_DRIVER,
+        user: Optional[str] = None, password: Optional[str] = None,
+    ):
+        self.spark = spark
+        self.url = url
+        self.name = name
+        self.schema = schema
+        self.key = list(key)
+        self.arrow_schema = _arrow_schema(schema)
+        self.driver = driver
+        self.user = user
+        self.password = password
+
+    def _execute(self, *statements: str) -> list:
+        return jdbc_execute(
+            self.spark, self.url, *statements,
+            user=self.user, password=self.password,
+        )
+
+    def _ddl(self) -> str:
+        def sql_type(f) -> str:
+            if isinstance(f.dataType, T.TimestampType):
+                return "TIMESTAMP"
+            assert isinstance(f.dataType, T.StringType), f
+            return f"VARCHAR({200 if f.name in SCOPE else 1024})"
+
+        cols = [
+            f"{_q(f.name)} {sql_type(f)}" + ("" if f.nullable else " NOT NULL")
+            for f in self.schema.fields
+        ]
+        uk = ", ".join(_q(k) for k in self.key)
+        return (
+            f"CREATE TABLE {_q(self.name)} ({', '.join(cols)}, "
+            f"CONSTRAINT {_q(self.name + '_uk')} UNIQUE ({uk}))"
+        )
+
+    def migrate(self) -> None:
+        """CREATE TABLE IF NOT EXISTS twin. Derby has no IF NOT EXISTS,
+        so existence is probed via the catalog."""
+        if not table_exists(
+            self.spark, self.url, self.name, self.user, self.password
+        ):
+            self._execute(self._ddl())
+
+    def drop(self) -> None:
+        self._execute(f"DROP TABLE {_q(self.name)}")
+
+    def read(self) -> DataFrame:
+        return read_jdbc(
+            self.spark, self.url, _q(self.name), driver=self.driver,
+            user=self.user, password=self.password,
+        )
+
+    def snapshot(self, where: dict):
+        """The rows `where` matches as an Arrow table in `arrow_schema` —
+        one Spark read of the database, the match pushed down to it."""
+        df = self.read().filter(_match(where, F.col))
+        return df.toArrow().cast(self.arrow_schema)
+
+    def upsert(self, new, key) -> None:
+        """Upsert the Arrow table `new` on `key` in ONE staged MERGE; the
+        matched arm replaces every non-key column (so a RunStatus
+        re-insert resets started/ended)."""
+        jdbc_upsert(
+            self.spark, self.url, self.name, self.spark.createDataFrame(new),
+            key, driver=self.driver, user=self.user, password=self.password,
+        )
+
+    def set_where(self, where: dict, col: str, ts) -> None:
+        self._execute(
+            f"UPDATE {_q(self.name)} SET {_q(col)} = {_ts_literal(ts)} "
+            f"WHERE {_sql_where(where)}"
+        )
+
+    def delete_where(self, where: dict) -> int:
+        """Returns the affected rows, like the reference's Quill delete
+        (Runs.scala:108-116)."""
+        return self._execute(
+            f"DELETE FROM {_q(self.name)} WHERE {_sql_where(where)}"
+        )[0]
+
+
+class _JdbcLedger:
+    """Puts a plans.ledger ledger on a JdbcTable at `url`; every ledger
+    method stays the one in plans.ledger."""
 
     def __init__(
         self, spark: SparkSession, url: str, project: str, method: str,
         driver: str = DERBY_DRIVER,
         user: Optional[str] = None, password: Optional[str] = None,
     ):
-        self.spark = spark
         self.url = url
-        self.project = project
-        self.method = method
         self.driver = driver
         self.user = user
         self.password = password
+        super().__init__(spark, url, project, method)
+
+    def _open(self, spark: SparkSession, url: str) -> JdbcTable:
+        return JdbcTable(
+            spark, url, self.NAME, self.SCHEMA, self.KEY,
+            driver=self.driver, user=self.user, password=self.password,
+        )
 
     @classmethod
     def from_secret(
         cls, spark: SparkSession, secret, project: str, method: str,
         schema: Optional[str] = None,
-    ) -> "JdbcRunsLedger":
+    ):
         """Build the ledger from secret-shaped config (reference
         Db.scala:11-17 builds its Db from an RdsConfig.Secret). `secret`
         is anything DbSecret.resolve accepts: a DbSecret, a dict, a JSON
@@ -426,258 +574,15 @@ class JdbcRunsLedger:
             driver=s.driver, user=s.username or None, password=s.password,
         )
 
-    def _execute(self, *statements: str) -> list:
-        return jdbc_execute(
-            self.spark, self.url, *statements,
-            user=self.user, password=self.password,
-        )
 
-    def migrate(self) -> None:
-        """CREATE TABLE IF NOT EXISTS twin (runs.sql:1-12). Derby has no
-        IF NOT EXISTS, so existence is probed via the catalog."""
-        _quiet_derby(self.spark)
-        conn = _connect(self.spark, self.url, self.user, self.password)
-        try:
-            rs = conn.getMetaData().getTables(None, None, "runs", None)
-            exists = rs.next()
-            rs.close()
-        finally:
-            conn.close()
-        if not exists:
-            self._execute(
-                'CREATE TABLE "runs" ('
-                '"project" VARCHAR(200) NOT NULL, '
-                '"method" VARCHAR(200) NOT NULL, '
-                '"stage" VARCHAR(200) NOT NULL, '
-                '"input" VARCHAR(1024) NOT NULL, '
-                '"version" TIMESTAMP NOT NULL, '
-                '"output" VARCHAR(1024) NOT NULL, '
-                '"timestamp" TIMESTAMP NOT NULL, '
-                # runs.sql:11 — the unique key the upsert rides on
-                'CONSTRAINT "runs_uk" UNIQUE '
-                '("project", "method", "stage", "input", "output"))',
-            )
-
-    def drop(self) -> None:
-        self._execute('DROP TABLE "runs"')
-
-    def _read(self) -> DataFrame:
-        return read_jdbc(
-            self.spark, self.url, '"runs"', driver=self.driver,
-            user=self.user, password=self.password,
-        )
-
-    def all(self) -> list:
-        return self._read().collect()
-
-    def insert(self, stage, output, inputs, now=None) -> None:
-        self.insert_many(stage, {output: list(inputs)}, now)
-
-    def insert_many(self, stage, outputs_map, now=None) -> None:
-        """Batched upsert covering every output of a run in ONE staged
-        MERGE (the parquet twin's one-versioned-write economics, here
-        one database round-trip)."""
-        from ..plans.ledger import RUNS_SCHEMA, utc_now
-
-        ts = now or utc_now()
-        rows = [
-            (self.project, self.method, stage, i.key, i.version, output, ts)
-            for output in sorted(outputs_map)
-            for i in sorted(outputs_map[output], key=lambda x: x.key)
-        ]
-        if not rows:
-            return
-        new = self.spark.createDataFrame(rows, RUNS_SCHEMA)
-        jdbc_upsert(
-            self.spark, self.url, "runs", new, self.KEY,
-            driver=self.driver, user=self.user, password=self.password,
-        )
-
-    def of(self, stage: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        return self._read().filter(
-            (F.col("project") == self.project)
-            & (F.col("method") == self.method)
-            & (F.col("stage") == stage)
-        )
-
-    def snapshot(self, stage: str):
-        """(output, input, timestamp) of this stage's rows as an Arrow
-        table — the Parquet twin's snapshot surface, so Stage.get_work has
-        one code path. Here it is one Spark read of the database."""
-        return self.of(stage).select("output", "input", "timestamp").toArrow()
-
-    def delete(self, stage: str, output: str) -> int:
-        # parameterless DELETE via one statement; Derby needs literal
-        # escaping — identifiers here come from test/driver code, not
-        # user input, but escape quotes anyway
-        def esc(s: str) -> str:
-            return s.replace("'", "''")
-
-        return self._execute(
-            'DELETE FROM "runs" WHERE '
-            f"\"project\" = '{esc(self.project)}' AND "
-            f"\"method\" = '{esc(self.method)}' AND "
-            f"\"stage\" = '{esc(stage)}' AND "
-            f"\"output\" = '{esc(output)}'",
-        )[0]
+class JdbcRunsLedger(_JdbcLedger, RunsLedger):
+    """The reference `runs` table on its native modality, a JDBC
+    database (reference runs.sql:1-12, Runs.scala:77-116)."""
 
 
-def _ts_literal(dt) -> str:
-    """A Derby/standard TIMESTAMP literal with microsecond precision
-    (JDBC escape syntax, accepted by Derby, MySQL and Postgres)."""
-    return "{ts '" + dt.strftime("%Y-%m-%d %H:%M:%S.%f") + "'}"
-
-
-class JdbcRunStatusLedger:
+class JdbcRunStatusLedger(_JdbcLedger, RunStatusLedger):
     """The reference `runstatus` table on its native modality (reference
-    runstatus.sql:1-12; RunStatus.scala:56-128): per-output lifecycle
-    with the re-insert-RESETS-started/ended rule (RunStatus.scala:79-83)
-    expressed as the MERGE's matched arm. Twin of
-    plans.ledger.RunStatusLedger — same public surface, so a Context can
-    swap the parquet ledgers for database ones (jdbc_context below)."""
-
-    KEY = ["project", "method", "stage", "output"]
-
-    def __init__(
-        self, spark: SparkSession, url: str, project: str, method: str,
-        driver: str = DERBY_DRIVER,
-        user: Optional[str] = None, password: Optional[str] = None,
-    ):
-        self.spark = spark
-        self.url = url
-        self.project = project
-        self.method = method
-        self.driver = driver
-        self.user = user
-        self.password = password
-
-    @classmethod
-    def from_secret(
-        cls, spark: SparkSession, secret, project: str, method: str,
-        schema: Optional[str] = None,
-    ) -> "JdbcRunStatusLedger":
-        """Secret-shaped constructor — see JdbcRunsLedger.from_secret."""
-        s = DbSecret.resolve(secret)
-        return cls(
-            spark, s.connection_string(schema), project, method,
-            driver=s.driver, user=s.username or None, password=s.password,
-        )
-
-    def _execute(self, *statements: str) -> list:
-        return jdbc_execute(
-            self.spark, self.url, *statements,
-            user=self.user, password=self.password,
-        )
-
-    def migrate(self) -> None:
-        _quiet_derby(self.spark)
-        conn = _connect(self.spark, self.url, self.user, self.password)
-        try:
-            rs = conn.getMetaData().getTables(None, None, "runstatus", None)
-            exists = rs.next()
-            rs.close()
-        finally:
-            conn.close()
-        if not exists:
-            self._execute(
-                'CREATE TABLE "runstatus" ('
-                '"project" VARCHAR(200) NOT NULL, '
-                '"method" VARCHAR(200) NOT NULL, '
-                '"stage" VARCHAR(200) NOT NULL, '
-                '"output" VARCHAR(1024) NOT NULL, '
-                '"started" TIMESTAMP, "ended" TIMESTAMP, '
-                '"created" TIMESTAMP NOT NULL, '
-                # runstatus.sql:11 — the unique key
-                'CONSTRAINT "runstatus_uk" UNIQUE '
-                '("project", "method", "stage", "output"))',
-            )
-
-    def drop(self) -> None:
-        self._execute('DROP TABLE "runstatus"')
-
-    def _read(self) -> DataFrame:
-        return read_jdbc(
-            self.spark, self.url, '"runstatus"', driver=self.driver,
-            user=self.user, password=self.password,
-        )
-
-    def all(self) -> list:
-        return self._read().collect()
-
-    def insert(self, stage, output, now=None) -> None:
-        self.insert_many(stage, [output], now)
-
-    def insert_many(self, stage, outputs, now=None) -> None:
-        from ..plans.ledger import RUNSTATUS_SCHEMA, utc_now
-
-        ts = now or utc_now()
-        rows = [
-            (self.project, self.method, stage, o, None, None, ts)
-            for o in sorted(outputs)
-        ]
-        if not rows:
-            return
-        new = self.spark.createDataFrame(rows, RUNSTATUS_SCHEMA)
-        # MERGE's matched arm IS the reset rule: started/ended -> NULL
-        jdbc_upsert(
-            self.spark, self.url, "runstatus", new, self.KEY,
-            driver=self.driver, user=self.user, password=self.password,
-        )
-
-    def _esc(self, s: str) -> str:
-        return s.replace("'", "''")
-
-    def _set_many(self, stage, outputs, col, ts) -> None:
-        if not outputs:
-            return
-        in_list = ", ".join(f"'{self._esc(o)}'" for o in sorted(outputs))
-        self._execute(
-            f'UPDATE "runstatus" SET "{col}" = {_ts_literal(ts)} WHERE '
-            f"\"project\" = '{self._esc(self.project)}' AND "
-            f"\"method\" = '{self._esc(self.method)}' AND "
-            f"\"stage\" = '{self._esc(stage)}' AND "
-            f'"output" IN ({in_list})',
-        )
-
-    def start(self, stage, output, now=None) -> None:
-        from ..plans.ledger import utc_now
-
-        self._set_many(stage, [output], "started", now or utc_now())
-
-    def start_many(self, stage, outputs, now=None) -> None:
-        from ..plans.ledger import utc_now
-
-        self._set_many(stage, list(outputs), "started", now or utc_now())
-
-    def end(self, stage, output, now=None) -> None:
-        from ..plans.ledger import utc_now
-
-        self._set_many(stage, [output], "ended", now or utc_now())
-
-    def end_many(self, stage, outputs, now=None) -> None:
-        from ..plans.ledger import utc_now
-
-        self._set_many(stage, list(outputs), "ended", now or utc_now())
-
-    def of(self, stage: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        return self._read().filter(
-            (F.col("project") == self.project)
-            & (F.col("method") == self.method)
-            & (F.col("stage") == stage)
-        )
-
-    def delete(self, stage: str, output: str) -> int:
-        return self._execute(
-            'DELETE FROM "runstatus" WHERE '
-            f"\"project\" = '{self._esc(self.project)}' AND "
-            f"\"method\" = '{self._esc(self.method)}' AND "
-            f"\"stage\" = '{self._esc(stage)}' AND "
-            f"\"output\" = '{self._esc(output)}'",
-        )[0]
+    runstatus.sql:1-12, RunStatus.scala:56-128)."""
 
 
 def jdbc_context(spark, project, method, warehouse, lister, url):
@@ -697,26 +602,4 @@ def jdbc_context(spark, project, method, warehouse, lister, url):
         lister=lister,
         _runs=JdbcRunsLedger(spark, url, project, method),
         _status=JdbcRunStatusLedger(spark, url, project, method),
-    )
-
-
-def jdbc_context_from_secret(
-    spark, project, method, warehouse, lister, secret, schema=None
-):
-    """jdbc_context built from secret-shaped config instead of a raw
-    url — the reference's actual startup path (Method.scala:111 builds
-    the Db from the RDS secret in its config). `secret` is anything
-    DbSecret.resolve accepts."""
-    from ..plans.context import Context
-
-    return Context(
-        spark=spark,
-        project=project,
-        method_name=method,
-        warehouse=warehouse,
-        lister=lister,
-        _runs=JdbcRunsLedger.from_secret(spark, secret, project, method,
-                                         schema),
-        _status=JdbcRunStatusLedger.from_secret(spark, secret, project,
-                                                method, schema),
     )

@@ -1,6 +1,6 @@
 """Sinks (SURVEY.md §2.1 rows S5, S10).
 
-- partitioned JSON/Parquet writes: the reference's per-ancestry output dirs
+- partitioned JSON writes: the reference's per-ancestry output dirs
   (frequencyAnalysis.py:112-114) done idiomatically with partitionBy, so one
   write produces every partition and downstream scans partition-prune;
 - merged single-file CSV: replaces the reference's hadoop-getmerge + awk
@@ -24,15 +24,6 @@ def write_json_partitioned(df: DataFrame, path: str, *partition_cols: str) -> No
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     w.json(path)
-
-
-def write_parquet_partitioned(
-    df: DataFrame, path: str, *partition_cols: str
-) -> None:
-    w = df.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(path)
 
 
 def write_merged_csv(df: DataFrame, dest_file: str) -> None:

@@ -2810,20 +2810,14 @@ def stream_jdbc_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         jdbc_execute,
         read_jdbc,
         scratch_db,
+        table_exists,
         varchar_types,
         write_jdbc,
     )
 
     url = derby_url(scratch_db("db"))
     # fresh state per run (repeat calls must not accumulate)
-    _quiet = spark._jvm.java.sql.DriverManager.getConnection(url)  # noqa: SLF001
-    try:
-        rs = _quiet.getMetaData().getTables(None, None, "cdc_state", None)
-        exists = rs.next()
-        rs.close()
-    finally:
-        _quiet.close()
-    if exists:
+    if table_exists(spark, url, "cdc_state"):
         jdbc_execute(spark, url, 'DROP TABLE "cdc_state"')
     jdbc_execute(
         spark,

@@ -1,6 +1,7 @@
-"""Ports of RunsTest.scala and RunsStatusTest.scala against the
-Parquet-backed ledgers, including the upsert-on-conflict semantics and the
-RunStatus started/ended reset."""
+"""Ports of RunsTest.scala and RunsStatusTest.scala against both ledger
+backends (Parquet, and Derby over JDBC), including the upsert-on-conflict
+semantics and the RunStatus started/ended reset; then the Parquet
+backend's concurrency and CAS commit protocol."""
 
 from __future__ import annotations
 
@@ -16,6 +17,13 @@ from datetime import datetime, timedelta
 
 from dig_aggregator_core_spark.plans.inputs import Input
 from dig_aggregator_core_spark.plans.ledger import RunsLedger, RunStatusLedger
+from dig_aggregator_core_spark.sources.jdbcio import (
+    JdbcRunsLedger,
+    JdbcRunStatusLedger,
+    derby_url,
+    scratch_db,
+    table_exists,
+)
 
 T0 = datetime(2026, 1, 1, 0, 0, 0)
 
@@ -24,19 +32,51 @@ def inp(name: str, offset_s: int = 0) -> Input:
     return Input(name, T0 + timedelta(seconds=offset_s))
 
 
-@pytest.fixture()
-def runs(spark, tmp_path):
-    return RunsLedger(spark, str(tmp_path / "runs"), "test", "TestMethod")
+# the reference ports run on every backend; the rest of the module is
+# about the Parquet backend, the default
+BACKENDS = pytest.mark.parametrize("backend", ["parquet", "derby"], indirect=True)
+_JDBC = {RunsLedger: JdbcRunsLedger, RunStatusLedger: JdbcRunStatusLedger}
 
 
 @pytest.fixture()
-def status(spark, tmp_path):
-    return RunStatusLedger(spark, str(tmp_path / "runstatus"), "test", "TestMethod")
+def backend(request):
+    return getattr(request, "param", "parquet")
+
+
+@pytest.fixture()
+def ledger(backend, spark, tmp_path):
+    """`ledger(cls)` builds a `cls` ledger of ("test", "TestMethod") on
+    `backend`: Parquet under tmp_path, or a table in a Derby database,
+    dropped at teardown."""
+    url = derby_url(scratch_db("ledger_ports"))
+    made = {}
+
+    def make(cls):
+        if backend == "parquet":
+            return cls(spark, str(tmp_path / cls.NAME), "test", "TestMethod")
+        made[cls.NAME] = _JDBC[cls](spark, url, "test", "TestMethod")
+        return made[cls.NAME]
+
+    yield make
+    for name, db in made.items():
+        if table_exists(spark, url, name):
+            db.drop()
+
+
+@pytest.fixture()
+def runs(ledger):
+    return ledger(RunsLedger)
+
+
+@pytest.fixture()
+def status(ledger):
+    return ledger(RunStatusLedger)
 
 
 # --- RunsTest.scala ---
 
 
+@BACKENDS
 def test_runs_migrate(runs):
     runs.migrate()
     assert runs.all() == []
@@ -44,6 +84,7 @@ def test_runs_migrate(runs):
     assert runs.all() == []
 
 
+@BACKENDS
 def test_runs_insert_delete_single(runs):
     runs.migrate()
     runs.insert("TestStage", "o1", [inp("i1")])
@@ -52,6 +93,7 @@ def test_runs_insert_delete_single(runs):
     assert runs.all() == []
 
 
+@BACKENDS
 def test_runs_insert_delete_multiple(runs):
     inputs = [inp(str(n), n) for n in range(1, 7)]
     runs.migrate()
@@ -70,6 +112,7 @@ def test_runs_insert_delete_multiple(runs):
     assert runs.all() == []
 
 
+@BACKENDS
 def test_runs_upsert_same_key_new_version(runs):
     """RunsTest 'update output with changed inputs': re-inserting the same
     (input, output) key with a new version REPLACES the row."""
@@ -97,10 +140,11 @@ def test_runs_upsert_same_key_new_version(runs):
     assert runs.all() == []
 
 
-def test_runs_scoped_to_project_method_stage(runs, spark, tmp_path):
+@BACKENDS
+def test_runs_scoped_to_project_method_stage(runs, ledger):
     runs.migrate()
     runs.insert("TestStage", "o1", [inp("i1")])
-    other = RunsLedger(spark, str(tmp_path / "runs"), "test", "TestMethod")
+    other = ledger(RunsLedger)
     assert other.of("OtherStage").count() == 0
     assert other.of("TestStage").count() == 1
 
@@ -108,11 +152,13 @@ def test_runs_scoped_to_project_method_stage(runs, spark, tmp_path):
 # --- RunsStatusTest.scala ---
 
 
+@BACKENDS
 def test_status_migrate(status):
     status.migrate()
     assert status.all() == []
 
 
+@BACKENDS
 def test_status_insert_delete(status):
     status.migrate()
     status.insert("TestStage", "o1")
@@ -131,6 +177,7 @@ def test_status_insert_delete(status):
     assert status.all() == []
 
 
+@BACKENDS
 def test_status_lifecycle_and_reset(status):
     """RunsStatusTest 'update output, removing start / end': re-insert of
     the same key blanks started/ended (RunStatus.scala:79-83)."""
