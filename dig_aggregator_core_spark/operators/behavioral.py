@@ -475,9 +475,7 @@ def attribution_multi_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "assoc_rules_pairs",
-    oracle="""
+ASSOC_RULES_ORACLE = """
     WITH ue AS (
       SELECT DISTINCT user_id, event_type FROM events
     ),
@@ -502,8 +500,10 @@ def attribution_multi_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN per pa ON pa.event_type = p.et_a
     JOIN per pb ON pb.event_type = p.et_b
     CROSS JOIN n
-    """,
-)
+    """
+
+
+@query("assoc_rules_pairs", oracle=ASSOC_RULES_ORACLE)
 def assoc_rules_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise association rules over per-user event-type baskets
     (Agrawal & Srikant's Apriori at the k=2 level, which is where real

@@ -197,9 +197,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("n_edges", "n_triangles")
 
 
-@query(
-    "event_transition_matrix",
-    oracle="""
+TRANSITION_ORACLE = """
     WITH ev AS (
       SELECT user_id, event_type,
              LAG(event_type) OVER (PARTITION BY user_id
@@ -217,8 +215,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(ROW_NUMBER() OVER (PARTITION BY src
              ORDER BY n DESC, dst) AS INT) AS dst_rank
     FROM edges
-    """,
-)
+    """
+
+
+@query("event_transition_matrix", oracle=TRANSITION_ORACLE)
 def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix of the user event stream —
     the report behind journey Sankeys and the input to Markov-chain

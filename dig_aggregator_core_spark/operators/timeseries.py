@@ -620,9 +620,7 @@ def interval_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CUSUM_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
 
 
-@query(
-    "timeseries_changepoint_cusum",
-    oracle=f"""
+CUSUM_ORACLE = f"""
     WITH s AS (
       SELECT event_type, event_id,
              {_CUSUM_CENTS} AS c,
@@ -647,8 +645,10 @@ _CUSUM_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
            ROUND(abs(CAST(num AS DOUBLE)) / n / 100.0, 6) AS peak_dev,
            CASE WHEN num > 0 THEN 1 ELSE -1 END AS direction
     FROM d WHERE pick = 1
-    """,
-)
+    """
+
+
+@query("timeseries_changepoint_cusum", oracle=CUSUM_ORACLE)
 def timeseries_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM changepoint detection per series (Page 1954): the k-th
     cumulative deviation from the series mean, C_k = Σ_{{i<=k}} (x_i - x̄),

@@ -787,9 +787,7 @@ _GOLDEN_ATTR_SQL = """
 """
 
 
-@query(
-    "golden_record_survivorship",
-    oracle=f"""
+GOLDEN_RECORD_ORACLE = f"""
     WITH v AS ({_GOLDEN_ATTR_SQL}),
     g AS (
       SELECT user_id,
@@ -806,8 +804,10 @@ _GOLDEN_ATTR_SQL = """
            em[3] AS email, ph[3] AS phone, ti[3] AS tier,
            n_versions
     FROM g
-    """,
-)
+    """
+
+
+@query("golden_record_survivorship", oracle=GOLDEN_RECORD_ORACLE)
 def golden_record_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Golden-record merge (master-data-management survivorship): each
     user's attribute updates arrive sparsely across their event history

@@ -1,16 +1,33 @@
-"""Stateful streaming operators (SURVEY.md §2.9 GAP rows): streaming
-deduplication and a custom per-key stateful aggregate via
-``applyInPandasWithState``.
+"""Structured Streaming operators over the fixture tables (SURVEY.md
+§2.9 GAP rows): 27 registered queries, each a REAL streaming query (file
+source → Trigger.AvailableNow → memory sink or foreachBatch) whose
+drained result equals a batch SQL oracle.
 
 The reference has no streaming engine; these are the native-Spark
-capabilities its batch-incremental model implies. Both run as REAL
-Structured Streaming queries (file source → Trigger.AvailableNow → memory
-sink) so the state-store code path is exercised, and both produce
-deterministic results equal to a batch SQL oracle.
+capabilities its batch-incremental model implies. The families:
 
-Scale: dedup state and per-user state are partitioned by key across the
-state store; watermarks bound dedup state retention. At 100 TB the same
-plan runs continuously with a real watermark-driven eviction.
+- watermarked dedup (``dropDuplicates``, ``dropDuplicatesWithinWatermark``);
+- the click→purchase interval join in every join mode (inner, left,
+  right, full outer, semi), the outer/semi modes flushed by a
+  far-future sentinel;
+- stream-static joins and complete-mode aggregates, some finished by a
+  batch finalize over the drained sink (quality drift, association
+  rules, golden record, decontamination, MinHash probes);
+- per-key ``applyInPandasWithState`` folds (running stats, EWMA, funnel,
+  cohort days, last-touch attribution, z-score, transitions, CUSUM, and
+  an event-time-timeout sessionizer);
+- foreachBatch engines with state held between epochs (CDC upsert to
+  parquet or JDBC, incremental connected components, ANN index append).
+
+Each recurring shape is written once: ``_fixture_stream`` opens every
+fixture file stream, ``_click_purchase_join`` builds the interval join,
+``_rows_in_order`` gives a fold its rows in event-time order across Arrow
+chunks, ``_final_emission`` keeps each key's last update-mode emission,
+and ``run_available_now`` runs a query to idle.
+
+Scale: state is partitioned by key across the state store; watermarks
+bound join and dedup state. At 100 TB the same plans run continuously
+with real watermark-driven eviction.
 """
 
 from __future__ import annotations
@@ -33,51 +50,107 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.behavioral import _ATTR_ORACLE as _BATCH_ATTR_ORACLE
 from ..operators.behavioral import _COHORT_ORACLE as _BATCH_COHORT_ORACLE
+from ..operators.behavioral import ASSOC_RULES_ORACLE
+from ..operators.graph import TRANSITION_ORACLE
+from ..operators.timeseries import CUSUM_ORACLE
+from ..operators.warehouse import GOLDEN_RECORD_ORACLE
 from ..operators.warehouse import QUALITY_DRIFT_ORACLE as _QUALITY_DRIFT_ORACLE
 from ..registry import query
-from ..tables import build_once, load, ntz_as_utc_instant, session_memo
+from ..tables import build_once, load, ntz_as_utc_instant
 
 _sink_counter = itertools.count()
 _log = logging.getLogger(__name__)
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over events.parquet (nanos ts handled as in
-    tables.load).
+def _fixture_stream(
+    spark: SparkSession, sf_dir: str, name: str = "events", *, flush: bool = False
+) -> DataFrame:
+    """File-source stream over the fixture table ``<sf_dir>/<name>.parquet``.
 
-    Watermarks require a TIMESTAMP event-time column, so a naive
-    (TIMESTAMP_NTZ) ts is embedded as a UTC instant — tz-proof, and the
-    queries here either emit no ts-derived columns or invert the embedding
+    A single-file fixture streams its parent dir filtered to that file; a
+    multi-file ``<name>.parquet`` dir (e.g. the scaleproof corpora) is
+    streamed itself, since the single-file glob would match no leaf file
+    and stream zero rows. The footer schema is session-memoized
+    (tables.raw_schema, which also sets nanosAsLong): a fresh listing +
+    footer read cost ~0.1 s per stream.
+
+    Watermarks require a TIMESTAMP event-time column, so a bigint-nanos
+    ``ts`` becomes a micros timestamp (as in tables.load) and a naive
+    (TIMESTAMP_NTZ) one is embedded as a UTC instant — tz-proof; the
+    queries either emit no ts-derived columns or invert the embedding
     with tables.instant_as_ntz before emitting.
+
+    ``flush=True`` streams the events copy with the flush sentinel
+    (``_events_with_flush_sentinel``) in several batches, sentinel file
+    last (latest mtime): eviction output needs a batch boundary AFTER
+    the watermark-advancing rows.
     """
-    import os
+    from ..tables import raw_schema
 
-    from ..tables import raw_schema as _raw_schema
-
-    src = f"{sf_dir}/events.parquet"
-    # memoized footer schema (sets nanosAsLong itself): the per-call
-    # listing + footer read was ~0.1 s on every streaming query build
-    raw_schema = _raw_schema(spark, sf_dir, "events")
+    options = {}
+    if flush:
+        sf_dir = _events_with_flush_sentinel(spark, sf_dir)
+        options = {"maxFilesPerTrigger": 2, "latestFirst": "false"}
+    src = f"{sf_dir}/{name}.parquet"
+    reader = spark.readStream.schema(raw_schema(spark, sf_dir, name)).options(
+        **options
+    )
     if os.path.isdir(src):
-        # multi-file dataset (e.g. the scaleproof corpora): stream the
-        # directory itself — the single-file glob below would match NO
-        # leaf files and silently stream zero rows (caught by the r10
-        # stream_jdbc_cdc_upsert x100 row reading 0.3x)
-        stream = spark.readStream.schema(raw_schema).parquet(src)
+        stream = reader.parquet(src)
     else:
-        # driver fixture: events.parquet is one FILE, so stream the
-        # parent dir filtered to exactly that file
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
+        stream = reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir)
     ts_type = dict(stream.dtypes).get("ts")
     if ts_type == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif ts_type == "timestamp_ntz":
         stream = stream.withColumn("ts", ntz_as_utc_instant("ts"))
     return stream
+
+
+# events is the default fixture table; tests call it by this name
+_events_stream = _fixture_stream
+
+
+def _events_with_flush_sentinel(spark: SparkSession, sf_dir: str) -> str:
+    """Scratch dir holding events.parquet: a copy of events plus one
+    far-future click+purchase pair for a sentinel user (user_id = -1).
+
+    A finite stream's watermark stops at max(event_time) - delay, so an
+    outer join can never declare the final window's rows unmatched — the
+    null-emission tail stays in state forever. Production streams flush
+    naturally (data keeps arriving); a run-to-idle replay must append a
+    watermark-advancing sentinel past every real row's expiration. The
+    sentinel pair matches only itself and is filtered from the output.
+    Built once per corpus listing (tables.build_once): regenerating the
+    fixture at the same path invalidates it, and two concurrent runs
+    against different source contents never share a directory."""
+
+    def build(out):
+        ev = load(spark, sf_dir, "events")
+        sent = (
+            ev.agg(F.max("ts").alias("ts"))
+            .crossJoin(spark.range(2))
+            .select(
+                (-1 - F.col("id")).alias("event_id"),
+                F.expr("ts + INTERVAL 30 DAYS").alias("ts"),
+                F.lit(-1).cast("bigint").alias("user_id"),
+                F.when(F.col("id") == 0, F.lit("click"))
+                .otherwise(F.lit("purchase"))
+                .alias("event_type"),
+                F.lit(0.0).alias("value"),
+                F.lit("{}").alias("props"),
+            )
+        )
+        data_dir = os.path.join(out, "events.parquet")
+        ev.coalesce(4).write.mode("overwrite").parquet(data_dir)
+        # the sentinel goes in its OWN, later file: the file source must
+        # deliver it in a LATER micro-batch (maxFilesPerTrigger) so the
+        # watermark advances past the real data's expiration while the
+        # query is still running — in a single batch the final
+        # watermark update has no subsequent batch to flush evictions
+        sent.coalesce(1).write.mode("append").parquet(data_dir)
+
+    return build_once("outer_sentinel", sf_dir, build)
 
 
 # State partitions by operator family. Each family asks for its own
@@ -252,6 +325,39 @@ def run_available_now(
     return _drain_sink(spark, name, _progress_rowcount(progress, mode))
 
 
+def _rows_in_order(
+    pdfs: Iterable[pd.DataFrame], by: list[str], cols: list[str]
+) -> Iterator[tuple]:
+    """A fold's rows as ``cols`` tuples in global ``by`` order (stable).
+
+    applyInPandasWithState delivers a key's micro-batch as an ITERATOR of
+    Arrow chunks (split at arrow.maxRecordsPerBatch), so the chunks are
+    concatenated and sorted ONCE: per-chunk sorts would only be
+    chunk-locally ordered and break the batch equivalence the oracles
+    pin. Yields nothing for an empty batch."""
+    chunks = [p for p in pdfs if len(p)]
+    if not chunks:
+        return
+    batch = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+    yield from batch.sort_values(by, kind="mergesort")[cols].itertuples(
+        index=False, name=None
+    )
+
+
+def _final_emission(result: DataFrame, order, cols: list[str]) -> DataFrame:
+    """Update mode re-emits a user's row in EVERY micro-batch that touches
+    the user, so a multi-file source yields several rows per user_id;
+    keep the first row per user under ``order`` (the final emission)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy(order)
+    return (
+        result.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") == 1)
+        .select(*cols)
+    )
+
+
 @query(
     "stream_dedup_watermark",
     oracle="SELECT DISTINCT user_id, event_type FROM events",
@@ -261,7 +367,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     a watermark bounding dedup state. Emitting only the key columns makes
     the kept-row choice irrelevant — the result is exactly the distinct key
     set, which the batch oracle pins."""
-    stream = _events_stream(spark, sf_dir)
+    stream = _fixture_stream(spark, sf_dir)
     deduped = (
         stream.withWatermark("ts", "30 days")
         .dropDuplicates(["user_id", "event_type"])
@@ -321,7 +427,7 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by user_id; each trigger emits the updated running totals.
     Under AvailableNow over a static source the final emission per user
     equals the batch aggregate, which the oracle checks exactly."""
-    stream = _events_stream(spark, sf_dir)
+    stream = _fixture_stream(spark, sf_dir)
     stats = stream.groupBy("user_id").applyInPandasWithState(
         _user_stats_fn,
         outputStructType=_USER_STATS_OUT,
@@ -330,6 +436,54 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     return run_available_now(stats, "update", state_partitions=_FOLD_STATE_PARTS)
+
+
+def _click_purchase_join(
+    spark: SparkSession, sf_dir: str, how: str = "inner"
+) -> DataFrame:
+    """Clicks joined to same-user purchases in the following 6 hours, as a
+    stream-stream join of type ``how``. Both sides carry 1-day watermarks,
+    so the join state is bounded: Spark drops a buffered click once the
+    purchase watermark passes click.ts + 6h.
+
+    The outer and semi joins decide their null (or no-match) rows by
+    watermark, so they read the flush-sentinel copy of events
+    (``_fixture_stream(flush=True)``); the sentinel pair emits its own
+    matched row, which their oracles append. Columns: click_id, user_id,
+    purchase_id (not for a semi join) and p_user_id."""
+    flush = how != "inner"
+    clicks = (
+        _fixture_stream(spark, sf_dir, flush=flush)
+        .filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", "1 day")
+    )
+    # a semi join emits no purchase column, so its side reads none
+    purchase_id = [] if how == "leftSemi" else [F.col("event_id").alias("purchase_id")]
+    purchases = (
+        _fixture_stream(spark, sf_dir, flush=flush)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            *purchase_id,
+            F.col("user_id").alias("p_user_id"),
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", "1 day")
+    )
+    return clicks.join(
+        purchases,
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("purchase_ts") >= F.col("click_ts"))
+        & (
+            F.col("purchase_ts")
+            <= F.col("click_ts") + F.expr("INTERVAL 6 HOURS")
+        ),
+        how,
+    )
 
 
 @query(
@@ -344,41 +498,13 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join with an event-time interval condition:
+    """Stream-stream inner interval join (``_click_purchase_join``):
     clicks joined to same-user purchases within the following 6 hours.
-    Both sides carry watermarks so the join state is bounded — Spark GCs a
-    buffered click once the purchase watermark passes click.ts + 6h. Inner
-    join emissions are invariant to micro-batch boundaries, so the result
-    equals the batch interval join, which the oracle pins."""
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 day")
+    Inner join emissions are invariant to micro-batch boundaries, so the
+    result equals the batch interval join, which the oracle pins."""
+    joined = _click_purchase_join(spark, sf_dir).select(
+        "click_id", "purchase_id", "user_id"
     )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 day")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr("INTERVAL 6 HOURS")
-        ),
-    ).select("click_id", "purchase_id", "user_id")
     return run_available_now(joined, "append")
 
 
@@ -404,7 +530,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = spark.range(100_000).select(
         F.col("id").alias("uid"), (F.col("id") % 5).alias("cohort")
     )
-    stream = _events_stream(spark, sf_dir)
+    stream = _fixture_stream(spark, sf_dir)
     enriched = (
         stream.join(F.broadcast(dim), stream.user_id == dim.uid)
         .groupBy("cohort", "event_type")
@@ -490,7 +616,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "RocksDBStateStoreProvider",
     )
     try:
-        stream = _events_stream(spark, sf_dir).select("user_id", "value")
+        stream = _fixture_stream(spark, sf_dir).select("user_id", "value")
         stats = stream.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=UserStats(),
             outputStructType=(
@@ -545,7 +671,7 @@ def stream_kafka_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    stream = _events_stream(spark, sf_dir)
+    stream = _fixture_stream(spark, sf_dir)
     wire = stream.select(
         F.col("event_id").cast("string").cast("binary").alias("key"),
         F.to_json(F.struct("event_id", "event_type", "value", "props"))
@@ -587,24 +713,18 @@ def _ewma_fn(
 ) -> Iterator[pd.DataFrame]:
     """Incremental per-user EWMA (alpha=0.3, first-observation seed): the
     O(1)-state streaming form of operators/timeseries.timeseries_ewma's
-    batch fold. A key's micro-batch arrives as an ITERATOR of Arrow
-    chunks (split at arrow.maxRecordsPerBatch), so the rows are
-    concatenated and sorted by (ts, value) ONCE before folding —
-    per-chunk sorts would only be chunk-locally ordered and break the
-    batch-equivalence the oracle pins. State carries (count, running
-    ewma) across batches, so under AvailableNow over a static source the
-    final emission equals the batch recurrence exactly."""
+    batch fold, over the batch's rows in (ts, value) order
+    (``_rows_in_order``). State carries (count, running ewma) across
+    batches, so under AvailableNow over a static source the final
+    emission equals the batch recurrence exactly."""
     if state.exists:
         n, ewma = state.get
     else:
         n, ewma = 0, 0.0
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        batch = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        batch = batch.sort_values(["ts", "value"], kind="mergesort")
-        for v in batch["value"].astype(float):
-            ewma = v if n == 0 else 0.3 * v + 0.7 * ewma
-            n += 1
+    for (v,) in _rows_in_order(pdfs, ["ts", "value"], ["value"]):
+        v = float(v)
+        ewma = v if n == 0 else 0.3 * v + 0.7 * ewma
+        n += 1
     state.update((n, ewma))
     yield pd.DataFrame(
         {"user_id": [key[0]], "n_events": [n], "ewma": [round(ewma, 6)]}
@@ -639,7 +759,7 @@ def stream_ewma_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrivals ACROSS batches would need a watermark-bounded reorder
     buffer (documented limit, irrelevant under AvailableNow replay of a
     static source)."""
-    stream = _events_stream(spark, sf_dir).select("user_id", "ts", "value")
+    stream = _fixture_stream(spark, sf_dir).select("user_id", "ts", "value")
     out = stream.groupBy("user_id").applyInPandasWithState(
         _ewma_fn,
         outputStructType=_EWMA_OUT,
@@ -648,81 +768,10 @@ def stream_ewma_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     result = run_available_now(out, "update", state_partitions=_FOLD_STATE_PARTS)
-    # update mode re-emits a key on every batch that touches it; keep the
-    # final (max-n) emission per user
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        result.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("user_id", "n_events", "ewma")
+    # the final emission per user is the max-n one
+    return _final_emission(
+        result, F.desc("n_events"), ["user_id", "n_events", "ewma"]
     )
-
-
-def _events_with_flush_sentinel(spark: SparkSession, sf_dir: str) -> str:
-    """Scratch copy of events plus one far-future click+purchase pair for
-    a sentinel user (user_id = -1), written as a parquet dir.
-
-    A finite stream's watermark stops at max(event_time) - delay, so an
-    outer join can never declare the final window's rows unmatched — the
-    null-emission tail stays in state forever. Production streams flush
-    naturally (data keeps arriving); a run-to-idle replay must append a
-    watermark-advancing sentinel past every real row's expiration. The
-    sentinel pair matches only itself and is filtered from the output.
-    Built once per corpus listing (tables.build_once): regenerating the
-    fixture at the same path invalidates it, and two concurrent runs
-    against different source contents never share a directory."""
-
-    def build(out):
-        ev = load(spark, sf_dir, "events")
-        sent = (
-            ev.agg(F.max("ts").alias("ts"))
-            .crossJoin(spark.range(2))
-            .select(
-                (-1 - F.col("id")).alias("event_id"),
-                F.expr("ts + INTERVAL 30 DAYS").alias("ts"),
-                F.lit(-1).cast("bigint").alias("user_id"),
-                F.when(F.col("id") == 0, F.lit("click"))
-                .otherwise(F.lit("purchase"))
-                .alias("event_type"),
-                F.lit(0.0).alias("value"),
-                F.lit("{}").alias("props"),
-            )
-        )
-        data_dir = os.path.join(out, "events.parquet")
-        ev.coalesce(4).write.mode("overwrite").parquet(data_dir)
-        # the sentinel goes in its OWN, later file: the file source must
-        # deliver it in a LATER micro-batch (maxFilesPerTrigger below) so
-        # the watermark advances past the real data's expiration while
-        # the query is still running — in a single batch the final
-        # watermark update has no subsequent batch to flush evictions
-        sent.coalesce(1).write.mode("append").parquet(data_dir)
-
-    return os.path.join(
-        build_once("outer_sentinel", sf_dir, build), "events.parquet"
-    )
-
-
-def _scratch_events_stream(spark: SparkSession, path: str) -> DataFrame:
-    # the footer schema is session-memoized on the scratch path (VERDICT
-    # r12 task 7): a fresh listing + footer read cost ~0.1 s TWICE per
-    # stream-stream query build, and the build_once path is immutable
-    schema = session_memo(
-        "scratch_schema", spark, path, (),
-        lambda: spark.read.parquet(path).schema,
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        # several batches, sentinel file last (latest mtime): eviction
-        # output needs a batch boundary AFTER the watermark-advancing rows
-        .option("maxFilesPerTrigger", 2)
-        .option("latestFirst", "false")
-        .parquet(path)
-    )
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", ntz_as_utc_instant("ts"))
-    return stream
 
 
 @query(
@@ -756,39 +805,8 @@ def stream_stream_left_outer_join(
     other side's watermark clears them; the outer semantics add no state,
     only the deferred null emission. Both join keys partition the state
     store by user_id."""
-    path = _events_with_flush_sentinel(spark, sf_dir)
-    clicks = (
-        _scratch_events_stream(spark, path)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 day")
-    )
-    purchases = (
-        _scratch_events_stream(spark, path)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 day")
-    )
-    joined = (
-        clicks.join(
-            purchases,
-            (F.col("user_id") == F.col("p_user_id"))
-            & (F.col("purchase_ts") >= F.col("click_ts"))
-            & (
-                F.col("purchase_ts")
-                <= F.col("click_ts") + F.expr("INTERVAL 6 HOURS")
-            ),
-            "leftOuter",
-        )
-        .select("click_id", "purchase_id", "user_id")
+    joined = _click_purchase_join(spark, sf_dir, "leftOuter").select(
+        "click_id", "purchase_id", "user_id"
     )
     # NO sentinel filter here: any predicate excluding the sentinel user
     # gets pushed through the join into BOTH streaming scans (equi-key
@@ -827,40 +845,8 @@ def stream_stream_right_outer_join(
     fixture and the drained result equals the batch RIGHT JOIN, which the
     oracle pins verbatim (plus the sentinel's own matched row — see the
     left-outer op for why it must not be filtered)."""
-    path = _events_with_flush_sentinel(spark, sf_dir)
-    clicks = (
-        _scratch_events_stream(spark, path)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 day")
-    )
-    purchases = (
-        _scratch_events_stream(spark, path)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 day")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr("INTERVAL 6 HOURS")
-        ),
-        "rightOuter",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.col("p_user_id").alias("user_id"),
+    joined = _click_purchase_join(spark, sf_dir, "rightOuter").select(
+        "click_id", "purchase_id", F.col("p_user_id").alias("user_id")
     )
     return run_available_now(joined, "append")
 
@@ -894,36 +880,9 @@ def stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sentinel pair's own matched click — the sentinel must not be
     filtered, see the left-outer op). Completes the streaming join-mode
     matrix: inner / left / right / full outer / semi."""
-    path = _events_with_flush_sentinel(spark, sf_dir)
-    clicks = (
-        _scratch_events_stream(spark, path)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 day")
+    joined = _click_purchase_join(spark, sf_dir, "leftSemi").select(
+        "click_id", "user_id"
     )
-    purchases = (
-        _scratch_events_stream(spark, path)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 day")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr("INTERVAL 6 HOURS")
-        ),
-        "leftSemi",
-    ).select("click_id", "user_id")
     return run_available_now(joined, "append")
 
 
@@ -938,37 +897,21 @@ def _funnel_fn(
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
     """Greedy funnel stage matcher with O(1) state per user: (t1, t2, t3)
-    carried across micro-batches; each batch's rows concat + sort by
-    (us, event_type) before folding (chunk iterators are not globally
-    ordered — the stream_ewma_stateful lesson). Cross-batch equivalence
+    carried across micro-batches; each batch folds its rows in
+    (us, event_type) order (``_rows_in_order``). Cross-batch equivalence
     to the batch fold holds when batches arrive in event-time order
     (exact under AvailableNow replay; out-of-order ACROSS batches needs
     a watermark-bounded reorder buffer, same documented limit as the
     EWMA)."""
     t1, t2, t3 = state.get if state.exists else (None, None, None)
-    chunks = [p for p in pdfs if len(p)]
-    if chunks:
-        batch = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        for us, et in (
-            batch.sort_values(["us", "event_type"], kind="mergesort")[
-                ["us", "event_type"]
-            ].itertuples(index=False, name=None)
-        ):
-            if t1 is None and et == "view":
-                t1 = int(us)
-            elif t2 is None and et == "click" and t1 is not None and us > t1:
-                t2 = int(us)
-            elif (
-                t3 is None
-                and et == "purchase"
-                and t2 is not None
-                and us > t2
-            ):
-                t3 = int(us)
+    order = ["us", "event_type"]
+    for us, et in _rows_in_order(pdfs, order, order):
+        if t1 is None and et == "view":
+            t1 = int(us)
+        elif t2 is None and et == "click" and t1 is not None and us > t1:
+            t2 = int(us)
+        elif t3 is None and et == "purchase" and t2 is not None and us > t2:
+            t3 = int(us)
     state.update((t1, t2, t3))
     yield pd.DataFrame(
         {
@@ -1024,7 +967,7 @@ def stream_funnel_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     The strict-ordering caveat is the EWMA's: in-batch order is enforced
     by an explicit sort, cross-batch order by replay/watermark."""
     stream = (
-        _events_stream(spark, sf_dir)
+        _fixture_stream(spark, sf_dir)
         .filter(F.col("event_type").isin(*_FUNNEL_STAGES))
         .select(
             "user_id",
@@ -1040,25 +983,15 @@ def stream_funnel_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     result = run_available_now(out, "update", state_partitions=_FOLD_STATE_PARTS)
-    # update mode re-emits a user's row in EVERY micro-batch that touches
-    # the user; a multi-file source therefore yields several rows per
-    # user_id. Stage times only ever fill in (t1 before t2 before t3,
-    # never mutated), so the final emission is the row with the most
-    # non-null stage times — keep exactly that one per user (same
-    # collapse stream_ewma_stateful applies via its n_events ordering).
-    from pyspark.sql import Window
-
+    # stage times only ever fill in (t1 before t2 before t3, never
+    # mutated), so the final emission is the row with the most non-null
+    # stage times
     filled = (
         F.col("t1").isNotNull().cast("int")
         + F.col("t2").isNotNull().cast("int")
         + F.col("t3").isNotNull().cast("int")
     )
-    w = Window.partitionBy("user_id").orderBy(filled.desc())
-    return (
-        result.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("user_id", "t1", "t2", "t3")
-    )
+    return _final_emission(result, filled.desc(), ["user_id", "t1", "t2", "t3"])
 
 
 _COHORT_STATE = "days array<int>"
@@ -1105,7 +1038,7 @@ def stream_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     day is computed by pure epoch arithmetic on the embedded UTC instant
     (floor(unix_micros / 86.4e9)) so the result is session-timezone-proof.
     """
-    stream = _events_stream(spark, sf_dir).select(
+    stream = _fixture_stream(spark, sf_dir).select(
         "user_id",
         F.floor(F.unix_micros("ts") / F.lit(86_400_000_000))
         .cast("int")
@@ -1119,14 +1052,7 @@ def stream_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     result = run_available_now(out, "update", state_partitions=_FOLD_STATE_PARTS)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_days"))
-    final = (
-        result.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("user_id", "days")
-    )
+    final = _final_emission(result, F.desc("n_days"), ["user_id", "days"])
     cohorted = final.select(
         F.array_min("days").alias("cohort"),
         F.explode("days").alias("day"),
@@ -1160,37 +1086,23 @@ def _attr_fn(
     view/click as (us, event_id, type)); each purchase is attributed the
     moment it is processed, so every purchase row is emitted in exactly
     ONE micro-batch — no cross-batch re-emission to collapse. In-batch
-    event-time order is enforced by an explicit (us, event_id) sort
-    (matching the batch operator's strictly-preceding lexicographic tie
-    rule); cross-batch order is the EWMA's documented replay caveat."""
+    event-time order is (us, event_id) (matching the batch operator's
+    strictly-preceding lexicographic tie rule); cross-batch order is the
+    EWMA's documented replay caveat."""
     from ..operators.behavioral import _ATTR_LOOKBACK_US
 
     last = state.get if state.exists else (None, None, None)
     out: list[tuple] = []
-    chunks = [p for p in pdfs if len(p)]
-    if chunks:
-        batch = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        for us, eid, et in (
-            batch.sort_values(["us", "event_id"], kind="mergesort")[
-                ["us", "event_id", "event_type"]
-            ].itertuples(index=False, name=None)
-        ):
-            if et == "purchase":
-                if (
-                    last[0] is not None
-                    and last[0] >= us - _ATTR_LOOKBACK_US
-                ):
-                    out.append(
-                        (int(eid), key[0], last[1], last[2], int(us) - last[0])
-                    )
-                else:
-                    out.append((int(eid), key[0], None, None, None))
+    for us, eid, et in _rows_in_order(
+        pdfs, ["us", "event_id"], ["us", "event_id", "event_type"]
+    ):
+        if et == "purchase":
+            if last[0] is not None and last[0] >= us - _ATTR_LOOKBACK_US:
+                out.append((int(eid), key[0], last[1], last[2], int(us) - last[0]))
             else:
-                last = (int(us), int(eid), et)
+                out.append((int(eid), key[0], None, None, None))
+        else:
+            last = (int(us), int(eid), et)
     state.update(last)
     yield pd.DataFrame(
         {
@@ -1220,7 +1132,7 @@ def stream_attribution_last_touch(
     Each purchase emits in exactly one batch (the one that delivers it),
     so update-mode output needs no final-emission collapse."""
     stream = (
-        _events_stream(spark, sf_dir)
+        _fixture_stream(spark, sf_dir)
         .filter(F.col("event_type").isin("view", "click", "purchase"))
         .select(
             "user_id",
@@ -1294,40 +1206,22 @@ def _zanom_fn(
     accumulation order)."""
     n, s, q = state.get if state.exists else (0, 0, 0)
     out: list[tuple] = []
-    chunks = [p for p in pdfs if len(p)]
-    if chunks:
-        batch = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        for eid, xi in (
-            batch.sort_values(["us", "event_id"], kind="mergesort")[
-                ["event_id", "xi"]
-            ].itertuples(index=False, name=None)
-        ):
-            xi = int(xi)
-            if n >= _ZANOM_MIN_N:
-                import math
+    for eid, xi in _rows_in_order(pdfs, ["us", "event_id"], ["event_id", "xi"]):
+        xi = int(xi)
+        if n >= _ZANOM_MIN_N:
+            import math
 
-                m = s / n
-                var = q / n - m * m
-                # math.sqrt, NOT ** 0.5: pow(x, 0.5) is not guaranteed
-                # bit-identical to the correctly-rounded sqrt, and the
-                # engines' sqrt IS — one fixture row diverged in the ulp
-                sd = math.sqrt(max(var, 1e-6))
-                z = (xi - m) / sd
-                out.append(
-                    (
-                        int(eid),
-                        key[0],
-                        n,
-                        m / 10000,
-                        z,
-                        abs(xi - m) > _ZANOM_K * sd,
-                    )
-                )
-            n, s, q = n + 1, s + xi, q + xi * xi
+            m = s / n
+            var = q / n - m * m
+            # math.sqrt, NOT ** 0.5: pow(x, 0.5) is not guaranteed
+            # bit-identical to the correctly-rounded sqrt, and the
+            # engines' sqrt IS — one fixture row diverged in the ulp
+            sd = math.sqrt(max(var, 1e-6))
+            z = (xi - m) / sd
+            out.append(
+                (int(eid), key[0], n, m / 10000, z, abs(xi - m) > _ZANOM_K * sd)
+            )
+        n, s, q = n + 1, s + xi, q + xi * xi
     state.update((n, s, q))
     yield pd.DataFrame(
         {
@@ -1357,7 +1251,7 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers — the emitted doubles are then the same deterministic IEEE
     expressions on both engines. Each event emits in exactly one batch;
     no update-mode collapse is needed."""
-    stream = _events_stream(spark, sf_dir).select(
+    stream = _fixture_stream(spark, sf_dir).select(
         "user_id",
         F.unix_micros("ts").alias("us"),
         "event_id",
@@ -1376,27 +1270,6 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 stream_anomaly_zscore.__doc__ = stream_anomaly_zscore.__doc__.format(
     n=_ZANOM_MIN_N
 )
-
-
-def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over documents.parquet — the shape of a corpus
-    arriving continuously from a crawler/ingest bus rather than sitting
-    complete in a lake."""
-    import os
-
-    from ..tables import raw_schema as _raw_schema
-
-    src = f"{sf_dir}/documents.parquet"
-    raw_schema = _raw_schema(spark, sf_dir, "documents")
-    if os.path.isdir(src):
-        # multi-file dataset: the single-file glob below would stream
-        # zero rows (same hazard as _events_stream, fixed r10)
-        return spark.readStream.schema(raw_schema).parquet(src)
-    return (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
 
 
 _DECONTAM_NGRAM_STREAM = 5  # keep identical to curation.DECONTAM_NGRAM
@@ -1464,7 +1337,7 @@ def stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     stream_sh = (
-        _documents_stream(spark, sf_dir)
+        _fixture_stream(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 97 != 0)
         .select("doc_id", toks.alias("t"))
         .filter(F.size("t") >= n)
@@ -1565,7 +1438,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "slice(split(text, ' '), 1,"
         " greatest(3, (size(split(text, ' ')) * 4) div 5))"
     )
-    stream_sh = _documents_stream(spark, sf_dir).select(
+    stream_sh = _fixture_stream(spark, sf_dir, "documents").select(
         (F.col("doc_id") + MUT_OFFSET).alias("doc_id"),
         toks.alias("toks"),
     ).select(
@@ -1593,10 +1466,11 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cdc_apply(spark: SparkSession, stream: DataFrame, checkpoint: str | None = None) -> DataFrame | None:
     """foreachBatch CDC-apply engine for stream_cdc_upsert: per epoch,
     reduce the batch to one last-writer row per touched key, merge with
-    the state table, write state version v+1 (read-current/write-next).
-    Returns the final state DataFrame (None if the source was empty)."""
-    out_dir = tempfile.mkdtemp(prefix="cdc_state_")
-    state = {"df": None, "v": 0}
+    the state table and materialize the merge as the next state version
+    (an eager localCheckpoint: the lineage stops at each epoch and no
+    scratch file is written). Returns the final state DataFrame (None if
+    the source was empty)."""
+    state = {"df": None}
 
     def apply_batch(batch: DataFrame, epoch_id: int) -> None:
         agg = batch.groupBy("user_id").agg(
@@ -1614,10 +1488,7 @@ def _cdc_apply(spark: SparkSession, stream: DataFrame, checkpoint: str | None = 
                 .groupBy("user_id")
                 .agg(F.max("mx").alias("mx"), F.sum("n").alias("n"))
             )
-        state["v"] += 1
-        path = os.path.join(out_dir, f"v{state['v']}")
-        merged.write.mode("overwrite").parquet(path)
-        state["df"] = batch.sparkSession.read.parquet(path)
+        state["df"] = merged.localCheckpoint()
 
     run_available_now(
         stream, state_partitions=None, sink=apply_batch, checkpoint=checkpoint
@@ -1653,13 +1524,14 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per epoch: the batch reduces MAP-SIDE to one argmax row per touched
     user (max of a (ts, event_id, value, type) struct — lexicographic
     struct max IS the last-writer rule), then full-outer-merges with the
-    state table and writes a NEW state version (read-current/write-next,
-    the same single-writer versioning as plans/ledger.py). State size is
-    O(live keys), batch work is O(touched keys); nothing rescans history.
+    state table and checkpoints the merge as the NEW state version
+    (read-current/write-next, kept in block storage, so nothing is left
+    on disk after the call). State size is O(live keys), batch work is
+    O(touched keys); nothing rescans history.
     Tombstoned keys stay in state (so a late pre-tombstone change cannot
     resurrect them) and are excluded at read — exactly how Delta/Hudi
     treat deletes before vacuum."""
-    stream = _events_stream(spark, sf_dir).select(
+    stream = _fixture_stream(spark, sf_dir).select(
         "user_id", "ts", "event_id", "value", "event_type"
     )
     final = _cdc_apply(spark, stream)
@@ -1697,7 +1569,7 @@ def stream_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_drift_sums,
     )
 
-    sums = quality_drift_sums(_documents_stream(spark, sf_dir))
+    sums = quality_drift_sums(_fixture_stream(spark, sf_dir, "documents"))
     grid = run_available_now(sums, "complete")
     return quality_drift_finalize(grid)
 
@@ -1733,37 +1605,7 @@ def stream_stream_full_outer_join(
     deterministic row (-1, -2, -1), appended verbatim in the oracle —
     filtering it out here would push the predicate into both scans and
     kill the flush (see stream_stream_left_outer_join)."""
-    path = _events_with_flush_sentinel(spark, sf_dir)
-    clicks = (
-        _scratch_events_stream(spark, path)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 day")
-    )
-    purchases = (
-        _scratch_events_stream(spark, path)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 day")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr("INTERVAL 6 HOURS")
-        ),
-        "fullOuter",
-    ).select(
+    joined = _click_purchase_join(spark, sf_dir, "fullOuter").select(
         "click_id",
         "purchase_id",
         F.coalesce(F.col("user_id"), F.col("p_user_id")).alias("user_id"),
@@ -1796,7 +1638,7 @@ def stream_dedup_within_watermark(
     engines derive the same naive date."""
     from ..tables import instant_as_ntz
 
-    stream = _events_stream(spark, sf_dir)
+    stream = _fixture_stream(spark, sf_dir)
     deduped = (
         stream.withColumn(
             "day", F.date_format(instant_as_ntz("ts"), "yyyy-MM-dd")
@@ -1808,7 +1650,7 @@ def stream_dedup_within_watermark(
     return run_available_now(deduped, "append")
 
 
-@query("stream_assoc_rules")
+@query("stream_assoc_rules", oracle=ASSOC_RULES_ORACLE)
 def stream_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association rules maintained INCREMENTALLY: per-user event-type
     baskets aggregate in complete mode (collect_set — state is one
@@ -1819,10 +1661,9 @@ def stream_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     established. A rules dashboard refreshes by re-running only the
     finalize; the event stream is never re-read.
 
-    Shares assoc_rules_pairs' finalize verbatim, and its ORACLE verbatim
-    (registered below after import) — streaming and batch must agree
-    exactly once the stream drains."""
-    stream = _events_stream(spark, sf_dir)
+    Shares assoc_rules_pairs' finalize and ORACLE verbatim — streaming
+    and batch must agree exactly once the stream drains."""
+    stream = _fixture_stream(spark, sf_dir)
     baskets = stream.groupBy("user_id").agg(
         F.collect_set("event_type").alias("ets")
     )
@@ -1830,13 +1671,6 @@ def stream_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.behavioral import assoc_finalize
 
     return assoc_finalize(drained)
-
-
-# streaming twin shares the batch oracle verbatim
-from ..operators import behavioral as _behavioral  # noqa: E402
-from ..registry import ORACLES as _ORACLES  # noqa: E402
-
-_ORACLES["stream_assoc_rules"] = _ORACLES["assoc_rules_pairs"]
 
 
 _TRANS_STATE = "prev_type string, prev_us bigint"
@@ -1849,35 +1683,25 @@ def _transition_fn(
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
     """Per-user transition extractor with O(1) state: carry only the last
-    (event_type, us) across micro-batches; each batch's rows concat +
-    sort by (us, event_id) before folding (the chunk-ordering lesson),
-    emitting one (src, dst) row per consecutive pair — including the
-    cross-batch seam pair from the carried state."""
+    (event_type, us) across micro-batches; each batch folds its rows in
+    (us, event_id) order (``_rows_in_order``), emitting one (src, dst)
+    row per consecutive pair — including the cross-batch seam pair from
+    the carried state. An empty batch leaves the state untouched."""
     prev_type, _prev_us = state.get if state.exists else (None, None)
-    chunks = [p for p in pdfs if len(p)]
     out_src: list[str] = []
     out_dst: list[str] = []
-    if chunks:
-        batch = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        last_us = None
-        for us, _eid, et in (
-            batch.sort_values(["us", "event_id"], kind="mergesort")[
-                ["us", "event_id", "event_type"]
-            ].itertuples(index=False, name=None)
-        ):
-            if prev_type is not None:
-                out_src.append(prev_type)
-                out_dst.append(et)
-            prev_type, last_us = et, int(us)
+    last_us = None
+    for us, et in _rows_in_order(pdfs, ["us", "event_id"], ["us", "event_type"]):
+        if prev_type is not None:
+            out_src.append(prev_type)
+            out_dst.append(et)
+        prev_type, last_us = et, int(us)
+    if last_us is not None:
         state.update((prev_type, last_us))
     yield pd.DataFrame({"src": out_src, "dst": out_dst})
 
 
-@query("stream_transition_matrix")
+@query("stream_transition_matrix", oracle=TRANSITION_ORACLE)
 def stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Markov transition matrix maintained INCREMENTALLY: the lag
     window that batch edge-extraction uses cannot run on a stream, so
@@ -1892,7 +1716,7 @@ def stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cross-batch equivalence holds when batches arrive in event-time
     order per user (exact under AvailableNow replay) — the same
     documented reorder-buffer limit as the EWMA/funnel folds."""
-    stream = _events_stream(spark, sf_dir)
+    stream = _fixture_stream(spark, sf_dir)
     from ..tables import ntz_epoch_us  # noqa: F401  (ts already instant)
 
     prepared = stream.select(
@@ -1917,14 +1741,7 @@ def stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return transition_grid(edges)
 
 
-# module-level import so a worker unpickling this module resolves the
-# key (the registry's load_all does not run on executors)
-from ..operators import graph as _graph  # noqa: E402
-
-_ORACLES["stream_transition_matrix"] = _ORACLES["event_transition_matrix"]
-
-
-@query("stream_golden_record")
+@query("stream_golden_record", oracle=GOLDEN_RECORD_ORACLE)
 def stream_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Golden-record survivorship maintained INCREMENTALLY: the guarded
     (us, event_id, value)-struct MAX per attribute is an ordinary
@@ -1940,7 +1757,7 @@ def stream_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch must agree once the stream drains."""
     from ..operators.warehouse import golden_attr_versions, golden_merge
 
-    stream = _events_stream(spark, sf_dir).filter(
+    stream = _fixture_stream(spark, sf_dir).filter(
         F.expr(
             "props IS NOT NULL"
             " AND get_json_object(props, '$.k') IS NOT NULL"
@@ -1949,11 +1766,6 @@ def stream_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = golden_attr_versions(stream, F.unix_micros(F.col("ts")))
     merged = golden_merge(v)
     return run_available_now(merged, "complete", state_partitions=_FOLD_STATE_PARTS)
-
-
-from ..operators import warehouse as _warehouse  # noqa: E402
-
-_ORACLES["stream_golden_record"] = _ORACLES["golden_record_survivorship"]
 
 
 _CUSUM_STATE = "k bigint, cum bigint"
@@ -1967,28 +1779,19 @@ def _cusum_fn(
 ) -> Iterator[pd.DataFrame]:
     """Per-series cumulative-sum fold with O(1) state: carry only
     (position k, running cents sum) across micro-batches; each batch
-    concat + sorts by (us, event_id) (the chunk-ordering lesson) and
+    folds its rows in (us, event_id) order (``_rows_in_order``) and
     emits one (rn, cum) prefix row per event — exact integers, so any
-    batch seam reproduces the batch window's cumsum bit-for-bit."""
+    batch seam reproduces the batch window's cumsum bit-for-bit. An
+    empty batch leaves the state untouched."""
     k, cum = state.get if state.exists else (0, 0)
-    chunks = [p for p in pdfs if len(p)]
     out_rn: list[int] = []
     out_cum: list[int] = []
-    if chunks:
-        batch = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        for _us, _eid, c in (
-            batch.sort_values(["us", "event_id"], kind="mergesort")[
-                ["us", "event_id", "c"]
-            ].itertuples(index=False, name=None)
-        ):
-            k += 1
-            cum += int(c)
-            out_rn.append(k)
-            out_cum.append(cum)
+    for (c,) in _rows_in_order(pdfs, ["us", "event_id"], ["c"]):
+        k += 1
+        cum += int(c)
+        out_rn.append(k)
+        out_cum.append(cum)
+    if out_rn:
         state.update((k, cum))
     yield pd.DataFrame(
         {
@@ -1999,7 +1802,7 @@ def _cusum_fn(
     )
 
 
-@query("stream_changepoint_cusum")
+@query("stream_changepoint_cusum", oracle=CUSUM_ORACLE)
 def stream_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM changepoint detection maintained INCREMENTALLY: the
     cumulative-deviation peak needs the series TOTAL, which no one-pass
@@ -2010,14 +1813,13 @@ def stream_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     event, then the argmax of |n·cum_k − k·total| runs as the batch
     finalize over the drained sink — the identical exact-BIGINT
     statistic as the batch twin, so the two must agree bit-for-bit once
-    the stream drains (shared ORACLE, registered below). A monitoring
-    dashboard re-runs only the finalize; the event stream is never
-    re-read.
+    the stream drains (shared ORACLE). A monitoring dashboard re-runs
+    only the finalize; the event stream is never re-read.
 
     Cross-batch equivalence holds when batches arrive in event-time
     order per series (exact under AvailableNow replay) — the same
     documented reorder-buffer limit as the EWMA/transition folds."""
-    stream = _events_stream(spark, sf_dir)
+    stream = _fixture_stream(spark, sf_dir)
     prepared = stream.select(
         "event_type",
         F.unix_micros("ts").alias("us"),
@@ -2068,13 +1870,6 @@ def stream_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..operators import timeseries as _timeseries  # noqa: E402
-
-_ORACLES["stream_changepoint_cusum"] = _ORACLES[
-    "timeseries_changepoint_cusum"
-]
-
-
 _SESSTO_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
 _SESSTO_STATE = "start_us bigint, end_us bigint, n bigint"
 _SESSTO_OUT = "user_id bigint, start_us bigint, end_us bigint, n_events bigint"
@@ -2096,14 +1891,8 @@ def _session_timeout_fn(
         out.append((key[0], s, e, n))
         state.remove()
     else:
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            batch = (
-                pd.concat(chunks, ignore_index=True)
-                if len(chunks) > 1
-                else chunks[0]
-            )
-            uss = sorted(int(u) for u in batch["us"])
+        uss = [int(u) for (u,) in _rows_in_order(pdfs, ["us"], ["us"])]
+        if uss:
             if state.exists:
                 s, e, n = state.get
             else:
@@ -2195,9 +1984,8 @@ def stream_session_timeout_close(
     activity-window bookkeeping (RunStatus.scala:87-115) as true
     stream state.
     """
-    path = _events_with_flush_sentinel(spark, sf_dir)
     stream = (
-        _scratch_events_stream(spark, path)
+        _fixture_stream(spark, sf_dir, flush=True)
         .withWatermark("ts", "1 day")
         .select("user_id", F.unix_micros("ts").alias("us"), "ts")
     )
@@ -2871,7 +2659,7 @@ def stream_jdbc_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         jdbc_execute(spark, url, merge_sql)
 
-    stream = _events_stream(spark, sf_dir).select(
+    stream = _fixture_stream(spark, sf_dir).select(
         "user_id", "ts", "event_id", "value", "event_type"
     )
     run_available_now(stream, state_partitions=None, sink=apply_batch)

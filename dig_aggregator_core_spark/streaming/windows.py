@@ -19,8 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import instant_as_ntz, load, ntz_as_utc_instant
-from .stateful import run_available_now
+from ..tables import instant_as_ntz, load
+from .stateful import _fixture_stream, run_available_now
 
 _TUMBLING_ORACLE = """
 SELECT time_bucket(INTERVAL 1 DAY, ts) AS window_start,
@@ -120,50 +120,18 @@ def session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _events_stream_ntz(spark: SparkSession, sf_dir: str):
-    """File-source stream over events.parquet plus the event-time embed.
+    """The events stream (stateful._fixture_stream) and ``to_ntz(col,
+    alias)``, which converts an emitted TIMESTAMP window bound back to the
+    oracle's naive domain when the fixture's ts is naive (the stream
+    embeds it as a UTC instant, tz-proof both ways) and is the identity
+    otherwise."""
+    from ..tables import raw_schema
 
-    Returns (stream, to_ntz) where to_ntz(col, alias) converts an emitted
-    TIMESTAMP window bound back to the oracle's naive domain (identity
-    when the source ts already is TIMESTAMP). Watermarks reject
-    TIMESTAMP_NTZ, so a naive ts is embedded as a UTC instant — tz-proof
-    both ways (tables.ntz_as_utc_instant / instant_as_ntz).
-    """
-    import os
-
-    from ..tables import raw_schema as _raw_schema
-
-    src = f"{sf_dir}/events.parquet"
-    # memoized footer schema (sets nanosAsLong itself) — see
-    # stateful._events_stream
-    raw_schema = _raw_schema(spark, sf_dir, "events")
-    if os.path.isdir(src):
-        # multi-file dataset (e.g. the scaleproof corpora): stream the
-        # directory itself — the single-file glob below matches NO leaf
-        # files and silently streams zero rows (same r10 fix as
-        # stateful._events_stream; caught AGAIN by the r11 broad
-        # streaming x10 audit reading 0-row results on this module's
-        # window ops)
-        stream = spark.readStream.schema(raw_schema).parquet(src)
-    else:
-        # driver fixture: events.parquet is one FILE, so stream the
-        # parent dir filtered to exactly that file
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-        ts_type = "timestamp"
-    if ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", ntz_as_utc_instant("ts"))
-        to_ntz = lambda col, alias: instant_as_ntz(col).alias(alias)  # noqa: E731
-    else:
-        to_ntz = lambda col, alias: F.col(col).alias(alias)  # noqa: E731
-    return stream, to_ntz
+    stream = _fixture_stream(spark, sf_dir)
+    ts_type = raw_schema(spark, sf_dir, "events")["ts"].dataType
+    if ts_type.typeName() == "timestamp_ntz":
+        return stream, lambda col, alias: instant_as_ntz(col).alias(alias)
+    return stream, lambda col, alias: F.col(col).alias(alias)
 
 
 @query("stream_tumbling_availablenow", oracle=_TUMBLING_ORACLE)

@@ -17,8 +17,11 @@ import shutil
 import tempfile
 import time
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+from dig_aggregator_core_spark.streaming import stateful
 from dig_aggregator_core_spark.streaming.stateful import (
     _EWMA_OUT,
     _EWMA_STATE,
@@ -128,7 +131,9 @@ def test_ewma_state_carries_across_batches(spark, sf_dir):
 
 
 class _FakeState:
-    """Minimal GroupState stand-in for unit-driving _ewma_fn."""
+    """Minimal GroupState stand-in for unit-driving the folds."""
+
+    hasTimedOut = False
 
     def __init__(self):
         self._v = None
@@ -144,27 +149,108 @@ class _FakeState:
     def update(self, v):
         self._v = v
 
+    def getCurrentWatermarkMs(self):
+        return 0
 
-def test_ewma_fold_is_globally_ordered_across_arrow_chunks():
-    """applyInPandasWithState delivers one key's micro-batch as an
-    ITERATOR of Arrow chunks (split at arrow.maxRecordsPerBatch). The fold
-    must order by (ts, value) across ALL chunks, not per chunk — here the
-    later-timestamped rows arrive in the FIRST chunk, so a per-chunk sort
-    would fold them first and produce a different EWMA."""
-    import pandas as pd
+    def setTimeoutTimestamp(self, ms):
+        pass
 
-    late = pd.DataFrame({"ts": [30, 40], "value": [3.0, 4.0]})
-    early = pd.DataFrame({"ts": [10, 20], "value": [1.0, 2.0]})
-    state = _FakeState()
-    (out,) = list(_ewma_fn((7,), iter([late, early]), state))
 
-    ewma = 1.0  # fold in true ts order: 1, 2, 3, 4
-    for v in (2.0, 3.0, 4.0):
+def _ewma_after(*vals):
+    ewma = vals[0]
+    for v in vals[1:]:
         ewma = 0.3 * v + 0.7 * ewma
-    assert out["user_id"].tolist() == [7]
-    assert out["n_events"].tolist() == [4]
-    assert out["ewma"].tolist() == [round(ewma, 6)]
-    assert state.get == (4, ewma)
+    return ewma
+
+
+_GAP = stateful._SESSTO_GAP_US
+# fold, key, the key's rows in event-time order, expected emitted
+# columns, expected state. Each case is order-sensitive: folding the
+# later half first gives other columns or another state.
+_ORDER_CASES = {
+    "ewma": (
+        stateful._ewma_fn,
+        (7,),
+        {"ts": [10, 20, 30, 40], "value": [1.0, 2.0, 3.0, 4.0]},
+        {"user_id": [7], "n_events": [4], "ewma": [round(_ewma_after(1, 2, 3, 4), 6)]},
+        (4, _ewma_after(1.0, 2.0, 3.0, 4.0)),
+    ),
+    "funnel": (
+        stateful._funnel_fn,
+        (7,),
+        {"us": [10, 20, 30, 40], "event_type": ["view", "click", "purchase", "view"]},
+        {"user_id": [7], "t1": [10], "t2": [20], "t3": [30]},
+        (10, 20, 30),
+    ),
+    "attribution": (
+        stateful._attr_fn,
+        (7,),
+        {
+            "us": [10, 20, 30, 40],
+            "event_id": [1, 2, 3, 4],
+            "event_type": ["view", "purchase", "click", "purchase"],
+        },
+        {
+            "purchase_id": [2, 4],
+            "touch_id": [1, 3],
+            "touch_type": ["view", "click"],
+            "gap_us": [10, 10],
+        },
+        (30, 3, "click"),
+    ),
+    "zscore": (
+        stateful._zanom_fn,
+        (7,),
+        {
+            "us": [1, 2, 3, 4, 5, 6, 7],
+            "event_id": [1, 2, 3, 4, 5, 6, 7],
+            "xi": [0, 0, 0, 0, 0, 100, 50],
+        },
+        {"event_id": [6, 7], "n_prior": [5, 6], "is_anomaly": [True, False]},
+        (7, 150, 12500),
+    ),
+    "transition": (
+        stateful._transition_fn,
+        (7,),
+        {
+            "us": [10, 20, 30, 40],
+            "event_id": [1, 2, 3, 4],
+            "event_type": ["view", "click", "purchase", "view"],
+        },
+        {"src": ["view", "click", "purchase"], "dst": ["click", "purchase", "view"]},
+        ("view", 40),
+    ),
+    "cusum": (
+        stateful._cusum_fn,
+        ("click",),
+        {"us": [10, 20, 30, 40], "event_id": [1, 2, 3, 4], "c": [5, -3, 7, 1]},
+        {"event_type": ["click"] * 4, "rn": [1, 2, 3, 4], "cum": [5, 2, 9, 10]},
+        (4, 10),
+    ),
+    "session_timeout": (
+        stateful._session_timeout_fn,
+        (7,),
+        {"us": [0, _GAP // 2, 3 * _GAP, 3 * _GAP + 1]},
+        {"user_id": [7], "start_us": [0], "end_us": [_GAP // 2], "n_events": [2]},
+        (3 * _GAP, 3 * _GAP + 1, 2),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_ORDER_CASES))
+def test_fold_is_globally_ordered_across_arrow_chunks(case):
+    """applyInPandasWithState delivers one key's micro-batch as an
+    ITERATOR of Arrow chunks (split at arrow.maxRecordsPerBatch). Each
+    ordered fold must order its rows across ALL chunks, not per chunk —
+    here the later rows arrive in the FIRST chunk, so a per-chunk sort
+    would fold them first and emit a different result."""
+    fn, key, rows, want, want_state = _ORDER_CASES[case]
+    df = pd.DataFrame(rows)
+    half = len(df) // 2
+    state = _FakeState()
+    (out,) = list(fn(key, iter([df.iloc[half:], df.iloc[:half]]), state))
+    assert {c: out[c].tolist() for c in want} == want
+    assert state.get == want_state
 
 
 def test_funnel_state_carries_across_batches(spark, sf_dir):
@@ -634,6 +720,17 @@ def test_cdc_upsert_state_carries_across_batches(spark, sf_dir):
     }
     assert got == expected
     assert len(got) > 0
+
+
+def test_cdc_upsert_leaves_no_scratch(spark, sf_dir, tmp_path, monkeypatch):
+    """stream_cdc_upsert keeps its per-epoch state versions out of the
+    temp dir: once it returns, no cdc_state_* entry is left there, and
+    the returned table is still readable."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = stateful.stream_cdc_upsert(spark, sf_dir)
+    assert not [p.name for p in tmp_path.iterdir() if p.name.startswith("cdc_state_")]
+    n_users = load(spark, sf_dir, "events").select("user_id").distinct().count()
+    assert 0 < out.count() <= n_users
 
 
 def test_ewma_state_survives_query_restart(spark, sf_dir):

@@ -1,4 +1,5 @@
-"""The one AvailableNow runner (streaming.stateful.run_available_now).
+"""The one AvailableNow runner (streaming.stateful.run_available_now)
+and the one fixture source (streaming.stateful._fixture_stream).
 
 Contracts pinned here:
   * state partitions are capped at the session's task slots: a fold asks
@@ -11,7 +12,9 @@ Contracts pinned here:
   * shared session conf survives concurrent callers: streaming runners
     and a dynamic-overwrite index compaction run together in threads
     return what a serial run returns, and leave
-    spark.sql.shuffle.partitions and partitionOverwriteMode as they were.
+    spark.sql.shuffle.partitions and partitionOverwriteMode as they were;
+  * the fixture source streams every row of events and documents, from a
+    single-file table and from a multi-file ``<table>.parquet`` dir.
 """
 from __future__ import annotations
 
@@ -22,7 +25,9 @@ import shutil
 import sys
 import threading
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+import pytest
 
 from dig_aggregator_core_spark.operators.similarity import (
     _DELETED_FILTER,
@@ -178,3 +183,23 @@ def test_shared_conf_survives_concurrent_runs(spark, sf_dir, tmp_path):
     # one drain per memory-sink query, none lost to a racing increment
     assert sum(stateful._DRAIN_STATS.values()) == drains + 4
     assert {k: spark.conf.get(k) for k in _SHARED} == before
+
+
+@pytest.mark.parametrize("layout", ["file", "dir"])
+@pytest.mark.parametrize("name", ["events", "documents"])
+def test_fixture_stream_streams_every_row(spark, sf_dir, tmp_path, name, layout):
+    """A multi-file dir must be streamed itself: the single-file glob over
+    its parent matches no leaf file and streams zero rows."""
+    src = sf_dir
+    if layout == "dir":
+        src = str(tmp_path)
+        table = pq.read_table(f"{sf_dir}/{name}.parquet")
+        os.makedirs(f"{src}/{name}.parquet")
+        step = -(-table.num_rows // 3)
+        for i in range(3):
+            pq.write_table(
+                table.slice(i * step, step), f"{src}/{name}.parquet/part-{i}.parquet"
+            )
+    stream = stateful._fixture_stream(spark, src, name)
+    drained = stateful.run_available_now(stream.select(stream.columns[0]))
+    assert drained.count() == load(spark, src, name).count() > 0
