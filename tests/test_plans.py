@@ -132,18 +132,6 @@ def test_reservoir_sample_is_zero_shuffle(spark, sf_dir):
     assert "Exchange" not in plan
 
 
-def test_registry_ordering_is_a_permutation(spark, sf_dir):
-    # ordered_queries must cover every registered query exactly once —
-    # a dropped or duplicated name silently shrinks harness coverage
-    ordered = list(registry.ordered_queries())
-    assert sorted(ordered) == sorted(registry.QUERIES)
-    assert len(set(ordered)) == len(ordered)
-    # verified/deferred sets must only name real queries (catch typos
-    # when refreshing them each round)
-    assert registry._VERIFIED_PRIOR_ROUNDS <= set(registry.QUERIES)
-    assert registry._DEFER_TO_NEXT_ROUND <= set(registry.QUERIES)
-
-
 def n_scans(plan: str) -> int:
     return len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M))
 

@@ -4,6 +4,11 @@ rows-executable smoke check."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import pytest
 
 from dig_aggregator_core_spark import registry
@@ -11,6 +16,8 @@ from dig_aggregator_core_spark import registry
 from .oracle import compare, duck_con
 
 registry.load_all()
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -52,16 +59,18 @@ def test_entry_smoke(spark):
 
 
 def test_registry_bookkeeping_invariants():
-    """The round-over-round bookkeeping the driver evidence depends on:
-    every name the registry claims as prior-verified must still be a
-    registered query (a rename would silently orphan its evidence), the
-    deferred set must be registered too, and every registered query must
-    carry a DuckDB oracle (the repo's contract is the strong hash check —
-    a rows-only entry would be a silent downgrade)."""
-    unknown = registry._VERIFIED_PRIOR_ROUNDS - set(registry.QUERIES)
-    assert not unknown, f"verified names not registered: {sorted(unknown)}"
-    undeferred = registry._DEFER_TO_NEXT_ROUND - set(registry.QUERIES)
-    assert not undeferred, f"deferred names not registered: {sorted(undeferred)}"
+    """The bookkeeping the driver evidence depends on, checked without
+    Spark: the driver order covers every query exactly once, the
+    verified manifest names only registered queries (a rename would
+    silently orphan its evidence), every query carries a DuckDB oracle
+    (a rows-only entry would be a silent downgrade of the hash check),
+    and computing the order starts no JVM."""
+    ordered = list(registry.ordered_queries())
+    assert len(ordered) == len(set(ordered))
+    assert set(ordered) == set(registry.QUERIES)
+    manifest = json.loads(registry.MANIFEST.read_text())
+    unknown = set(manifest) - set(registry.QUERIES)
+    assert not unknown, f"manifest names not registered: {sorted(unknown)}"
     missing = (
         set(registry.QUERIES)
         - set(registry.ORACLES)
@@ -71,3 +80,10 @@ def test_registry_bookkeeping_invariants():
     # the by-design set must stay honest: registered, and truly oracle-less
     assert registry.ROWS_ONLY_BY_DESIGN <= set(registry.QUERIES)
     assert not (registry.ROWS_ONLY_BY_DESIGN & set(registry.ORACLES))
+    probe = (
+        "import __spark_entry__ as e\n"
+        "from pyspark import SparkContext\n"
+        "assert len(e.queries()) > 0\n"
+        "assert SparkContext._active_spark_context is None\n"
+    )
+    subprocess.run([sys.executable, "-c", probe], cwd=REPO, check=True)

@@ -7,10 +7,17 @@ Usage:
     python tools/sweep.py                 # unverified tier only, sf0.01
     python tools/sweep.py --all           # every registered query
     python tools/sweep.py name1 name2     # just these names
+    python tools/sweep.py --fold CORRECTNESS_rN.json
+
+``--fold`` runs nothing: it records the current code fingerprint of each
+green row of a driver correctness file in the registry's verified.json,
+so those queries leave the unverified tier until their code changes.
+Fold a file on the tree the driver checked, before changing any code.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import time
@@ -25,20 +32,38 @@ from dig_aggregator_core_spark.session import get_spark  # noqa: E402
 from tests.oracle import compare, duck_con  # noqa: E402
 
 
+def fold(path: str) -> int:
+    """Record each green row's current fingerprint in the manifest."""
+    rows = json.load(open(path))
+    green = [
+        n for n, row in rows.items()
+        if n in registry.QUERIES
+        and (
+            row.get("hash_match") is True
+            or (n in registry.ROWS_ONLY_BY_DESIGN and row.get("err") == "no_oracle")
+        )
+    ]
+    manifest = json.loads(registry.MANIFEST.read_text())
+    manifest.update(registry.code_fingerprints(green))
+    manifest = {n: fp for n, fp in manifest.items() if n in registry.QUERIES}
+    registry.MANIFEST.write_text(json.dumps(manifest, indent=1, sort_keys=True) + "\n")
+    print(f"folded {len(green)}/{len(rows)} green rows; {len(manifest)} in manifest")
+    return 0
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SWEEP_SF_DIR", "/root/testdata/sf0.01")
     args = [a for a in sys.argv[1:] if not a.startswith("-")]
     registry.load_all()
+    if "--fold" in sys.argv:
+        return fold(*args)
     if args:
         names = args
     elif "--all" in sys.argv:
         names = list(registry.ordered_queries())
     else:
-        names = [
-            n
-            for n in registry.ordered_queries()
-            if n not in registry._VERIFIED_PRIOR_ROUNDS
-        ]
+        ok = registry.verified()
+        names = [n for n in registry.ordered_queries() if n not in ok]
     spark = get_spark(app_name="sweep", shuffle_partitions=16)
     con = duck_con(sf_dir)
     failures: list[str] = []
