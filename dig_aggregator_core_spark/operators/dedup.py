@@ -1055,10 +1055,6 @@ def _cc_labels(edge_pairs: DataFrame) -> DataFrame:
         new_edges = _small_star(_large_star(edges)).localCheckpoint()
         n_new = new_edges.count()
         stop = n_new == n_edges and new_edges.exceptAll(edges).isEmpty()
-        # superseded iterate: free its cached blocks (a localCheckpoint
-        # is pinned storage until unpersisted; leaking one per iteration
-        # per call was measurable GC pressure across bench runs)
-        edges.unpersist()
         edges, n_edges = new_edges, n_new
         if stop:
             break
@@ -1240,8 +1236,6 @@ _CC_DELETED_FILTER = "doc_id % 7 = 2"
 # updates (like _committed_cc_labels, over ALL edges not just the
 # committed subgraph)
 def _full_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # unpersist on eviction (ADVICE r12): localCheckpointed label
-    # relation — free the storage blocks
     return session_memo(
         "cc_full", spark, sf_dir, (),
         lambda: _cc_labels(
@@ -1249,7 +1243,6 @@ def _full_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
             )
         ).localCheckpoint(),
-        release=lambda df: df.unpersist(),
     )
 
 

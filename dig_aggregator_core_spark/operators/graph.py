@@ -874,9 +874,6 @@ def capped_cooc_edges(spark: SparkSession, sf_dir: str,
     listing, cap). Deterministic cap (row_number by v) keeps the FoF/AA
     oracles exact; the base relation rides the banded-edge memo."""
     wcap = Window.partitionBy("u").orderBy("v")
-    # unpersist on eviction (ADVICE r12): these are localCheckpointed
-    # edge relations — without the release the evicted blocks stay
-    # pinned until driver GC
     return session_memo(
         "capped_edges", spark, sf_dir, (cap,),
         lambda: banded_cooc_edges(spark, sf_dir, symmetric=True)
@@ -884,7 +881,6 @@ def capped_cooc_edges(spark: SparkSession, sf_dir: str,
         .filter(F.col("rk") <= cap)
         .drop("rk")
         .localCheckpoint(),
-        release=lambda df: df.unpersist(),
     )
 
 

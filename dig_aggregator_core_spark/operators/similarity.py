@@ -2189,13 +2189,11 @@ def ann_index_compact(
         shutil.rmtree(
             os.path.join(data_dir, f"pbucket={b}"), ignore_errors=True
         )
-    survivors.unpersist()
     remaining = tombs.filter(~F.col("pbucket").isin(affected))
     # rewrite-then-swap: the tombstone file is tiny (bounded between
     # compactions), so an atomic rename replaces it
     tmp = tomb_path + "_next"
     remaining.coalesce(1).write.mode("overwrite").parquet(tmp)
-    tombs.unpersist()
     shutil.rmtree(tomb_path, ignore_errors=True)
     os.replace(tmp, tomb_path)
 
@@ -2818,10 +2816,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return assigned, probes, codes
 
-    assigned, probes, codes = session_memo(
-        "ivfpq", spark, sf_dir, (), derive,
-        release=lambda dfs: [df.unpersist() for df in dfs],
-    )
+    assigned, probes, codes = session_memo("ivfpq", spark, sf_dir, (), derive)
     # per-query distance table as an M x K array (broadcast: |q| rows,
     # ~1 KB each) — the FAISS layout, looked up per candidate instead of
     # joined per (m, code): the first draft's (cent, m, code) equi-join

@@ -2222,7 +2222,6 @@ def stream_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     def apply_batch(batch: DataFrame, epoch_id: int) -> None:
         ids = batch.select("doc_id").localCheckpoint()
         if ids.isEmpty():
-            ids.unpersist()
             return
         batch_sh = sh.join(F.broadcast(ids), "doc_id")
         batch_bands = _bands_of(batch_sh).localCheckpoint()
@@ -2343,7 +2342,6 @@ def stream_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch_bands is already checkpointed above — appending the
         # PIECE is O(1); nothing already indexed is rewritten
         bands_pieces.append(batch_bands)
-        ids.unpersist()
 
     # stage the ingest stream: the mutated twins split into two batch
     # files, modification times pinned so the file source delivers them
@@ -2374,11 +2372,6 @@ def stream_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint=os.path.join(base, "ckpt"),
     )
     shutil.rmtree(base, ignore_errors=True)
-    # the per-batch band pieces are dead once the stream drains;
-    # freeing them keeps repeated runs memory-flat. sh is the SHARED
-    # "shingled" session_memo entry — never unpersisted here.
-    for piece in bands_pieces[1:]:
-        piece.unpersist()
     # ONE corpus-sized materialization after the drain (was: one full
     # label-relation localCheckpoint PER EPOCH).
     if deferred:
@@ -2400,10 +2393,6 @@ def stream_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged = _cc_labels(
             reduce(lambda a, b: a.unionByName(b), pieces)
         )
-        # _cc_labels checkpoints its inputs eagerly up front, so the
-        # deferred pieces are dead once it returns
-        for piece in deferred:
-            piece.unpersist()
         old_comp = base_labels.select(
             F.col("component").alias("c")
         ).distinct()
