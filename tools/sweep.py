@@ -34,7 +34,8 @@ from tests.oracle import compare, duck_con  # noqa: E402
 
 def fold(path: str) -> int:
     """Record each green row's current fingerprint in the manifest."""
-    rows = json.load(open(path))
+    with open(path) as f:
+        rows = json.load(f)
     green = [
         n for n, row in rows.items()
         if n in registry.QUERIES
