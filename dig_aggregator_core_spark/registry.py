@@ -16,12 +16,10 @@ from __future__ import annotations
 
 import builtins
 import dis
-import functools
 import hashlib
 import importlib.util
 import json
 import pathlib
-import re
 import sys
 import types
 from collections.abc import Callable
@@ -195,11 +193,6 @@ def _enc(v, top: str, edges: list) -> str:
         return f"{type(v).__name__}({_enc(v.__func__, top, edges)})"
     if isinstance(v, property):
         return "property" + _enc((v.fget, v.fset, v.fdel), top, edges)
-    if isinstance(v, functools.partial):
-        kw = tuple(v.keywords.items())
-        return "partial" + _enc((v.func, v.args, kw), top, edges)
-    if isinstance(v, re.Pattern):
-        return f"re:{v.pattern!r}:{v.flags}"
     if isinstance(v, (dict, list, set)):
         pairs = list(v.items()) if isinstance(v, dict) else [(None, x) for x in v]
         held = [
