@@ -13,6 +13,7 @@ ship to a real cluster's planner at scale.
 from __future__ import annotations
 
 import io
+import json
 import re
 from contextlib import redirect_stdout
 
@@ -130,6 +131,19 @@ def test_reservoir_sample_is_zero_shuffle(spark, sf_dir):
     plan = plan_of("sample_reservoir_priority", spark, sf_dir)
     assert "TakeOrderedAndProject" in plan
     assert "Exchange" not in plan
+
+
+def test_registry_ordering_is_a_permutation():
+    # ordered_queries must cover every registered query exactly once —
+    # a dropped or duplicated name silently shrinks harness coverage
+    ordered = list(registry.ordered_queries())
+    assert sorted(ordered) == sorted(registry.QUERIES)
+    assert len(set(ordered)) == len(ordered)
+    # the verified manifest must only name real queries (a rename would
+    # silently orphan its evidence)
+    manifest = json.loads(registry.MANIFEST.read_text())
+    unknown = set(manifest) - set(registry.QUERIES)
+    assert not unknown, f"manifest names not registered: {sorted(unknown)}"
 
 
 def n_scans(plan: str) -> int:

@@ -4,7 +4,6 @@ rows-executable smoke check."""
 
 from __future__ import annotations
 
-import json
 import os
 import subprocess
 import sys
@@ -60,17 +59,10 @@ def test_entry_smoke(spark):
 
 def test_registry_bookkeeping_invariants():
     """The bookkeeping the driver evidence depends on, checked without
-    Spark: the driver order covers every query exactly once, the
-    verified manifest names only registered queries (a rename would
-    silently orphan its evidence), every query carries a DuckDB oracle
-    (a rows-only entry would be a silent downgrade of the hash check),
-    and computing the order starts no JVM."""
-    ordered = list(registry.ordered_queries())
-    assert len(ordered) == len(set(ordered))
-    assert set(ordered) == set(registry.QUERIES)
-    manifest = json.loads(registry.MANIFEST.read_text())
-    unknown = set(manifest) - set(registry.QUERIES)
-    assert not unknown, f"manifest names not registered: {sorted(unknown)}"
+    Spark: every query carries a DuckDB oracle (a rows-only entry would
+    be a silent downgrade of the hash check), and listing the queries
+    starts no JVM. The order and manifest invariants live in
+    test_plans.test_registry_ordering_is_a_permutation."""
     missing = (
         set(registry.QUERIES)
         - set(registry.ORACLES)
