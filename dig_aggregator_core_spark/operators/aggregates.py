@@ -772,17 +772,15 @@ def incremental_join_maintenance(
 CMS_D = 3
 CMS_W = 16
 
-_CMS_H = {
-    # engine-identical 32-bit hash of (row_id ':' token), bucketed
-    "spark": (
-        "CAST(conv(substring(md5(concat(CAST(j AS STRING), ':', token)),"
-        f" 1, 8), 16, 10) AS BIGINT) % {CMS_W}"
-    ),
-    "duck": (
-        "CAST(('0x' || substring(md5(CAST(j AS VARCHAR) || ':' || token),"
-        f" 1, 8)) AS BIGINT) % {CMS_W}"
-    ),
-}
+# engine-identical 32-bit hash of (row_id ':' token), bucketed
+_CMS_H_SPARK = (
+    "CAST(conv(substring(md5(concat(CAST(j AS STRING), ':', token)),"
+    f" 1, 8), 16, 10) AS BIGINT) % {CMS_W}"
+)
+_CMS_H_DUCK = (
+    "CAST(('0x' || substring(md5(CAST(j AS VARCHAR) || ':' || token),"
+    f" 1, 8)) AS BIGINT) % {CMS_W}"
+)
 
 
 @query(
@@ -794,9 +792,9 @@ _CMS_H = {
       WHERE tok <> '' GROUP BY 1
     ),
     cells AS (
-      SELECT token, exact_n, j, {_CMS_H['duck']} AS bucket,
+      SELECT token, exact_n, j, {_CMS_H_DUCK} AS bucket,
              CAST(SUM(exact_n) OVER (
-               PARTITION BY j, {_CMS_H['duck']}) AS BIGINT) AS cell_n
+               PARTITION BY j, {_CMS_H_DUCK}) AS BIGINT) AS cell_n
       FROM vocab CROSS JOIN (SELECT unnest(range({CMS_D})) AS j)
     )
     SELECT token, MIN(exact_n) AS exact_n,
@@ -836,7 +834,7 @@ def cms_frequency_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(
             vocab.sparkSession.range(CMS_D).select(F.col("id").alias("j"))
         )
-    ).withColumn("bucket", F.expr(_CMS_H["spark"]))
+    ).withColumn("bucket", F.expr(_CMS_H_SPARK))
     w = Window.partitionBy("j", "bucket")
     cells = rows.withColumn(
         "cell_n", F.sum("exact_n").over(w).cast("bigint")

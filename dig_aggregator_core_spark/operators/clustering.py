@@ -470,7 +470,9 @@ _BAL_SEED_SQL = (
     f"vec_id % {_BAL_CENT_MOD} = 0 AND vec_id < {_BAL_CENT_MOD * _BAL_K}"
 )
 
-_BAL_ORACLE = f"""
+# the oracle twin of _balanced_round1: centroids, cap, ranked choices,
+# first choices ranked within their centroid, and those within the cap
+_BAL_ROUND1_SQL = f"""
 WITH vecs AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
          sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
@@ -509,7 +511,9 @@ first_choice AS (
 kept AS (
   SELECT f.vec_id, f.cent_id, f.cos, 1 AS choice
   FROM first_choice f, cap WHERE f.cap_rk <= cap.cap
-),
+)"""
+
+_BAL_ORACLE = f"""{_BAL_ROUND1_SQL},
 spilled AS (
   SELECT r.vec_id, r.cent_id, r.cos, 2 AS choice
   FROM ranked r
@@ -523,25 +527,27 @@ FROM (SELECT * FROM kept UNION ALL SELECT * FROM spilled)
 """
 
 
-@query("kmeans_balanced_assign", oracle=_BAL_ORACLE)
-def kmeans_balanced_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Capacity-balanced cluster assignment — the shard-balancing step
-    IVF serving and semdedup both need at scale (a nearest-centroid
-    assignment on real data is power-law skewed; a cell holding 30% of
-    the corpus becomes the straggler of every probe): each vector's
-    centroids are ranked by cosine; a centroid keeps only its cap =
-    ceil({slack} * N/K) best first-choice vectors (by cosine, ties by
-    id); everything past the cap spills to its SECOND-choice centroid —
-    the standard one-round spill heuristic (full balance is an
-    assignment-problem; one round bounds every cell at cap + spill-in,
-    which the invariant test pins).
+def _cell_rank():
+    """A vector's rank among the vectors competing for its centroid:
+    cosine desc, ties by vec_id."""
+    from pyspark.sql import Window
 
-    Determinism: the bit-exact sequential cosine everywhere, total
-    tie-breaks, and an integer cap computed identically on both
-    engines. Scale: K centroids broadcast (the ann_ivf_probe device);
-    both windows partition on high-cardinality keys (vec_id; cent_id
-    with per-cell fan-in bounded by the first-choice set); output is
-    one row per vector."""
+    return F.row_number().over(
+        Window.partitionBy("cent_id").orderBy(
+            F.col("cos").desc(), F.col("vec_id")
+        )
+    )
+
+
+def _balanced_round1(spark: SparkSession, sf_dir: str):
+    """The round both balanced assignments share. Returns ``(ranked,
+    first, kept, cap)``: every vector's seed centroids ranked by cosine
+    (``ranked``: vec_id, cent_id, cos, choice_rk; checkpointed), the
+    first choices ranked within their centroid (``first``: + cap_rk),
+    the first choices within the cap (``kept``: vec_id, cent_id, cos,
+    choice = 1), and the cap itself."""
+    from pyspark.sql import Window
+
     vecs = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
@@ -552,8 +558,6 @@ def kmeans_balanced_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))"
         ),
     )
-    from pyspark.sql import Window
-
     cents = F.broadcast(
         vecs.filter(F.expr(_BAL_SEED_SQL)).select(
             F.col("vec_id").alias("cent_id"),
@@ -581,15 +585,35 @@ def kmeans_balanced_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "cent_id", "cos", "choice_rk")
         .localCheckpoint()
     )
-    w_cap = Window.partitionBy("cent_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id")
-    )
     first = ranked.filter(F.col("choice_rk") == 1).withColumn(
-        "cap_rk", F.row_number().over(w_cap)
+        "cap_rk", _cell_rank()
     )
     kept = first.filter(F.col("cap_rk") <= cap).select(
         "vec_id", "cent_id", "cos", F.lit(1).alias("choice")
     )
+    return ranked, first, kept, cap
+
+
+@query("kmeans_balanced_assign", oracle=_BAL_ORACLE)
+def kmeans_balanced_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Capacity-balanced cluster assignment — the shard-balancing step
+    IVF serving and semdedup both need at scale (a nearest-centroid
+    assignment on real data is power-law skewed; a cell holding 30% of
+    the corpus becomes the straggler of every probe): each vector's
+    centroids are ranked by cosine; a centroid keeps only its cap =
+    ceil({slack} * N/K) best first-choice vectors (by cosine, ties by
+    id); everything past the cap spills to its SECOND-choice centroid —
+    the standard one-round spill heuristic (full balance is an
+    assignment-problem; one round bounds every cell at cap + spill-in,
+    which the invariant test pins).
+
+    Determinism: the bit-exact sequential cosine everywhere, total
+    tie-breaks, and an integer cap computed identically on both
+    engines. Scale: K centroids broadcast (the ann_ivf_probe device);
+    both windows partition on high-cardinality keys (vec_id; cent_id
+    with per-cell fan-in bounded by the first-choice set); output is
+    one row per vector."""
+    ranked, first, kept, cap = _balanced_round1(spark, sf_dir)
     spilled = (
         ranked.filter(F.col("choice_rk") == 2)
         .join(
@@ -613,46 +637,7 @@ kmeans_balanced_assign.__doc__ = kmeans_balanced_assign.__doc__.format(
 
 # ---------------------------------- balanced assignment, 2-round strict
 
-_BAL2_ORACLE = f"""
-WITH vecs AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)),
-              (acc, x) -> acc + x)) AS nrm
-  FROM embeddings
-),
-cents AS (
-  SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM vecs
-  WHERE {_BAL_SEED_SQL}
-),
-cap AS (
-  SELECT CAST(({_BAL_SLACK_NUM} * (SELECT COUNT(*) FROM vecs)
-               + {_BAL_SLACK_DEN} * (SELECT COUNT(*) FROM cents) - 1)
-              // ({_BAL_SLACK_DEN} * (SELECT COUNT(*) FROM cents))
-         AS BIGINT) AS cap
-),
-ranked AS (
-  SELECT x.vec_id, c.cent_id,
-         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-           list_transform(range(1, len(x.v) + 1), i -> x.v[i] * c.cv[i])),
-           (acc, y) -> acc + y) / (x.nrm * c.cn) AS cos,
-         ROW_NUMBER() OVER (PARTITION BY x.vec_id ORDER BY
-           list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-             list_transform(range(1, len(x.v) + 1), i -> x.v[i] * c.cv[i])),
-             (acc, y) -> acc + y) / (x.nrm * c.cn) DESC, c.cent_id)
-           AS choice_rk
-  FROM vecs x CROSS JOIN cents c
-),
-first_choice AS (
-  SELECT vec_id, cent_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY cent_id
-                            ORDER BY cos DESC, vec_id) AS cap_rk
-  FROM ranked WHERE choice_rk = 1
-),
-kept AS (
-  SELECT f.vec_id, f.cent_id, f.cos, 1 AS choice
-  FROM first_choice f, cap WHERE f.cap_rk <= cap.cap
-),
+_BAL2_ORACLE = f"""{_BAL_ROUND1_SQL},
 load1 AS (
   SELECT cent_id, CAST(COUNT(*) AS BIGINT) AS used FROM kept GROUP BY cent_id
 ),
@@ -704,53 +689,7 @@ def kmeans_balanced_assign_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast K-row round-1 load table, so admission can never diverge
     cross-engine. Scale: two windows on high-cardinality keys plus one
     K-row broadcast — same shape as round 1, one more pass."""
-    vecs = load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-    ).withColumn(
-        "nrm",
-        F.expr(
-            "sqrt(aggregate(transform(v, x -> x * x),"
-            " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))"
-        ),
-    )
-    from pyspark.sql import Window
-
-    cents = F.broadcast(
-        vecs.filter(F.expr(_BAL_SEED_SQL)).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("v").alias("cv"),
-            F.col("nrm").alias("cn"),
-        )
-    )
-    n = vecs.count()
-    k = vecs.filter(F.expr(_BAL_SEED_SQL)).count()
-    cap = -(-_BAL_SLACK_NUM * n // (_BAL_SLACK_DEN * k))
-    w_choice = Window.partitionBy("vec_id").orderBy(
-        F.col("cos").desc(), F.col("cent_id")
-    )
-    ranked = (
-        vecs.crossJoin(cents)
-        .withColumn(
-            "cos",
-            F.expr(
-                "aggregate(zip_with(v, cv, (x, y) -> x * y),"
-                " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (nrm * cn)"
-            ),
-        )
-        .withColumn("choice_rk", F.row_number().over(w_choice))
-        .select("vec_id", "cent_id", "cos", "choice_rk")
-        .localCheckpoint()
-    )
-    w_cap = Window.partitionBy("cent_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id")
-    )
-    first = ranked.filter(F.col("choice_rk") == 1).withColumn(
-        "cap_rk", F.row_number().over(w_cap)
-    )
-    kept = first.filter(F.col("cap_rk") <= cap).select(
-        "vec_id", "cent_id", "cos", F.lit(1).alias("choice")
-    )
+    ranked, first, kept, cap = _balanced_round1(spark, sf_dir)
     load1 = kept.groupBy("cent_id").agg(
         F.count("*").cast("bigint").alias("used")
     )
@@ -758,7 +697,7 @@ def kmeans_balanced_assign_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
     second = (
         ranked.filter(F.col("choice_rk") == 2)
         .join(overflow1, "vec_id")
-        .withColumn("rk2", F.row_number().over(w_cap))
+        .withColumn("rk2", _cell_rank())
     )
     with_cap = second.join(F.broadcast(load1), "cent_id", "left").withColumn(
         "remaining", F.lit(cap) - F.coalesce(F.col("used"), F.lit(0))

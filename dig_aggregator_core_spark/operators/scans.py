@@ -659,7 +659,10 @@ def scan_jsonl_corrupt_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_AVRO_SCHEMA = {
+# the writer schema as Avro JSON text (parsed where the files are
+# written); the ["null", string] union exercises the optional-branch
+# encoding
+_AVRO_SCHEMA = """{
     "type": "record",
     "name": "orders_row",
     "fields": [
@@ -667,10 +670,9 @@ _AVRO_SCHEMA = {
         {"name": "o_custkey", "type": "long"},
         {"name": "o_orderpriority", "type": "string"},
         {"name": "o_totalprice", "type": "double"},
-        # ["null", string] union exercises the optional-branch encoding
-        {"name": "opt_status", "type": ["null", "string"]},
-    ],
-}
+        {"name": "opt_status", "type": ["null", "string"]}
+    ]
+}"""
 
 
 @query(
@@ -706,6 +708,8 @@ def scan_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (avro-1.12.1.jar via py4j) — files this codec writes are read by
     ``org.apache.avro.file.DataFileReader`` and vice versa, null and
     deflate codecs, multi-block layout, ["null",string] unions."""
+    import json
+
     from ..sources.avroio import make_avro_datasource, write_avro_partitioned
 
     out = _scratch(f"avro_roundtrip_{os.path.basename(sf_dir.rstrip('/'))}")
@@ -718,7 +722,9 @@ def scan_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("o_orderkey") % 3 != 0, F.col("o_orderstatus"))
         .alias("opt_status"),
     )
-    write_avro_partitioned(src, out, _AVRO_SCHEMA, codec="deflate")
+    write_avro_partitioned(
+        src, out, json.loads(_AVRO_SCHEMA), codec="deflate"
+    )
     spark.dataSource.register(make_avro_datasource())
     back = (
         spark.read.format("graftavro")

@@ -1,13 +1,35 @@
-"""Similarity search over the embeddings table (array<float> column).
+"""Vector search over the embeddings table (array<float> column).
 
-Two paths, as a real pipeline would ship them:
-- brute-force cosine top-k: exact baseline, O(n_queries x n_corpus) — fine
-  when the query set is small or the corpus is broadcastable;
-- sign-LSH bucketed top-k: the scale path — corpus and queries are hashed to
-  buckets by the sign pattern of leading dimensions (random-hyperplane LSH
-  with axis-aligned planes, deterministic and engine-portable), and the
-  cross product is confined to each bucket. At 100 TB the bucket id becomes
-  the shuffle/partition key and each bucket fits one task.
+Every operator is built from four shared steps:
+- ``_queries`` / ``_corpus``: the query-panel and corpus projections
+  (``query_id, qv, qn`` / ``neighbor_id, cv, cn``, plus the extra
+  columns the caller names);
+- ``_cosine_topk``: the exact-cosine top-k tail — the sequential fold
+  ``_COS_SPARK``, ``row_number`` over ``(cos desc, neighbor_id)``,
+  ``rank <= k``, the cosine rounded to 6 places;
+- ``_centroid_ranked``: every vector's seed centroids ranked by cosine
+  (IVF cell assignment and probing);
+- ``_pq_cell_adc`` and ``_pq_rerank``: the cell-confined PQ table-lookup
+  scan, and the ADC shortlist re-scored by exact cosine.
+
+The families built on them:
+- exact baseline: ann_topk_bruteforce;
+- sign-LSH (corpus and queries hashed to buckets by the sign pattern of
+  leading dimensions; the cross product is confined to each bucket, and
+  at 100 TB the bucket id becomes the shuffle key): ann_lsh_buckets /
+  ann_lsh_adaptive, ann_lsh_multiprobe, ann_hard_negatives,
+  ann_rerank_quantized;
+- IVF: ann_ivf_probe;
+- the persisted bucket index and its lifecycle: ann_index_persist,
+  ann_index_append, ann_index_probe_join, ann_index_append_multiprobe,
+  ann_index_delete, ann_index_compact;
+- product quantization: ann_pq_adc, ann_ivf_pq, ann_ivf_pq_trained;
+- retrieval evals: ann_recall_eval, eval_ndcg_at_k, eval_mrr_map,
+  eval_rank_fusion_rrf;
+- diversified re-rank: mmr_diversified_topk, mmr_over_index.
+
+Sites whose tail differs (rank fusion, MMR's candidate cut, the
+quantized coarse rank) take only the fold and the projections.
 
 Dot products fold sequentially (aggregate/zip_with in Spark, list_reduce in
 the DuckDB oracle) so both engines produce bit-identical doubles.
@@ -40,6 +62,12 @@ _COS_SQL = """
     (acc, x) -> acc + x) / (q.nrm * c.nrm)
 """
 
+# the Spark twin of _COS_SQL over a (_queries x _corpus) pair row
+_COS_SPARK = (
+    "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
+    " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn)"
+)
+
 
 def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The per-row vector math downstream (norms, dot folds, PQ encode)
@@ -62,10 +90,47 @@ def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COS_SPARK = (
-    "aggregate(zip_with(q.v, c.v, (x, y) -> x * y),"
-    " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (q.nrm * c.nrm)"
-)
+def _queries(vecs: DataFrame, *extra) -> DataFrame:
+    """The query panel of ``vecs`` as the query side of a scoring join:
+    ``query_id, qv, qn`` and then ``extra``."""
+    return vecs.filter(F.expr(_QUERY_FILTER)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qn"),
+        *extra,
+    )
+
+
+def _corpus(vecs: DataFrame, *extra) -> DataFrame:
+    """``vecs`` as the candidate side of a scoring join:
+    ``neighbor_id, cv, cn`` and then ``extra``."""
+    return vecs.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("v").alias("cv"),
+        F.col("nrm").alias("cn"),
+        *extra,
+    )
+
+
+def _cosine_topk(pairs: DataFrame, *keep) -> DataFrame:
+    """The exact-cosine top-k of (query, candidate) pair rows: the
+    sequential fold, ranked per query by (cos desc, neighbor_id), the k
+    best kept as ``query_id, neighbor_id, *keep, cosine, rank``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id")
+    )
+    return (
+        pairs.withColumn("cos", F.expr(_COS_SPARK))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= _TOPK)
+        .select(
+            "query_id",
+            "neighbor_id",
+            *keep,
+            F.round("cos", 6).alias("cosine"),
+            "rank",
+        )
+    )
 
 
 @query(
@@ -91,40 +156,12 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k: broadcast the (small) query set against the
     corpus, score every pair, keep k per query via a ranking window."""
     vecs = _vecs(spark, sf_dir)
-    q = vecs.filter(F.expr(_QUERY_FILTER)).alias("q")
-    c = vecs.alias("c")
-    scored = (
-        F.broadcast(q.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-        ))
-        .crossJoin(c.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("v").alias("cv"),
-            F.col("nrm").alias("cn"),
-        ))
+    # the q/c aliases keep each side's projection collapsed into one
+    # Project, as this plan has always had
+    return _cosine_topk(
+        F.broadcast(_queries(vecs.alias("q")))
+        .crossJoin(_corpus(vecs.alias("c")))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            F.expr(
-                "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
-                " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn)"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine"),
-            "rank",
-        )
     )
 
 
@@ -158,6 +195,24 @@ _NBITS_SQL = (
     "GREATEST(4, LEAST({m}, CAST(ceil(log2(GREATEST(COUNT(*), 1) / 64.0)) AS INT)))"
 ).format(m=_MAXBITS)
 
+
+def _signed_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """_vecs plus ``signs``, the full-width sign string."""
+    return _vecs(spark, sf_dir).withColumn("signs", F.expr(_SIGNS_SPARK))
+
+
+def _adaptive_keyed(vecs: DataFrame, *extra) -> DataFrame:
+    """``vec_id, v, nrm, *extra, bucket`` of ``vecs`` (which carries
+    ``signs``) with the occupancy-adaptive sign bucket: the width comes
+    from a 1-row count aggregate broadcast onto the corpus."""
+    nb = vecs.agg(F.expr(_NBITS_SQL).alias("nb"))
+    return vecs.crossJoin(F.broadcast(nb)).select(
+        "vec_id",
+        "v",
+        "nrm",
+        *extra,
+        F.expr("substring(signs, 1, nb)").alias("bucket"),
+    )
 
 
 _LSH_ADAPTIVE_ORACLE = f"""
@@ -204,7 +259,7 @@ def _lsh_adaptive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossJoin — same value, one less exchange in the serving plan."""
     import math
 
-    vecs = _vecs(spark, sf_dir).withColumn("signs", F.expr(_SIGNS_SPARK))
+    vecs = _signed_vecs(spark, sf_dir)
     n = vecs.count()
     if n > _LSH_CEILING_N:
         _LSH_ROUTE_STATS["ivf"] += 1
@@ -217,42 +272,15 @@ def _lsh_adaptive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nrm",
         F.substring("signs", 1, nb).alias("bucket"),
     )
-    q = keyed.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        "bucket",
-    )
-    c = keyed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-        F.col("bucket").alias("cbucket"),
-    )
-    scored = q.join(
-        c,
-        (q.bucket == c.cbucket)
-        & (F.col("neighbor_id") != F.col("query_id")),
-    ).withColumn(
-        "cos",
-        F.expr(
-            "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
-            " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn)"
+    q = _queries(keyed, "bucket")
+    c = _corpus(keyed, F.col("bucket").alias("cbucket"))
+    return _cosine_topk(
+        q.join(
+            c,
+            (q.bucket == c.cbucket)
+            & (F.col("neighbor_id") != F.col("query_id")),
         ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "bucket",
-            F.round("cos", 6).alias("cosine"),
-            "rank",
-        )
+        "bucket",
     )
 
 
@@ -320,7 +348,7 @@ _IVF_K = 32  # FIXED centroid count: seeds capped at vec_id < 89*32. The
 # (N <= 2000 < 2848) the cap never binds, so results are unchanged.
 # At production scale K is a deliberate knob (kmeans_embeddings trains
 # the centroids; cells stay ~N/K vectors).
-_CENTROID_FILTER_SQL = "vec_id % 89 = 0 AND vec_id < 2848"
+_CENTROID_FILTER_SQL = f"vec_id % 89 = 0 AND vec_id < {89 * _IVF_K}"
 
 # assignment / probing both rank centroids by cosine; ties broken by id
 _IVF_ORACLE = f"""
@@ -389,25 +417,7 @@ def _ivf_probe_topk(
     route (with_bucket=True adds the probed cell id as a `bucket`
     string column so the routed result keeps the LSH output schema)."""
     vecs = _vecs(spark, sf_dir)
-    cents = F.broadcast(
-        vecs.filter(F.expr(_CENTROID_FILTER_SQL)).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("v").alias("cv"),
-            F.col("nrm").alias("cn"),
-        )
-    )
-    cos_to_cent = F.expr(
-        "aggregate(zip_with(v, cv, (x, y) -> x * y),"
-        " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (nrm * cn)"
-    )
-    rk_w = Window.partitionBy("vec_id").orderBy(
-        F.col("cc").desc(), F.col("cent_id")
-    )
-    ranked = (
-        vecs.crossJoin(cents)
-        .withColumn("cc", cos_to_cent)
-        .withColumn("rk", F.row_number().over(rk_w))
-    )
+    ranked = _centroid_ranked(vecs)
     assigned = ranked.filter(F.col("rk") == 1).select(
         "vec_id", "v", "nrm", "cent_id"
     )
@@ -419,42 +429,40 @@ def _ivf_probe_topk(
     # ann_pq_adc's rerank): probes' query_id already satisfies
     # _QUERY_FILTER, so filter before the broadcast rather than shipping
     # all N vectors to every executor
-    q = vecs.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    scored = (
-        probes.join(F.broadcast(q), "query_id")
-        .join(
-            assigned.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("cv2"),
-                F.col("nrm").alias("cn2"),
-                "cent_id",
-            ),
-            "cent_id",
-        )
+    pairs = (
+        probes.join(F.broadcast(_queries(vecs)), "query_id")
+        .join(_corpus(assigned, "cent_id"), "cent_id")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            F.expr(
-                "aggregate(zip_with(qv, cv2, (x, y) -> x * y),"
-                " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn2)"
-            ),
+    )
+    bucket = [F.col("cent_id").cast("string").alias("bucket")]
+    return _cosine_topk(pairs, *(bucket if with_bucket else []))
+
+
+def _centroid_ranked(vecs: DataFrame) -> DataFrame:
+    """``vecs`` crossed with the broadcast seed centroids (``cent_id,
+    cv, cn``): ``cc`` is the cosine to the centroid and ``rk`` the
+    centroid's rank for the vector (cc desc, cent_id) — rk = 1 is the
+    vector's cell, rk <= nprobe a query's probed cells."""
+    cents = F.broadcast(
+        vecs.filter(F.expr(_CENTROID_FILTER_SQL)).select(
+            F.col("vec_id").alias("cent_id"),
+            F.col("v").alias("cv"),
+            F.col("nrm").alias("cn"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
+    rk_w = Window.partitionBy("vec_id").orderBy(
+        F.col("cc").desc(), F.col("cent_id")
     )
-    cols = ["query_id", "neighbor_id"]
-    if with_bucket:
-        cols.append(F.col("cent_id").cast("string").alias("bucket"))
-    cols += [F.round("cos", 6).alias("cosine"), "rank"]
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(*cols)
+        vecs.crossJoin(cents)
+        .withColumn(
+            "cc",
+            F.expr(
+                "aggregate(zip_with(v, cv, (x, y) -> x * y),"
+                " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (nrm * cn)"
+            ),
+        )
+        .withColumn("rk", F.row_number().over(rk_w))
     )
 
 
@@ -470,16 +478,10 @@ def _flip_sql(bucket: str, i: str) -> str:
     )
 
 
-@query(
-    "ann_lsh_multiprobe",
-    oracle=f"""
-    WITH {_VECS_SQL},
-    sig AS (SELECT *, {_SIGNS_SQL} AS signs FROM vecs),
-    b AS (SELECT {_NBITS_SQL} AS nb FROM sig),
-    keyed AS (SELECT s.vec_id, s.v, s.nrm,
-                     substr(s.signs, 1, b.nb) AS bucket
-              FROM sig s, b),
-    probes AS (
+# multi-probe serving after the keyed CTE: each query's own bucket and
+# every bucket one flip away, scored and cut to top-k (shared by the
+# session-built and the index-served multiprobe oracles)
+_MULTIPROBE_TOPK_SQL = f"""probes AS (
       SELECT k.vec_id AS query_id, k.v AS qv, k.nrm AS qn,
              {_flip_sql('k.bucket', 't.i')} AS pbucket
       FROM (SELECT * FROM keyed WHERE {_QUERY_FILTER}) k
@@ -502,7 +504,19 @@ def _flip_sql(bucket: str, i: str) -> str:
                                    ORDER BY cos DESC, neighbor_id) AS rk
       FROM scored
     ) WHERE rk <= {_TOPK}
-    """,
+    """
+
+
+@query(
+    "ann_lsh_multiprobe",
+    oracle=f"""
+    WITH {_VECS_SQL},
+    sig AS (SELECT *, {_SIGNS_SQL} AS signs FROM vecs),
+    b AS (SELECT {_NBITS_SQL} AS nb FROM sig),
+    keyed AS (SELECT s.vec_id, s.v, s.nrm,
+                     substr(s.signs, 1, b.nb) AS bucket
+              FROM sig s, b),
+    {_MULTIPROBE_TOPK_SQL}""",
 )
 def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe sign-LSH top-k (Lv et al., VLDB 2007): each query
@@ -525,63 +539,23 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k window and tie order match ann_topk_bruteforce so recall is
     directly measurable against the exact baseline.
     """
-    vecs = _vecs(spark, sf_dir).withColumn("signs", F.expr(_SIGNS_SPARK))
-    nb = vecs.agg(
-        F.expr(
-            f"GREATEST(4, LEAST({_MAXBITS},"
-            " CAST(ceil(log2(GREATEST(COUNT(*), 1) / 64.0)) AS INT)))"
-        ).alias("nb")
+    keyed = _adaptive_keyed(_signed_vecs(spark, sf_dir))
+    probes = _queries(
+        keyed,
+        "bucket",
+        F.explode(F.expr("sequence(0, length(bucket))")).alias("i"),
+    ).select(
+        "query_id",
+        "qv",
+        "qn",
+        F.expr(_flip_sql("bucket", "i")).alias("pbucket"),
     )
-    keyed = vecs.crossJoin(F.broadcast(nb)).select(
-        "vec_id",
-        "v",
-        "nrm",
-        F.expr("substring(signs, 1, nb)").alias("bucket"),
-    )
-    probes = (
-        keyed.filter(F.expr(_QUERY_FILTER))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            "bucket",
-            F.explode(F.expr("sequence(0, length(bucket))")).alias("i"),
-        )
-        .select(
-            "query_id",
-            "qv",
-            "qn",
-            F.expr(_flip_sql("bucket", "i")).alias("pbucket"),
-        )
-    )
-    c = keyed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-        F.col("bucket").alias("cbucket"),
-    )
-    scored = probes.join(
-        c,
-        (probes.pbucket == c.cbucket)
-        & (F.col("neighbor_id") != F.col("query_id")),
-    ).withColumn(
-        "cos",
-        F.expr(
-            "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
-            " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn)"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine"),
-            "rank",
+    c = _corpus(keyed, F.col("bucket").alias("cbucket"))
+    return _cosine_topk(
+        probes.join(
+            c,
+            (probes.pbucket == c.cbucket)
+            & (F.col("neighbor_id") != F.col("query_id")),
         )
     )
 
@@ -631,63 +605,22 @@ def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     per query. At training scale this runs once per epoch over the whole
     query set; per-bucket work stays constant because the bucket width
     tracks corpus size."""
-    vecs = (
-        _vecs(spark, sf_dir)
-        .withColumn("signs", F.expr(_SIGNS_SPARK))
-    )
-    nb = vecs.agg(
-        F.expr(
-            f"GREATEST(4, LEAST({_MAXBITS},"
-            " CAST(ceil(log2(GREATEST(COUNT(*), 1) / 64.0)) AS INT)))"
-        ).alias("nb")
-    )
-    keyed = vecs.crossJoin(F.broadcast(nb)).select(
-        "vec_id",
-        "v",
-        "nrm",
-        "label",
-        F.expr("substring(signs, 1, nb)").alias("bucket"),
-    )
-    q = keyed.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.col("label").alias("q_label"),
-        "bucket",
-    )
-    c = keyed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
+    keyed = _adaptive_keyed(_signed_vecs(spark, sf_dir), "label")
+    q = _queries(keyed, F.col("label").alias("q_label"), "bucket")
+    c = _corpus(
+        keyed,
         F.col("label").alias("n_label"),
         F.col("bucket").alias("cbucket"),
     )
-    scored = q.join(
-        c,
-        (q.bucket == c.cbucket)
-        & (F.col("neighbor_id") != F.col("query_id"))
-        & (F.col("n_label") != F.col("q_label")),
-    ).withColumn(
-        "cos",
-        F.expr(
-            "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
-            " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn)"
+    return _cosine_topk(
+        q.join(
+            c,
+            (q.bucket == c.cbucket)
+            & (F.col("neighbor_id") != F.col("query_id"))
+            & (F.col("n_label") != F.col("q_label")),
         ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "q_label",
-            "n_label",
-            F.round("cos", 6).alias("cosine"),
-            "rank",
-        )
+        "q_label",
+        "n_label",
     )
 
 
@@ -773,8 +706,7 @@ def ann_rerank_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ANN family so recall is measurable against ann_topk_bruteforce.
     """
     vecs = (
-        _vecs(spark, sf_dir)
-        .withColumn("signs", F.expr(_SIGNS_SPARK))
+        _signed_vecs(spark, sf_dir)
         .withColumn(
             "maxabs",
             F.greatest(
@@ -790,43 +722,21 @@ def ann_rerank_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(v, x -> CAST(round((x * 127.0) / maxabs) AS INT))"),
         )
     )
-    nb = vecs.agg(
-        F.expr(
-            f"GREATEST(4, LEAST({_MAXBITS},"
-            " CAST(ceil(log2(GREATEST(COUNT(*), 1) / 64.0)) AS INT)))"
-        ).alias("nb")
+    keyed = _adaptive_keyed(vecs, "qvec")
+    probes = _queries(
+        keyed,
+        F.col("qvec").alias("qq"),
+        "bucket",
+        F.explode(F.expr("sequence(0, length(bucket))")).alias("i"),
+    ).select(
+        "query_id",
+        "qv",
+        "qn",
+        "qq",
+        F.expr(_flip_sql("bucket", "i")).alias("pbucket"),
     )
-    keyed = vecs.crossJoin(F.broadcast(nb)).select(
-        "vec_id",
-        "v",
-        "nrm",
-        "qvec",
-        F.expr("substring(signs, 1, nb)").alias("bucket"),
-    )
-    probes = (
-        keyed.filter(F.expr(_QUERY_FILTER))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            F.col("qvec").alias("qq"),
-            "bucket",
-            F.explode(F.expr("sequence(0, length(bucket))")).alias("i"),
-        )
-        .select(
-            "query_id",
-            "qv",
-            "qn",
-            "qq",
-            F.expr(_flip_sql("bucket", "i")).alias("pbucket"),
-        )
-    )
-    c = keyed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-        F.col("qvec").alias("cq"),
-        F.col("bucket").alias("cbucket"),
+    c = _corpus(
+        keyed, F.col("qvec").alias("cq"), F.col("bucket").alias("cbucket")
     )
     coarse = probes.join(
         c,
@@ -846,27 +756,7 @@ def ann_rerank_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist = coarse.withColumn("crank", F.row_number().over(wc)).filter(
         F.col("crank") <= _RERANK_R
     )
-    rer = shortlist.withColumn(
-        "cos",
-        F.expr(
-            "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
-            " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn)"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("qdot").alias("coarse_dot"),
-            F.round("cos", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _cosine_topk(shortlist, F.col("qdot").alias("coarse_dot"))
 
 
 ann_rerank_quantized.__doc__ = ann_rerank_quantized.__doc__.format(
@@ -888,23 +778,6 @@ _ADAPTIVE_KEYED_SQL = f"""
 """
 
 
-def _adaptive_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, v, nrm, bucket) with the occupancy-adaptive bucket."""
-    vecs = _vecs(spark, sf_dir).withColumn("signs", F.expr(_SIGNS_SPARK))
-    nb = vecs.agg(
-        F.expr(
-            f"GREATEST(4, LEAST({_MAXBITS},"
-            " CAST(ceil(log2(GREATEST(COUNT(*), 1) / 64.0)) AS INT)))"
-        ).alias("nb")
-    )
-    return vecs.crossJoin(F.broadcast(nb)).select(
-        "vec_id",
-        "v",
-        "nrm",
-        F.expr("substring(signs, 1, nb)").alias("bucket"),
-    )
-
-
 def _persisted_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per source-content fingerprint) a scratch parquet ANN
     index: the corpus with norms, PARTITIONED BY the sign-LSH bucket, so
@@ -918,7 +791,7 @@ def _persisted_index_path(spark: SparkSession, sf_dir: str) -> str:
     import os
 
     def build(out):
-        vecs = _adaptive_keyed(spark, sf_dir).withColumn(
+        vecs = _adaptive_keyed(_signed_vecs(spark, sf_dir)).withColumn(
             "pbucket", F.concat(F.lit("b"), F.col("bucket"))
         ).drop("bucket")
         # an empty corpus has no first() row to derive the bucket width
@@ -935,10 +808,6 @@ def _persisted_index_path(spark: SparkSession, sf_dir: str) -> str:
 
 
 _PROBE_INLIST_MAX = 256
-
-# retained for the serving-side gates that key off index width; the
-# write itself is now unconditionally one-file-per-bucket (below)
-_COMPACT_WRITE_MIN_WIDTH = 8
 
 
 def _write_bucketed(df, width: int, path: str, mode: str) -> None:
@@ -991,13 +860,9 @@ def _pruned_index_scan(spark, index_path: str, probe_pbuckets: DataFrame):
     return index.join(F.broadcast(qb), "pbucket", "left_semi")
 
 
-
-@query(
-    "ann_index_persist",
-    oracle=f"""
-    WITH {_VECS_SQL},
-    {_ADAPTIVE_KEYED_SQL},
-    scored AS (
+# bucket-confined scoring and the top-k cut after a keyed CTE (shared by
+# the persisted, appended and deleted index oracles)
+_BUCKET_TOPK_SQL = f"""scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              q.bucket AS bucket, {_COS_SQL} AS cos
       FROM (SELECT * FROM keyed WHERE {_QUERY_FILTER}) q
@@ -1010,7 +875,15 @@ def _pruned_index_scan(spark, index_path: str, probe_pbuckets: DataFrame):
                                    ORDER BY cos DESC, neighbor_id) AS rk
       FROM scored
     ) WHERE rk <= {_TOPK}
-    """,
+    """
+
+
+@query(
+    "ann_index_persist",
+    oracle=f"""
+    WITH {_VECS_SQL},
+    {_ADAPTIVE_KEYED_SQL},
+    {_BUCKET_TOPK_SQL}""",
 )
 def ann_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN with a PERSISTED index: build once (corpus + norms written as
@@ -1038,50 +911,21 @@ def ann_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus grown past the next power of two rebuilds with one more bit
     (the content fingerprint in the index path already forces that)."""
     idx_path = _persisted_index_path(spark, sf_dir)
-    queries = _adaptive_keyed(spark, sf_dir).filter(
-        F.expr(_QUERY_FILTER)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        "bucket",
-    )
-    index = (
+    queries = _queries(_adaptive_keyed(_signed_vecs(spark, sf_dir)), "bucket")
+    index = _corpus(
         _pruned_index_scan(
             spark, idx_path,
             queries.select(F.concat(F.lit("b"), F.col("bucket"))),
-        )
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("v").alias("cv"),
-            F.col("nrm").alias("cn"),
-            F.expr("substring(pbucket, 2)").alias("cbucket"),
-        )
-    )
-    scored = queries.join(
-        index,
-        (F.col("bucket") == F.col("cbucket"))
-        & (F.col("neighbor_id") != F.col("query_id")),
-    ).withColumn(
-        "cos",
-        F.expr(
-            "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
-            " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn)"
         ),
+        F.expr("substring(pbucket, 2)").alias("cbucket"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "bucket",
-            F.round("cos", 6).alias("cosine"),
-            "rank",
-        )
+    return _cosine_topk(
+        queries.join(
+            index,
+            (F.col("bucket") == F.col("cbucket"))
+            & (F.col("neighbor_id") != F.col("query_id")),
+        ),
+        "bucket",
     )
 
 
@@ -1169,6 +1013,35 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _label_rels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``query_id, rk, rel`` of ann_lsh_adaptive's ranking, rel = 1
+    where the neighbor's label matches the query's (labels attach by
+    two broadcast joins)."""
+    ap = ann_lsh_adaptive(spark, sf_dir).select(
+        "query_id", "neighbor_id", F.col("rank").alias("rk")
+    )
+    labels = load(spark, sf_dir, "embeddings").select("vec_id", "label")
+    ql = labels.select(
+        F.col("vec_id").alias("query_id"), F.col("label").alias("q_label")
+    )
+    cl = labels.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label").alias("c_label"),
+    )
+    return (
+        ap.join(F.broadcast(ql), "query_id")
+        .join(F.broadcast(cl), "neighbor_id")
+        .select(
+            "query_id",
+            "rk",
+            F.when(F.col("q_label") == F.col("c_label"), 1)
+            .otherwise(0)
+            .cast("bigint")
+            .alias("rel"),
+        )
+    )
+
+
 # discount weights round(1e6 / log2(rank+1)) for ranks 1..k, precomputed
 # once in Python and inlined as LITERALS in both engines — the log never
 # runs engine-side, so DCG sums are exact integers (the "no exp/log
@@ -1248,29 +1121,7 @@ def eval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_lsh_adaptive's output (production bucketing — see
     ann_recall_eval); labels attach via two broadcast-sized joins;
     per-query lists assemble in one user-keyed aggregation."""
-    ap = ann_lsh_adaptive(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.col("rank").alias("rk")
-    )
-    labels = load(spark, sf_dir, "embeddings").select("vec_id", "label")
-    ql = labels.select(
-        F.col("vec_id").alias("query_id"), F.col("label").alias("q_label")
-    )
-    cl = labels.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("c_label"),
-    )
-    rels = (
-        ap.join(F.broadcast(ql), "query_id")
-        .join(F.broadcast(cl), "neighbor_id")
-        .select(
-            "query_id",
-            "rk",
-            F.when(F.col("q_label") == F.col("c_label"), 1)
-            .otherwise(0)
-            .cast("bigint")
-            .alias("rel"),
-        )
-    )
+    rels = _label_rels(spark, sf_dir)
     wts = F.array(*[F.lit(w).cast("bigint") for w in _NDCG_W])
     agg = rels.groupBy("query_id").agg(
         F.expr("transform(array_sort(collect_list(struct(rk, rel))),"
@@ -1376,29 +1227,7 @@ def eval_mrr_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference ships no retrieval evals (its
     analytics payload is frequencyAnalysis.py); this extends the
     training-data-pipeline surface SURVEY.md §2 commits to."""
-    ap = ann_lsh_adaptive(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.col("rank").alias("rk")
-    )
-    labels = load(spark, sf_dir, "embeddings").select("vec_id", "label")
-    ql = labels.select(
-        F.col("vec_id").alias("query_id"), F.col("label").alias("q_label")
-    )
-    cl = labels.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("c_label"),
-    )
-    rels = (
-        ap.join(F.broadcast(ql), "query_id")
-        .join(F.broadcast(cl), "neighbor_id")
-        .select(
-            "query_id",
-            "rk",
-            F.when(F.col("q_label") == F.col("c_label"), 1)
-            .otherwise(0)
-            .cast("bigint")
-            .alias("rel"),
-        )
-    )
+    rels = _label_rels(spark, sf_dir)
     agg = rels.groupBy("query_id").agg(
         F.expr(
             "transform(array_sort(collect_list(struct(rk, rel))),"
@@ -1518,30 +1347,14 @@ def eval_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
             " 1e-30)) AS INT))"
         ),
     )
-    q = vecs.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.col("qvec").alias("qq"),
-    )
     pairs = (
-        F.broadcast(q)
-        .crossJoin(
-            vecs.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("cv"),
-                F.col("nrm").alias("cn"),
-                F.col("qvec").alias("cq"),
-            )
-        )
+        F.broadcast(_queries(vecs, F.col("qvec").alias("qq")))
+        .crossJoin(_corpus(vecs, F.col("qvec").alias("cq")))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
             "neighbor_id",
-            F.expr(
-                "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
-                " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn)"
-            ).alias("cos"),
+            F.expr(_COS_SPARK).alias("cos"),
             F.expr(
                 "aggregate(zip_with(qq, cq,"
                 " (x, y) -> CAST(x AS BIGINT) * CAST(y AS BIGINT)),"
@@ -1594,6 +1407,15 @@ eval_rank_fusion_rrf.__doc__ = eval_rank_fusion_rrf.__doc__.format(k=_RRF_K)
 # ------------------------------------------- persisted-index APPEND maintain
 
 _INC_COMMIT_FILTER = "vec_id % 10 <> 1"  # committed 90%; batch = the rest
+
+# the oracle corpus signs and the bucket width of the COMMITTED count
+# (the index's recorded width), up to the keyed CTE
+_COMMITTED_NB_SQL = f"""
+    WITH {_VECS_SQL},
+    sig AS (SELECT *, {_SIGNS_SQL} AS signs FROM vecs),
+    b AS (SELECT GREATEST(4, LEAST({_MAXBITS},
+            CAST(ceil(log2(GREATEST(COUNT(*), 1) / 64.0)) AS INT))) AS nb
+          FROM sig WHERE {_INC_COMMIT_FILTER}),"""
 
 
 def _inc_index_path(
@@ -1657,13 +1479,7 @@ def _build_committed_index(
     committed = _vecs(spark, sf_dir).filter(
         F.expr(_INC_COMMIT_FILTER)
     ).withColumn("signs", F.expr(_SIGNS_SPARK))
-    nb = committed.agg(
-        F.expr(
-            f"GREATEST(4, LEAST({_MAXBITS},"
-            " CAST(ceil(log2(GREATEST(COUNT(*), 1) / 64.0))"
-            " AS INT)))"
-        ).alias("nb")
-    )
+    nb = committed.agg(F.expr(_NBITS_SQL).alias("nb"))
     keyed = committed.crossJoin(F.broadcast(nb)).select(
         "vec_id",
         "v",
@@ -1743,29 +1559,11 @@ def ann_index_append(
 
 # shared by ann_index_append and ann_index_probe_join (same serving
 # semantics; only the Spark-side pruning mechanism differs)
-_APPEND_SERVE_ORACLE = f"""
-    WITH {_VECS_SQL},
-    sig AS (SELECT *, {_SIGNS_SQL} AS signs FROM vecs),
-    b AS (SELECT GREATEST(4, LEAST({_MAXBITS},
-            CAST(ceil(log2(GREATEST(COUNT(*), 1) / 64.0)) AS INT))) AS nb
-          FROM sig WHERE {_INC_COMMIT_FILTER}),
+_APPEND_SERVE_ORACLE = f"""{_COMMITTED_NB_SQL}
     keyed AS (SELECT s.vec_id, s.v, s.nrm,
                      substr(s.signs, 1, b.nb) AS bucket
               FROM sig s, b),
-    scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             q.bucket AS bucket, {_COS_SQL} AS cos
-      FROM (SELECT * FROM keyed WHERE {_QUERY_FILTER}) q
-      JOIN keyed c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id, bucket, ROUND(cos, 6) AS cosine,
-           CAST(rk AS INT) AS rank
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rk
-      FROM scored
-    ) WHERE rk <= {_TOPK}
-    """
+    {_BUCKET_TOPK_SQL}"""
 
 
 @query("ann_index_append", oracle=_APPEND_SERVE_ORACLE)
@@ -1808,24 +1606,14 @@ def ann_index_probe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     idx_dir, width = _append_bootstrap(spark, sf_dir)
-    queries = (
-        _vecs(spark, sf_dir)
-        .withColumn("signs", F.expr(_SIGNS_SPARK))
-        .filter(F.expr(_QUERY_FILTER))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            F.concat(
-                F.lit("b"), F.expr(f"substring(signs, 1, {width})")
-            ).alias("pbucket"),
-        )
+    queries = _queries(
+        _signed_vecs(spark, sf_dir),
+        F.concat(
+            F.lit("b"), F.expr(f"substring(signs, 1, {width})")
+        ).alias("pbucket"),
     )
-    index = spark.read.parquet(os.path.join(idx_dir, "index.parquet")).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-        "pbucket",
+    index = _corpus(
+        spark.read.parquet(os.path.join(idx_dir, "index.parquet")), "pbucket"
     )
     # what broadcasts is the DISTINCT BUCKET SET — bounded by 2^width no
     # matter how many queries there are (corpus-as-queries stays a
@@ -1836,28 +1624,11 @@ def ann_index_probe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scoring join carries the vectors; no hint — Catalyst/AQE
     # broadcasts a panel-sized query frame and shuffle-hash-joins a
     # corpus-sized one on the same (already co-partitioned) bucket key
-    scored = pruned.join(queries, "pbucket").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    ).withColumn(
-        "cos",
-        F.expr(
-            "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
-            " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn)"
+    return _cosine_topk(
+        pruned.join(queries, "pbucket").filter(
+            F.col("neighbor_id") != F.col("query_id")
         ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.expr("substring(pbucket, 2)").alias("bucket"),
-            F.round("cos", 6).alias("cosine"),
-            "rank",
-        )
+        F.expr("substring(pbucket, 2)").alias("bucket"),
     )
 
 
@@ -1878,28 +1649,16 @@ def _serve_appended_index(
     neighbors the deleted ones displaced)."""
     import os
 
-    queries = (
-        _vecs(spark, sf_dir)
-        .withColumn("signs", F.expr(_SIGNS_SPARK))
-        .filter(F.expr(_QUERY_FILTER))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            F.expr(f"substring(signs, 1, {width})").alias("bucket"),
-        )
+    queries = _queries(
+        _signed_vecs(spark, sf_dir),
+        F.expr(f"substring(signs, 1, {width})").alias("bucket"),
     )
-    index = (
+    index = _corpus(
         _pruned_index_scan(
             spark, os.path.join(idx_dir, "index.parquet"),
             queries.select(F.concat(F.lit("b"), F.col("bucket"))),
-        )
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("v").alias("cv"),
-            F.col("nrm").alias("cn"),
-            F.expr("substring(pbucket, 2)").alias("cbucket"),
-        )
+        ),
+        F.expr("substring(pbucket, 2)").alias("cbucket"),
     )
     if exclude_query_ids is not None:
         queries = queries.join(
@@ -1917,30 +1676,13 @@ def _serve_appended_index(
             "neighbor_id",
             "left_anti",
         )
-    scored = queries.join(
-        index,
-        (F.col("bucket") == F.col("cbucket"))
-        & (F.col("neighbor_id") != F.col("query_id")),
-    ).withColumn(
-        "cos",
-        F.expr(
-            "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
-            " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn)"
+    return _cosine_topk(
+        queries.join(
+            index,
+            (F.col("bucket") == F.col("cbucket"))
+            & (F.col("neighbor_id") != F.col("query_id")),
         ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "bucket",
-            F.round("cos", 6).alias("cosine"),
-            "rank",
-        )
+        "bucket",
     )
 
 
@@ -1964,39 +1706,11 @@ def _append_bootstrap(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
 
 @query(
     "ann_index_append_multiprobe",
-    oracle=f"""
-    WITH {_VECS_SQL},
-    sig AS (SELECT *, {_SIGNS_SQL} AS signs FROM vecs),
-    b AS (SELECT GREATEST(4, LEAST({_MAXBITS},
-            CAST(ceil(log2(GREATEST(COUNT(*), 1) / 64.0)) AS INT))) AS nb
-          FROM sig WHERE {_INC_COMMIT_FILTER}),
+    oracle=f"""{_COMMITTED_NB_SQL}
     keyed AS (SELECT s.vec_id, s.v, s.nrm,
                      substr(s.signs, 1, b.nb) AS bucket
               FROM sig s, b),
-    probes AS (
-      SELECT k.vec_id AS query_id, k.v AS qv, k.nrm AS qn,
-             {_flip_sql('k.bucket', 't.i')} AS pbucket
-      FROM (SELECT * FROM keyed WHERE {_QUERY_FILTER}) k
-      CROSS JOIN (SELECT unnest(range(0, {_MAXBITS + 1})) AS i) t
-      WHERE t.i <= length(k.bucket)
-    ),
-    scored AS (
-      SELECT p.query_id, c.vec_id AS neighbor_id,
-             list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-               list_transform(range(1, len(p.qv) + 1),
-                 i -> p.qv[i] * c.v[i])),
-               (acc, x) -> acc + x) / (p.qn * c.nrm) AS cos
-      FROM probes p
-      JOIN keyed c ON c.bucket = p.pbucket AND c.vec_id <> p.query_id
-    )
-    SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine,
-           CAST(rk AS INT) AS rank
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rk
-      FROM scored
-    ) WHERE rk <= {_TOPK}
-    """,
+    {_MULTIPROBE_TOPK_SQL}""",
 )
 def ann_index_append_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe serving over the APPEND-MAINTAINED index (the r9
@@ -2021,13 +1735,8 @@ def ann_index_append_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx_dir, width = _append_bootstrap(spark, sf_dir)
     probes = (
-        _vecs(spark, sf_dir)
-        .withColumn("signs", F.expr(_SIGNS_SPARK))
-        .filter(F.expr(_QUERY_FILTER))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
+        _queries(
+            _signed_vecs(spark, sf_dir),
             F.expr(f"substring(signs, 1, {width})").alias("bucket"),
         )
         .select(
@@ -2044,40 +1753,18 @@ def ann_index_append_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(_flip_sql("bucket", "i")).alias("pbucket"),
         )
     )
-    index = (
+    index = _corpus(
         _pruned_index_scan(
             spark, os.path.join(idx_dir, "index.parquet"),
             probes.select(F.concat(F.lit("b"), F.col("pbucket"))),
-        )
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("v").alias("cv"),
-            F.col("nrm").alias("cn"),
-            F.expr("substring(pbucket, 2)").alias("cbucket"),
-        )
-    )
-    scored = probes.join(
-        index,
-        (F.col("pbucket") == F.col("cbucket"))
-        & (F.col("neighbor_id") != F.col("query_id")),
-    ).withColumn(
-        "cos",
-        F.expr(
-            "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
-            " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn)"
         ),
+        F.expr("substring(pbucket, 2)").alias("cbucket"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine"),
-            "rank",
+    return _cosine_topk(
+        probes.join(
+            index,
+            (F.col("pbucket") == F.col("cbucket"))
+            & (F.col("neighbor_id") != F.col("query_id")),
         )
     )
 
@@ -2247,30 +1934,12 @@ def _serve_deleted_index(
     )
 
 
-_DELETE_SERVE_ORACLE = f"""
-    WITH {_VECS_SQL},
-    sig AS (SELECT *, {_SIGNS_SQL} AS signs FROM vecs),
-    b AS (SELECT GREATEST(4, LEAST({_MAXBITS},
-            CAST(ceil(log2(GREATEST(COUNT(*), 1) / 64.0)) AS INT))) AS nb
-          FROM sig WHERE {_INC_COMMIT_FILTER}),
+_DELETE_SERVE_ORACLE = f"""{_COMMITTED_NB_SQL}
     keyed AS (SELECT s.vec_id, s.v, s.nrm,
                      substr(s.signs, 1, b.nb) AS bucket
               FROM sig s, b
               WHERE NOT ({_DELETED_FILTER})),
-    scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             q.bucket AS bucket, {_COS_SQL} AS cos
-      FROM (SELECT * FROM keyed WHERE {_QUERY_FILTER}) q
-      JOIN keyed c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id, bucket, ROUND(cos, 6) AS cosine,
-           CAST(rk AS INT) AS rank
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rk
-      FROM scored
-    ) WHERE rk <= {_TOPK}
-    """
+    {_BUCKET_TOPK_SQL}"""
 
 
 @query("ann_index_delete", oracle=_DELETE_SERVE_ORACLE)
@@ -2337,9 +2006,10 @@ _PQ_SEED_SQL = (
 # R=40 on the sf0.001 fixture (0.80 at sf0.01)
 _PQ_R = 8 * _TOPK
 
-_PQ_ORACLE = f"""
-WITH {_VECS_SQL},
-z AS (
+# the oracle twins of the PQ steps: the integer-quantized corpus, its
+# seed codebook, the per-(vector, subspace) argmin codes and the query
+# distance tables ...
+_PQ_CODES_SQL = f"""z AS (
   SELECT vec_id, v, nrm,
          list_transform(v, x -> CAST(round(x * {_PQ_SCALE}) AS BIGINT)) AS zv
   FROM vecs
@@ -2373,15 +2043,10 @@ dt AS (
            (acc, y) -> acc + y) AS partial
   FROM (SELECT * FROM z WHERE {_QUERY_FILTER}) q
   CROSS JOIN mgrid g CROSS JOIN cb c
-),
-adc AS (
-  SELECT dt.query_id, e.vec_id AS neighbor_id,
-         CAST(SUM(dt.partial) AS BIGINT) AS adc_dot
-  FROM dt JOIN enc e ON e.m = dt.m AND e.code = dt.k
-  WHERE e.vec_id <> dt.query_id
-  GROUP BY dt.query_id, e.vec_id
-),
-shortlist AS (
+)"""
+# ... and the _PQ_R ADC shortlist re-scored by exact cosine
+# (_pq_rerank)
+_PQ_RERANK_SQL = f"""shortlist AS (
   SELECT query_id, neighbor_id, adc_dot FROM (
     SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                ORDER BY adc_dot DESC, neighbor_id) AS crank
@@ -2405,6 +2070,18 @@ FROM (
   FROM rer
 ) WHERE rk <= {_TOPK}
 """
+
+_PQ_ORACLE = f"""
+WITH {_VECS_SQL},
+{_PQ_CODES_SQL},
+adc AS (
+  SELECT dt.query_id, e.vec_id AS neighbor_id,
+         CAST(SUM(dt.partial) AS BIGINT) AS adc_dot
+  FROM dt JOIN enc e ON e.m = dt.m AND e.code = dt.k
+  WHERE e.vec_id <> dt.query_id
+  GROUP BY dt.query_id, e.vec_id
+),
+{_PQ_RERANK_SQL}"""
 
 
 def _pq_codebook(spark: SparkSession, sf_dir: str) -> list[list[int]]:
@@ -2458,8 +2135,8 @@ _PQ_DOT_FOLD = (
     "aggregate(zip_with(zs, c, (x, y) -> x * y),"
     " CAST(0 AS BIGINT), (a, x) -> a + x)"
 )
-# query distance table, same let-binding (shared by _pq_dt and the two
-# IVF-PQ dtq sites)
+# query distance table, same let-binding (shared by _pq_dt and
+# _pq_cell_adc)
 _PQ_DT_EXPR = (
     "element_at(transform(array(zv), zvv ->"
     f" transform(sequence(0, {_PQ_M - 1}), m -> element_at(transform("
@@ -2527,6 +2204,64 @@ def _pq_dt(zvecs: DataFrame) -> DataFrame:
     )
 
 
+def _pq_cell_adc(
+    zvecs: DataFrame, codes: DataFrame, probes: DataFrame, cell: str
+) -> DataFrame:
+    """Cell-confined ADC: ``(query_id, neighbor_id, adc_dot)`` for every
+    coded vector in a query's probed cells. ``codes`` holds one M-code
+    array per vector plus its ``cell``; ``probes`` the (query_id,
+    ``cell``) pairs. Each query's distance table rides as an M x K array
+    (broadcast: |q| rows, ~1 KB each) — the FAISS layout, looked up per
+    candidate instead of joined per (m, code): the first draft's (cent,
+    m, code) equi-join materialized candidates x M rows into a hash
+    aggregate (830M rows at the x100 proof, 72 of its 114 s); the fold
+    computes the same BIGINT sum projection-side with NO aggregate
+    shuffle at all."""
+    dtq = zvecs.filter(F.expr(_QUERY_FILTER)).select(
+        F.col("vec_id").alias("query_id"),
+        F.expr(_PQ_DT_EXPR).alias("dt"),
+    )
+    return (
+        codes.join(F.broadcast(probes), cell)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .join(F.broadcast(dtq), "query_id")
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.expr(
+                f"aggregate(sequence(0, {_PQ_M - 1}),"
+                " CAST(0 AS BIGINT), (acc, m) -> acc +"
+                " element_at(element_at(dt, m + 1),"
+                " element_at(codes, m + 1) + 1))"
+            ).alias("adc_dot"),
+        )
+    )
+
+
+def _pq_rerank(vecs: DataFrame, adc: DataFrame) -> DataFrame:
+    """Keep the _PQ_R best ADC candidates per query (adc_dot desc,
+    neighbor_id), re-score them with the exact cosine, keep the top k
+    with their ``adc_dot``."""
+    w_c = Window.partitionBy("query_id").orderBy(
+        F.col("adc_dot").desc(), F.col("neighbor_id")
+    )
+    shortlist = (
+        adc.withColumn("crank", F.row_number().over(w_c))
+        .filter(F.col("crank") <= _PQ_R)
+        .drop("crank")
+    )
+    # broadcast side is the QUERY PANEL only (ADVICE r9): shortlist's
+    # query_id already satisfies _QUERY_FILTER, so filtering before the
+    # broadcast keeps the exchanged side ~1% of the corpus instead of
+    # shipping N full vectors to every executor
+    return _cosine_topk(
+        shortlist.join(F.broadcast(_queries(vecs)), "query_id").join(
+            _corpus(vecs), "neighbor_id"
+        ),
+        "adc_dot",
+    )
+
+
 @query("ann_pq_adc", oracle=_PQ_ORACLE)
 def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with asymmetric-distance (ADC) scoring
@@ -2575,53 +2310,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("partial").alias("adc_dot"))
     )
-    w_c = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dot").desc(), F.col("neighbor_id")
-    )
-    shortlist = (
-        adc.withColumn("crank", F.row_number().over(w_c))
-        .filter(F.col("crank") <= _PQ_R)
-        .drop("crank")
-    )
-    # broadcast side is the QUERY PANEL only (ADVICE r9): shortlist's
-    # query_id already satisfies _QUERY_FILTER, so filtering before the
-    # broadcast keeps the exchanged side ~1% of the corpus instead of
-    # shipping N full vectors to every executor
-    q = vecs.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    c = vecs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-    )
-    rer = (
-        shortlist.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .withColumn(
-            "cos",
-            F.expr(
-                "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
-                " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn)"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "adc_dot",
-            F.round("cos", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _pq_rerank(vecs, adc)
 
 
 ann_pq_adc.__doc__ = ann_pq_adc.__doc__.format(
@@ -2667,41 +2356,7 @@ probes AS (
     FROM (SELECT * FROM vecs WHERE {_QUERY_FILTER}) q CROSS JOIN centroids c
   ) WHERE rk <= {_IVFPQ_NPROBE}
 ),
-z AS (
-  SELECT vec_id, v, nrm,
-         list_transform(v, x -> CAST(round(x * {_PQ_SCALE}) AS BIGINT)) AS zv
-  FROM vecs
-),
-cb AS (
-  SELECT CAST(vec_id // {_PQ_SEED_MOD} AS INT) AS k, zv FROM z
-  WHERE {_PQ_SEED_SQL}
-),
-mgrid AS (SELECT CAST(unnest(range(0, {_PQ_M})) AS INT) AS m),
-enc AS (
-  SELECT vec_id, m, k AS code FROM (
-    SELECT t.vec_id, t.m, t.k,
-           ROW_NUMBER() OVER (PARTITION BY t.vec_id, t.m
-                              ORDER BY t.d ASC, t.k ASC) AS rk
-    FROM (
-      SELECT x.vec_id, g.m, c.k,
-             list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(range(1, {_PQ_SUB} + 1),
-                 i -> (x.zv[g.m * {_PQ_SUB} + i] - c.zv[g.m * {_PQ_SUB} + i])
-                    * (x.zv[g.m * {_PQ_SUB} + i] - c.zv[g.m * {_PQ_SUB} + i]))),
-               (acc, y) -> acc + y) AS d
-      FROM z x CROSS JOIN mgrid g CROSS JOIN cb c
-    ) t
-  ) WHERE rk = 1
-),
-dt AS (
-  SELECT q.vec_id AS query_id, g.m, c.k,
-         list_reduce(list_prepend(CAST(0 AS BIGINT),
-           list_transform(range(1, {_PQ_SUB} + 1),
-             i -> q.zv[g.m * {_PQ_SUB} + i] * c.zv[g.m * {_PQ_SUB} + i])),
-           (acc, y) -> acc + y) AS partial
-  FROM (SELECT * FROM z WHERE {_QUERY_FILTER}) q
-  CROSS JOIN mgrid g CROSS JOIN cb c
-),
+{_PQ_CODES_SQL},
 adc AS (
   SELECT dt.query_id, e.vec_id AS neighbor_id,
          CAST(SUM(dt.partial) AS BIGINT) AS adc_dot
@@ -2712,30 +2367,7 @@ adc AS (
   WHERE e.vec_id <> dt.query_id
   GROUP BY dt.query_id, e.vec_id
 ),
-shortlist AS (
-  SELECT query_id, neighbor_id, adc_dot FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY adc_dot DESC, neighbor_id) AS crank
-    FROM adc
-  ) WHERE crank <= {_PQ_R}
-),
-rer AS (
-  SELECT s.query_id, s.neighbor_id, s.adc_dot,
-         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-           list_transform(range(1, len(q.v) + 1), i -> q.v[i] * c.v[i])),
-           (acc, x) -> acc + x) / (q.nrm * c.nrm) AS cos
-  FROM shortlist s
-  JOIN vecs q ON q.vec_id = s.query_id
-  JOIN vecs c ON c.vec_id = s.neighbor_id
-)
-SELECT query_id, neighbor_id, adc_dot, ROUND(cos, 6) AS cosine,
-       CAST(rk AS INT) AS rank
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos DESC, neighbor_id) AS rk
-  FROM rer
-) WHERE rk <= {_TOPK}
-"""
+{_PQ_RERANK_SQL}"""
 
 
 @query("ann_ivf_pq", oracle=_IVFPQ_ORACLE)
@@ -2768,25 +2400,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprint so in-place mutation invalidates; a pipeline builds
     # its index once per corpus, repeat queries reuse it
     def derive():
-        cents = F.broadcast(
-            vecs.filter(F.expr(_CENTROID_FILTER_SQL)).select(
-                F.col("vec_id").alias("cent_id"),
-                F.col("v").alias("cv"),
-                F.col("nrm").alias("cn"),
-            )
-        )
-        cos_to_cent = F.expr(
-            "aggregate(zip_with(v, cv, (x, y) -> x * y),"
-            " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (nrm * cn)"
-        )
-        rk_w = Window.partitionBy("vec_id").orderBy(
-            F.col("cc").desc(), F.col("cent_id")
-        )
-        ranked = (
-            vecs.crossJoin(cents)
-            .withColumn("cc", cos_to_cent)
-            .withColumn("rk", F.row_number().over(rk_w))
-        )
+        ranked = _centroid_ranked(vecs)
         # the IVF/PQ index artifacts are MATERIALIZED once
         # (localCheckpoint) and session-memoized: assignment and probes
         # both hang off the ranked window and codes off the encode
@@ -2817,74 +2431,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         return assigned, probes, codes
 
     assigned, probes, codes = session_memo("ivfpq", spark, sf_dir, (), derive)
-    # per-query distance table as an M x K array (broadcast: |q| rows,
-    # ~1 KB each) — the FAISS layout, looked up per candidate instead of
-    # joined per (m, code): the first draft's (cent, m, code) equi-join
-    # materialized candidates x M rows into a hash aggregate (830M rows
-    # at the x100 proof, 72 of its 114 s); the fold computes the same
-    # BIGINT sum projection-side with NO aggregate shuffle at all.
-    dtq = zvecs.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("query_id"),
-        F.expr(_PQ_DT_EXPR).alias("dt"),
-    )
-    adc = (
-        codes.join(F.broadcast(probes), "cent_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(dtq), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(
-                f"aggregate(sequence(0, {_PQ_M - 1}),"
-                " CAST(0 AS BIGINT), (acc, m) -> acc +"
-                " element_at(element_at(dt, m + 1),"
-                " element_at(codes, m + 1) + 1))"
-            ).alias("adc_dot"),
-        )
-    )
-    w_c = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dot").desc(), F.col("neighbor_id")
-    )
-    shortlist = (
-        adc.withColumn("crank", F.row_number().over(w_c))
-        .filter(F.col("crank") <= _PQ_R)
-        .drop("crank")
-    )
-    q = vecs.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    c = vecs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-    )
-    rer = (
-        shortlist.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .withColumn(
-            "cos",
-            F.expr(
-                "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
-                " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn)"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "adc_dot",
-            F.round("cos", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _pq_rerank(vecs, _pq_cell_adc(zvecs, codes, probes, "cent_id"))
 
 
 ann_ivf_pq.__doc__ = ann_ivf_pq.__doc__.format(np=_IVFPQ_NPROBE, r=_PQ_R)
@@ -2943,41 +2490,7 @@ probest AS (
     CROSS JOIN centst c
   ) WHERE rk <= {_IVFPQT_NPROBE}
 ),
-z AS (
-  SELECT vec_id, v, nrm,
-         list_transform(v, x -> CAST(round(x * {_PQ_SCALE}) AS BIGINT)) AS zv
-  FROM vecs
-),
-cb AS (
-  SELECT CAST(vec_id // {_PQ_SEED_MOD} AS INT) AS k, zv FROM z
-  WHERE {_PQ_SEED_SQL}
-),
-mgrid AS (SELECT CAST(unnest(range(0, {_PQ_M})) AS INT) AS m),
-enc AS (
-  SELECT vec_id, m, k AS code FROM (
-    SELECT t.vec_id, t.m, t.k,
-           ROW_NUMBER() OVER (PARTITION BY t.vec_id, t.m
-                              ORDER BY t.d ASC, t.k ASC) AS rk
-    FROM (
-      SELECT x.vec_id, g.m, c.k,
-             list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(range(1, {_PQ_SUB} + 1),
-                 i -> (x.zv[g.m * {_PQ_SUB} + i] - c.zv[g.m * {_PQ_SUB} + i])
-                    * (x.zv[g.m * {_PQ_SUB} + i] - c.zv[g.m * {_PQ_SUB} + i]))),
-               (acc, y) -> acc + y) AS d
-      FROM z x CROSS JOIN mgrid g CROSS JOIN cb c
-    ) t
-  ) WHERE rk = 1
-),
-dt AS (
-  SELECT q.vec_id AS query_id, g.m, c.k,
-         list_reduce(list_prepend(CAST(0 AS BIGINT),
-           list_transform(range(1, {_PQ_SUB} + 1),
-             i -> q.zv[g.m * {_PQ_SUB} + i] * c.zv[g.m * {_PQ_SUB} + i])),
-           (acc, y) -> acc + y) AS partial
-  FROM (SELECT * FROM z WHERE {_QUERY_FILTER}) q
-  CROSS JOIN mgrid g CROSS JOIN cb c
-),
+{_PQ_CODES_SQL},
 adc AS (
   SELECT dt.query_id, e.vec_id AS neighbor_id,
          CAST(SUM(dt.partial) AS BIGINT) AS adc_dot
@@ -2988,30 +2501,7 @@ adc AS (
   WHERE e.vec_id <> dt.query_id
   GROUP BY dt.query_id, e.vec_id
 ),
-shortlist AS (
-  SELECT query_id, neighbor_id, adc_dot FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY adc_dot DESC, neighbor_id) AS crank
-    FROM adc
-  ) WHERE crank <= {_PQ_R}
-),
-rer AS (
-  SELECT s.query_id, s.neighbor_id, s.adc_dot,
-         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-           list_transform(range(1, len(q.v) + 1), i -> q.v[i] * c.v[i])),
-           (acc, x) -> acc + x) / (q.nrm * c.nrm) AS cos
-  FROM shortlist s
-  JOIN vecs q ON q.vec_id = s.query_id
-  JOIN vecs c ON c.vec_id = s.neighbor_id
-)
-SELECT query_id, neighbor_id, adc_dot, ROUND(cos, 6) AS cosine,
-       CAST(rk AS INT) AS rank
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos DESC, neighbor_id) AS rk
-  FROM rer
-) WHERE rk <= {_TOPK}
-"""
+{_PQ_RERANK_SQL}"""
 
 
 @query("ann_ivf_pq_trained", oracle=_ivfpq_trained_oracle())
@@ -3074,68 +2564,7 @@ def ann_ivf_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(assigned, "vec_id")
         .localCheckpoint()
     )
-    dtq = zvecs.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("query_id"),
-        F.expr(_PQ_DT_EXPR).alias("dt"),
-    )
-    adc = (
-        codes.join(F.broadcast(probes), "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(dtq), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(
-                f"aggregate(sequence(0, {_PQ_M - 1}),"
-                " CAST(0 AS BIGINT), (acc, m) -> acc +"
-                " element_at(element_at(dt, m + 1),"
-                " element_at(codes, m + 1) + 1))"
-            ).alias("adc_dot"),
-        )
-    )
-    w_c = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dot").desc(), F.col("neighbor_id")
-    )
-    shortlist = (
-        adc.withColumn("crank", F.row_number().over(w_c))
-        .filter(F.col("crank") <= _PQ_R)
-        .drop("crank")
-    )
-    q = vecs.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    c = vecs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv2"),
-        F.col("nrm").alias("cn2"),
-    )
-    rer = (
-        shortlist.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .withColumn(
-            "cos",
-            F.expr(
-                "aggregate(zip_with(qv, cv2, (x, y) -> x * y),"
-                " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn2)"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "adc_dot",
-            F.round("cos", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _pq_rerank(vecs, _pq_cell_adc(zvecs, codes, probes, "cid"))
 
 
 ann_ivf_pq_trained.__doc__ = ann_ivf_pq_trained.__doc__.format(k=4)
@@ -3279,47 +2708,30 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query fan-out bounded by R={r} and R^2 — millions of queries
     parallelize on the query key with zero skew; nothing ever touches
     query x corpus."""
-    vecs = _vecs(spark, sf_dir).withColumn("signs", F.expr(_SIGNS_SPARK))
-    nb = vecs.agg(
-        F.expr(
-            f"GREATEST(4, LEAST({_MAXBITS},"
-            " CAST(ceil(log2(GREATEST(COUNT(*), 1) / 64.0)) AS INT)))"
-        ).alias("nb")
-    )
-    keyed = vecs.crossJoin(F.broadcast(nb)).select(
-        "vec_id",
-        "v",
-        "nrm",
-        F.expr("substring(signs, 1, nb)").alias("bucket"),
-    )
-    q = keyed.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        "bucket",
-    )
-    c = keyed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-        F.col("bucket").alias("cbucket"),
-    )
-    w_r = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    cand = (
+    keyed = _adaptive_keyed(_signed_vecs(spark, sf_dir))
+    q = _queries(keyed, "bucket")
+    c = _corpus(keyed, F.col("bucket").alias("cbucket"))
+    return _mmr_from_pairs(
         q.join(
             c,
             (q.bucket == c.cbucket)
             & (F.col("neighbor_id") != F.col("query_id")),
         )
-        .withColumn(
-            "cos",
-            F.expr(
-                "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
-                " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn)"
-            ),
-        )
+    )
+
+
+def _mmr_from_pairs(pairs: DataFrame) -> DataFrame:
+    """The MMR machinery downstream of ANY (query, candidate) pair
+    source (shared by mmr_diversified_topk's inline LSH candidates and
+    mmr_over_index's persisted-index candidates): the R best candidates
+    per query by exact cosine (``rel`` = the 6dp cosine), pairwise sims
+    over that R-bounded shortlist, then the k-step greedy as one fold
+    per query."""
+    w_r = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id")
+    )
+    cand = (
+        pairs.withColumn("cos", F.expr(_COS_SPARK))
         .withColumn("rk", F.row_number().over(w_r))
         .filter(F.col("rk") <= _MMR_R)
         .select(
@@ -3331,15 +2743,6 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    return _mmr_from_cand(cand)
-
-
-def _mmr_from_cand(cand: DataFrame) -> DataFrame:
-    """The MMR machinery downstream of ANY candidate source: pairwise
-    sims over the R-bounded shortlist, then the k-step greedy as one
-    fold per query (shared by mmr_diversified_topk's inline LSH
-    candidates and mmr_over_index's persisted-index candidates).
-    `cand` columns: query_id, neighbor_id, rel (6dp), cv, cn."""
     a = cand.select(
         "query_id",
         F.col("neighbor_id").alias("i"),
@@ -3431,7 +2834,7 @@ def mmr_over_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_index_append contract — instead of being re-derived from the raw
     corpus per query batch, which is how a RAG stack actually runs
     (index maintained by ingest, re-rank reads it). Downstream the exact
-    mmr_diversified_topk greedy applies (_mmr_from_cand), so diversity
+    mmr_diversified_topk greedy applies (_mmr_from_pairs), so diversity
     semantics are identical; only the candidate source differs.
 
     Scale: the index read is bucket-partitioned parquet; the probe is an
@@ -3441,49 +2844,17 @@ def mmr_over_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     idx_dir, width = _append_bootstrap(spark, sf_dir)
-    queries = (
-        _vecs(spark, sf_dir)
-        .withColumn("signs", F.expr(_SIGNS_SPARK))
-        .filter(F.expr(_QUERY_FILTER))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            F.concat(
-                F.lit("b"), F.expr(f"substring(signs, 1, {width})")
-            ).alias("pbucket"),
+    queries = _queries(
+        _signed_vecs(spark, sf_dir),
+        F.concat(
+            F.lit("b"), F.expr(f"substring(signs, 1, {width})")
+        ).alias("pbucket"),
+    )
+    index = _corpus(
+        spark.read.parquet(os.path.join(idx_dir, "index.parquet")), "pbucket"
+    )
+    return _mmr_from_pairs(
+        index.join(F.broadcast(queries), "pbucket").filter(
+            F.col("neighbor_id") != F.col("query_id")
         )
     )
-    index = spark.read.parquet(
-        os.path.join(idx_dir, "index.parquet")
-    ).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-        "pbucket",
-    )
-    w_r = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    cand = (
-        index.join(F.broadcast(queries), "pbucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            F.expr(
-                "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
-                " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (qn * cn)"
-            ),
-        )
-        .withColumn("rk", F.row_number().over(w_r))
-        .filter(F.col("rk") <= _MMR_R)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("rel"),
-            "cv",
-            "cn",
-        )
-        .persist()
-    )
-    return _mmr_from_cand(cand)

@@ -1178,7 +1178,9 @@ _BLEU_TOKS_SPARK = "filter(split(text, ' '), w -> w <> '')"
 _BLEU_TOKS_DUCK = "list_filter(string_split(text, ' '), w -> w <> '')"
 
 
-_BLEU_ORACLE = f"""
+# the oracle twin of _pair_gram_counts: successor pairs and the
+# side-conditional gram counts per (pair, n, gram)
+_PAIR_GRAMS_SQL = f"""
 WITH p AS (
   SELECT doc_id AS pair_id, source,
          {_BLEU_TOKS_DUCK} AS ct,
@@ -1208,7 +1210,9 @@ cnt AS (
          SUM(CASE WHEN side = 'r' THEN 1 ELSE 0 END) AS rc
   FROM grams GROUP BY ALL
 ),
-per_pair AS (
+"""
+
+_BLEU_ORACLE = f"""{_PAIR_GRAMS_SQL}per_pair AS (
   SELECT pair_id, source,
          SUM(CASE WHEN n = 1 THEN LEAST(cc, rc) ELSE 0 END) AS clip1,
          SUM(CASE WHEN n = 2 THEN LEAST(cc, rc) ELSE 0 END) AS clip2,
@@ -1229,6 +1233,60 @@ SELECT source,
          AS bleu2
 FROM per_pair GROUP BY source
 """
+
+
+def _pair_gram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The gram counts BLEU and ROUGE share: each document paired with
+    its successor within source (candidate ``ct``, reference ``rt``),
+    both sides' uni- and bigrams, and per ``(pair_id, source, n, g)``
+    the candidate count ``cc`` and the reference count ``rc`` — one
+    aggregation over the union, no cand x ref self-join."""
+    d = load(spark, sf_dir, "documents")
+    wsrc = Window.partitionBy("source").orderBy("pair_id")
+    p = (
+        d.select(
+            F.col("doc_id").alias("pair_id"),
+            "source",
+            F.expr(_BLEU_TOKS_SPARK).alias("ct"),
+        )
+        .withColumn("rt", F.lead("ct").over(wsrc))
+        .filter(F.col("rt").isNotNull())
+    )
+    p = p.localCheckpoint()  # pairs reused by 4 gram branches
+
+    def grams(col: str, side: str, n: int) -> DataFrame:
+        if n == 1:
+            garr = F.col(col)
+        else:
+            garr = F.expr(
+                f"transform(sequence(1, size({col}) - 1),"
+                f" i -> element_at({col}, i) || ' '"
+                f" || element_at({col}, i + 1))"
+            )
+        return p.select(
+            "pair_id",
+            "source",
+            F.lit(n).alias("n"),
+            F.explode(garr).alias("g"),
+            F.lit(side).alias("side"),
+        )
+
+    return (
+        grams("ct", "c", 1)
+        .unionByName(grams("rt", "r", 1))
+        .unionByName(grams("ct", "c", 2))
+        .unionByName(grams("rt", "r", 2))
+        .groupBy("pair_id", "source", "n", "g")
+        .agg(
+            F.sum(F.expr("CASE WHEN side = 'c' THEN 1 ELSE 0 END")).alias(
+                "cc"
+            ),
+            F.sum(F.expr("CASE WHEN side = 'r' THEN 1 ELSE 0 END")).alias(
+                "rc"
+            ),
+        )
+    )
+
 
 @query("eval_bleu_ngram_precision", oracle=_BLEU_ORACLE)
 def eval_bleu_ngram_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1254,51 +1312,7 @@ def eval_bleu_ngram_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     lead() pairing is one window on the source partition; a real
     (cand, ref) pair table skips it entirely.
     """
-    d = load(spark, sf_dir, "documents")
-    wsrc = Window.partitionBy("source").orderBy("pair_id")
-    p = (
-        d.select(
-            F.col("doc_id").alias("pair_id"),
-            "source",
-            F.expr(_BLEU_TOKS_SPARK).alias("ct"),
-        )
-        .withColumn("rt", F.lead("ct").over(wsrc))
-        .filter(F.col("rt").isNotNull())
-    )
-    p = p.localCheckpoint()  # pairs reused by 4 gram branches + totals
-
-    def grams(col: str, side: str, n: int) -> DataFrame:
-        if n == 1:
-            garr = F.col(col)
-        else:
-            garr = F.expr(
-                f"transform(sequence(1, size({col}) - 1),"
-                f" i -> element_at({col}, i) || ' '"
-                f" || element_at({col}, i + 1))"
-            )
-        return p.select(
-            "pair_id",
-            "source",
-            F.lit(n).alias("n"),
-            F.explode(garr).alias("g"),
-            F.lit(side).alias("side"),
-        )
-
-    cnt = (
-        grams("ct", "c", 1)
-        .unionByName(grams("rt", "r", 1))
-        .unionByName(grams("ct", "c", 2))
-        .unionByName(grams("rt", "r", 2))
-        .groupBy("pair_id", "source", "n", "g")
-        .agg(
-            F.sum(F.expr("CASE WHEN side = 'c' THEN 1 ELSE 0 END")).alias(
-                "cc"
-            ),
-            F.sum(F.expr("CASE WHEN side = 'r' THEN 1 ELSE 0 END")).alias(
-                "rc"
-            ),
-        )
-    )
+    cnt = _pair_gram_counts(spark, sf_dir)
     # per-pair clips AND lengths fall out of the same gram counts —
     # no join back to the pair table, one aggregation per level
     per_pair = cnt.groupBy("pair_id", "source").agg(
@@ -1332,37 +1346,7 @@ def eval_bleu_ngram_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROUGE_ORACLE = f"""
-WITH p AS (
-  SELECT doc_id AS pair_id, source,
-         {_BLEU_TOKS_DUCK} AS ct,
-         LEAD({_BLEU_TOKS_DUCK}) OVER (PARTITION BY source
-                                       ORDER BY doc_id) AS rt
-  FROM documents
-),
-pp AS (SELECT * FROM p WHERE rt IS NOT NULL),
-grams AS (
-  SELECT pair_id, source, 1 AS n, unnest(ct) AS g, 'c' AS side FROM pp
-  UNION ALL
-  SELECT pair_id, source, 1 AS n, unnest(rt) AS g, 'r' AS side FROM pp
-  UNION ALL
-  SELECT pair_id, source, 2 AS n,
-         unnest(list_transform(range(1, len(ct)),
-                i -> ct[i] || ' ' || ct[i + 1])) AS g, 'c' AS side
-  FROM pp
-  UNION ALL
-  SELECT pair_id, source, 2 AS n,
-         unnest(list_transform(range(1, len(rt)),
-                i -> rt[i] || ' ' || rt[i + 1])) AS g, 'r' AS side
-  FROM pp
-),
-cnt AS (
-  SELECT pair_id, source, n, g,
-         SUM(CASE WHEN side = 'c' THEN 1 ELSE 0 END) AS cc,
-         SUM(CASE WHEN side = 'r' THEN 1 ELSE 0 END) AS rc
-  FROM grams GROUP BY ALL
-),
-per_pair AS (
+_ROUGE_ORACLE = f"""{_PAIR_GRAMS_SQL}per_pair AS (
   SELECT pair_id, source,
          SUM(CASE WHEN n = 1 THEN LEAST(cc, rc) ELSE 0 END) AS clip1,
          SUM(CASE WHEN n = 2 THEN LEAST(cc, rc) ELSE 0 END) AS clip2,
@@ -1407,51 +1391,7 @@ def eval_rouge_n_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair throughout; ratios are single divisions over exact integer
     sums (micro-averaged), never means of per-pair floats.
     """
-    d = load(spark, sf_dir, "documents")
-    wsrc = Window.partitionBy("source").orderBy("pair_id")
-    p = (
-        d.select(
-            F.col("doc_id").alias("pair_id"),
-            "source",
-            F.expr(_BLEU_TOKS_SPARK).alias("ct"),
-        )
-        .withColumn("rt", F.lead("ct").over(wsrc))
-        .filter(F.col("rt").isNotNull())
-    )
-    p = p.localCheckpoint()  # pairs reused by 4 gram branches
-
-    def grams(col: str, side: str, n: int) -> DataFrame:
-        if n == 1:
-            garr = F.col(col)
-        else:
-            garr = F.expr(
-                f"transform(sequence(1, size({col}) - 1),"
-                f" i -> element_at({col}, i) || ' '"
-                f" || element_at({col}, i + 1))"
-            )
-        return p.select(
-            "pair_id",
-            "source",
-            F.lit(n).alias("n"),
-            F.explode(garr).alias("g"),
-            F.lit(side).alias("side"),
-        )
-
-    cnt = (
-        grams("ct", "c", 1)
-        .unionByName(grams("rt", "r", 1))
-        .unionByName(grams("ct", "c", 2))
-        .unionByName(grams("rt", "r", 2))
-        .groupBy("pair_id", "source", "n", "g")
-        .agg(
-            F.sum(F.expr("CASE WHEN side = 'c' THEN 1 ELSE 0 END")).alias(
-                "cc"
-            ),
-            F.sum(F.expr("CASE WHEN side = 'r' THEN 1 ELSE 0 END")).alias(
-                "rc"
-            ),
-        )
-    )
+    cnt = _pair_gram_counts(spark, sf_dir)
     per_pair = cnt.groupBy("pair_id", "source").agg(
         F.sum(
             F.expr("CASE WHEN n = 1 THEN LEAST(cc, rc) ELSE 0 END")

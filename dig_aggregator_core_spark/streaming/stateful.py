@@ -2446,31 +2446,11 @@ def stream_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_append_oracle() -> str:
+    # the one-shot batch maintenance oracle: the streamed appends must
+    # land on the same index
     from ..operators import similarity as _S
 
-    return f"""
-    WITH {_S._VECS_SQL},
-    sig AS (SELECT *, {_S._SIGNS_SQL} AS signs FROM vecs),
-    b AS (SELECT GREATEST(4, LEAST({_S._MAXBITS},
-            CAST(ceil(log2(GREATEST(COUNT(*), 1) / 64.0)) AS INT))) AS nb
-          FROM sig WHERE {_S._INC_COMMIT_FILTER}),
-    keyed AS (SELECT s.vec_id, s.v, s.nrm,
-                     substr(s.signs, 1, b.nb) AS bucket
-              FROM sig s, b),
-    scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             q.bucket AS bucket, {_S._COS_SQL} AS cos
-      FROM (SELECT * FROM keyed WHERE {_S._QUERY_FILTER}) q
-      JOIN keyed c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id, bucket, ROUND(cos, 6) AS cosine,
-           CAST(rk AS INT) AS rank
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rk
-      FROM scored
-    ) WHERE rk <= {_S._TOPK}
-    """
+    return _S._APPEND_SERVE_ORACLE
 
 
 @query("stream_ann_index_append", oracle=_ann_append_oracle())

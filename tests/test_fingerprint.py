@@ -4,6 +4,7 @@ any edit to the code or data a query reaches, however deep."""
 
 from __future__ import annotations
 
+import importlib
 import itertools
 import json
 import os
@@ -139,6 +140,24 @@ def test_filling_a_memo_keeps_it(load):
     # the walk does read that module: a constant beside the memo counts
     ops.helpers.K = (1, 2, 3)
     assert fp() != base
+
+
+@pytest.mark.parametrize(
+    "module, table, name",
+    [
+        ("aggregates", "_CMS_H_SPARK", "cms_frequency_estimate"),
+        ("scans", "_AVRO_SCHEMA", "scan_avro_roundtrip"),
+    ],
+)
+def test_tables_read_only_at_run_time_move_their_query(
+    monkeypatch, module, table, name
+):
+    # neither table reaches the query's oracle text, so only the walk
+    # over the query's code can see an edit to it
+    mod = importlib.import_module(f"dig_aggregator_core_spark.operators.{module}")
+    base = registry.code_fingerprint(name)
+    monkeypatch.setattr(mod, table, getattr(mod, table) + " ")
+    assert registry.code_fingerprint(name) != base
 
 
 def test_stale_manifest_entry_ranks_unverified(load, tmp_path, monkeypatch):

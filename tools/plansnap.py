@@ -1,25 +1,46 @@
-"""Capture .explain("formatted") for registered queries into plans/r13/.
+"""Capture .explain("formatted") for registered queries into plans/<round>/.
 
 Usage:
-    python tools/plansnap.py before name1 name2 ...   # plans/r13/<name>_before.txt
-    python tools/plansnap.py after  name1 name2 ...   # plans/r13/<name>_after.txt
+    python tools/plansnap.py before name1 name2 ...   # plans/<round>/<name>_before.txt
+    python tools/plansnap.py after  name1 name2 ...   # plans/<round>/<name>_after.txt
     python tools/plansnap.py before --headline        # every bench.py HEADLINE query
 
+``SPARK_GRAFT_PLANS_ROUND`` names the round directory (default r13) and
+``SPARK_GRAFT_SF_DIR`` the data (default /root/testdata/sf0.1).
+
 The snapshot is the analyzed/optimized physical plan BEFORE execution
-(AdaptiveSparkPlan isFinalPlan=false where AQE applies) — the judge-checkable
+(AdaptiveSparkPlan isFinalPlan=false where AQE applies) — the checkable
 artifact for plan-shape claims (Exchange count, join strategy, PushedFilters,
-ReadSchema, BatchEvalPython/ArrowEvalPython presence).
+ReadSchema, BatchEvalPython/ArrowEvalPython presence). Ids that differ from
+run to run (expression ids ``#123``, ``plan_id=``, RDD numbers) are
+stripped, so a before and an after snapshot of one plan diff cleanly.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dig_aggregator_core_spark import registry  # noqa: E402
 from dig_aggregator_core_spark.session import get_spark  # noqa: E402
+
+
+# run-specific ids: expression/exchange ids, Spark Connect plan ids, RDD ids
+_RUN_IDS = (
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+)
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with the run-specific ids stripped."""
+    for pat, repl in _RUN_IDS:
+        plan = pat.sub(repl, plan)
+    return plan
 
 
 def main() -> int:
@@ -47,11 +68,11 @@ def main() -> int:
             continue
         try:
             df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(
+            plan = normalize(df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                     "formatted"
                 )
-            )
+            ))
         except Exception as exc:  # noqa: BLE001 - record and continue
             failed.append((name, repr(exc)[:200]))
             continue
