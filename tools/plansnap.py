@@ -6,7 +6,7 @@ Usage:
     python tools/plansnap.py before --headline        # every bench.py HEADLINE query
 
 ``SPARK_GRAFT_PLANS_ROUND`` names the round directory (default r13) and
-``SPARK_GRAFT_SF_DIR`` the data (default /root/testdata/sf0.1).
+``SPARK_GRAFT_SF_DIR`` the data directory (default: the sf0.1 test data).
 
 The snapshot is the analyzed/optimized physical plan BEFORE execution
 (AdaptiveSparkPlan isFinalPlan=false where AQE applies) — the checkable
