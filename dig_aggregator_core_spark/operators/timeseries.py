@@ -180,8 +180,8 @@ def timeseries_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on the entity key; per-entity history must fit a
     row (true for bounded per-user event counts — the fixture's shape).
     For unbounded streams the same recurrence runs incrementally in
-    applyInPandasWithState (stream_stateful_user_stats shows the
-    machinery) with O(1) state per key; ties on ts are broken by value
+    applyInPandasWithState (stream_ewma_stateful) with O(1) state per
+    key; ties on ts are broken by value
     on both engines so the fold order is fully deterministic.
     """
     ev = load(spark, sf_dir, "events").select(

@@ -11,11 +11,12 @@ capabilities its batch-incremental model implies. The families:
   right, full outer, semi), the outer/semi modes flushed by a
   far-future sentinel;
 - stream-static joins and complete-mode aggregates, some finished by a
-  batch finalize over the drained sink (quality drift, association
-  rules, golden record, decontamination, MinHash probes);
-- per-key ``applyInPandasWithState`` folds (running stats, EWMA, funnel,
-  cohort days, last-touch attribution, z-score, transitions, CUSUM, and
-  an event-time-timeout sessionizer);
+  batch finalize over the drained sink (per-user running stats, cohort
+  day sets, quality drift, association rules, golden record,
+  decontamination, MinHash probes);
+- per-key ``applyInPandasWithState`` folds, kept where the state is not
+  a monoid (EWMA, funnel, last-touch attribution, z-score, transitions,
+  CUSUM, and an event-time-timeout sessionizer);
 - foreachBatch engines with state held between epochs (CDC upsert to
   parquet or JDBC, incremental connected components, ANN index append).
 
@@ -156,19 +157,19 @@ def _events_with_flush_sentinel(spark: SparkSession, sf_dir: str) -> str:
 # State partitions by operator family. Each family asks for its own
 # count and run_available_now caps it at the session's task slots
 # (defaultParallelism):
-# - JVM stateful ops (stream-stream joins, window aggs, dedup): the
-#   micro-batch constant is per-partition state-store commit (delta file
-#   per store instance per batch; an outer join carries 4 store instances
-#   per partition), so fewer partitions win.
+# - JVM stateful ops (stream-stream joins, per-key and window aggs,
+#   dedup): the micro-batch constant is per-partition state-store commit
+#   (delta file per store instance per batch; an outer join carries 4
+#   store instances per partition), so fewer partitions win.
 # - applyInPandasWithState folds: each partition is one Arrow-batched
 #   Python worker stream, so partitions = fold parallelism, up to the
 #   slots that can run them.
 # A partition beyond the task slots adds a wave of Python-worker handoff
 # and state-store commit but no parallelism. On local[4] (4-core VM),
-# with identical results, stream_stateful_user_stats took 3.1 s warm at
-# 16 partitions and 1.7 s at 4 on the sf0.001 benchmark fixture, and at
-# sf0.1 5.0-6.9 s (addBatch 4.4-6.1 s) at 16 against 3.6-3.7 s (addBatch
-# 3.0-3.1 s) at 4.
+# with identical results, a per-user (count, sum, max) fold over events
+# took 3.1 s warm at 16 partitions and 1.7 s at 4 on the sf0.001
+# benchmark fixture, and at sf0.1 5.0-6.9 s (addBatch 4.4-6.1 s) at 16
+# against 3.6-3.7 s (addBatch 3.0-3.1 s) at 4.
 # History: 16 (fold knee) and 4 (join) were tuned on 32 cores, uncapped.
 _JOIN_STATE_PARTS = 4
 _FOLD_STATE_PARTS = 16
@@ -376,39 +377,13 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(deduped, "append")
 
 
-_USER_STATS_OUT = (
-    "user_id bigint, n_events bigint, total_value double, max_value double"
-)
-_USER_STATS_STATE = "n bigint, total double, mx double"
-
-
-def _user_stats_fn(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Accumulate (count, sum, max) of `value` per user across micro-batches
-    — the applyInPandasWithState analog of the reference payload's
-    aggregateByKey combine (frequencyAnalysis.py:54-75), here with explicit
-    cross-batch state."""
-    if state.exists:
-        n, total, mx = state.get
-    else:
-        n, total, mx = 0, 0.0, float("-inf")
-    for pdf in pdfs:
-        vals = pdf["value"]
-        n += int(vals.count())
-        total += float(vals.sum())
-        if len(vals):
-            mx = max(mx, float(vals.max()))
-    state.update((n, total, mx))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n],
-            "total_value": [round(total, 6)],
-            "max_value": [mx],
-        }
+def _user_stats(stream: DataFrame) -> DataFrame:
+    """Per-user ``n_events`` (``COUNT(*)``), ``total_value`` (sum of
+    ``value``, rounded to 6 places) and ``max_value``."""
+    return stream.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum("value"), 6).alias("total_value"),
+        F.max("value").alias("max_value"),
     )
 
 
@@ -422,20 +397,15 @@ def _user_stats_fn(
     """,
 )
 def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: per-user running
-    (count, sum, max) over the event stream. State lives in the state store
-    partitioned by user_id; each trigger emits the updated running totals.
-    Under AvailableNow over a static source the final emission per user
-    equals the batch aggregate, which the oracle checks exactly."""
-    stream = _fixture_stream(spark, sf_dir)
-    stats = stream.groupBy("user_id").applyInPandasWithState(
-        _user_stats_fn,
-        outputStructType=_USER_STATS_OUT,
-        stateStructType=_USER_STATS_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return run_available_now(stats, "update", state_partitions=_FOLD_STATE_PARTS)
+    """Per-user running (count, sum, max) over the event stream — the
+    streaming form of the reference payload's aggregateByKey combine
+    (frequencyAnalysis.py:54-75). The state is a monoid, so it is a
+    built-in streaming aggregate: the JVM state store keeps each user's
+    aggregation buffers, partitioned by user_id, and no Python worker
+    runs. Complete mode replaces the sink table every batch, so the
+    drained result is one row per user after run-to-idle, equal to the
+    batch aggregate, which the oracle checks exactly."""
+    return run_available_now(_user_stats(_fixture_stream(spark, sf_dir)), "complete")
 
 
 def _click_purchase_join(
@@ -994,49 +964,26 @@ def stream_funnel_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _final_emission(result, filled.desc(), ["user_id", "t1", "t2", "t3"])
 
 
-_COHORT_STATE = "days array<int>"
-_COHORT_OUT = "user_id bigint, n_days int, days array<int>"
-
-
-def _cohort_fn(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Distinct active epoch-days per user, merged across micro-batches.
-    State is the user's sorted distinct day list — bounded by the span of
-    the retention window (a 90-day product grid caps it at 90 ints), NOT
-    by event volume: a million events on one day cost one state entry."""
-    (days,) = state.get if state.exists else ([],)
-    seen = set(days)
-    for pdf in pdfs:
-        seen.update(int(d) for d in pdf["eday"])
-    days = sorted(seen)
-    state.update((days,))
-    yield pd.DataFrame(
-        {
-            "user_id": pd.array([key[0]], dtype="Int64"),
-            "n_days": pd.array([len(days)], dtype="Int32"),
-            "days": [days],
-        }
-    )
+def _cohort_days(stream: DataFrame) -> DataFrame:
+    """Each user's distinct active epoch-days (``eday``) as ``days``."""
+    return stream.groupBy("user_id").agg(F.collect_set("eday").alias("days"))
 
 
 @query("stream_cohort_retention", oracle=_BATCH_COHORT_ORACLE)
 def stream_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention maintained INCREMENTALLY: each user's distinct
-    active-day set lives in the state store (applyInPandasWithState) and
-    the cohort grid is re-derived from the final per-user emissions — the
+    active-day set is a ``collect_set`` buffer in the JVM state store and
+    the cohort grid is re-derived from the drained per-user sets — the
     streaming twin of operators/behavioral.cohort_retention, sharing its
     oracle verbatim. After run-to-idle the grid equals the batch one.
 
-    Scale: state per user is the distinct-day list (bounded by the
-    retention window span, not event count); emission is per-key update
-    mode collapsed to the final (max n_days) row per user, the same
-    collapse the EWMA and funnel apply. The grid reduction itself is the
-    batch op's metadata-sized (cohort_day, day_offset) aggregate. The
-    day is computed by pure epoch arithmetic on the embedded UTC instant
-    (floor(unix_micros / 86.4e9)) so the result is session-timezone-proof.
+    Scale: state per user is the distinct-day set (bounded by the
+    retention window span, not event count); complete mode replaces the
+    sink table every batch, so the drain holds one row per user. The
+    grid reduction itself is the batch op's metadata-sized (cohort_day,
+    day_offset) aggregate. The day is computed by pure epoch arithmetic
+    on the embedded UTC instant (floor(unix_micros / 86.4e9)) so the
+    result is session-timezone-proof.
     """
     stream = _fixture_stream(spark, sf_dir).select(
         "user_id",
@@ -1044,16 +991,8 @@ def stream_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("eday"),
     )
-    out = stream.groupBy("user_id").applyInPandasWithState(
-        _cohort_fn,
-        outputStructType=_COHORT_OUT,
-        stateStructType=_COHORT_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    result = run_available_now(out, "update", state_partitions=_FOLD_STATE_PARTS)
-    final = _final_emission(result, F.desc("n_days"), ["user_id", "days"])
-    cohorted = final.select(
+    days = run_available_now(_cohort_days(stream), "complete")
+    cohorted = days.select(
         F.array_min("days").alias("cohort"),
         F.explode("days").alias("day"),
     )

@@ -7,11 +7,16 @@ state-carry. Here the events split into two files at the median
 timestamp, `maxFilesPerTrigger=1` forces one batch per file (file
 modification times pin the order), and the final emission must still
 equal the batch recurrence over the whole history — proving the state
-round-trips through the store between batches.
+round-trips through the store between batches. The same split drives
+the other folds, and the two per-key aggregates (user stats, cohort
+days) through ``run_available_now`` in complete mode, whose drain must
+hold one row per user.
 """
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 import shutil
 import tempfile
@@ -31,14 +36,34 @@ from dig_aggregator_core_spark.tables import load
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 
-def test_ewma_state_carries_across_batches(spark, sf_dir):
-    base = os.path.join(
-        tempfile.gettempdir(), "spark_graft_scratch", "multibatch"
-    )
+def _two_file_stream(spark, name: str, first, second):
+    """A file stream over ``first`` then ``second``, written as one
+    parquet file each under a fresh scratch dir ``<tmp>/spark_graft_scratch/
+    <name>`` and read one file per micro-batch (``maxFilesPerTrigger=1``).
+    Returns the stream and the scratch dir."""
+    base = os.path.join(tempfile.gettempdir(), "spark_graft_scratch", name)
     shutil.rmtree(base, ignore_errors=True)
     data_dir = os.path.join(base, "data")
     os.makedirs(data_dir, exist_ok=True)
+    for i, half in enumerate((first, second)):
+        tmp = os.path.join(base, f"half{i}")
+        half.coalesce(1).write.mode("overwrite").parquet(tmp)
+        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
+        dest = os.path.join(data_dir, f"{chr(97 + i)}.parquet")
+        shutil.copy(os.path.join(tmp, part), dest)
+        # file source processes oldest-modified first under
+        # maxFilesPerTrigger=1 — pin the order explicitly
+        ts_file = time.time() - (10 - i)
+        os.utime(dest, (ts_file, ts_file))
+    stream = (
+        spark.readStream.schema(first.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(data_dir)
+    )
+    return stream, base
 
+
+def test_ewma_state_carries_across_batches(spark, sf_dir):
     ev = load(spark, sf_dir, "events").select("user_id", "ts", "value")
     # split at the row-count midpoint of the sorted ts domain so batch
     # order == event-time order (ties land entirely in the first half)
@@ -53,22 +78,7 @@ def test_ewma_state_carries_across_batches(spark, sf_dir):
     second = ev.filter(F.col("ts") > F.lit(bound))
     assert first.count() > 0 and second.count() > 0
 
-    for i, half in enumerate((first, second)):
-        tmp = os.path.join(base, f"half{i}")
-        half.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dest = os.path.join(data_dir, f"{chr(97 + i)}.parquet")
-        shutil.copy(os.path.join(tmp, part), dest)
-        # file source processes oldest-modified first under
-        # maxFilesPerTrigger=1 — pin the order explicitly
-        ts_file = time.time() - (10 - i)
-        os.utime(dest, (ts_file, ts_file))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir)
-    )
+    stream, base = _two_file_stream(spark, "multibatch", first, second)
     out = stream.groupBy("user_id").applyInPandasWithState(
         _ewma_fn,
         outputStructType=_EWMA_OUT,
@@ -265,13 +275,6 @@ def test_funnel_state_carries_across_batches(spark, sf_dir):
     )
     from dig_aggregator_core_spark.tables import ntz_epoch_us
 
-    base = os.path.join(
-        tempfile.gettempdir(), "spark_graft_scratch", "multibatch_funnel"
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    data_dir = os.path.join(base, "data")
-    os.makedirs(data_dir, exist_ok=True)
-
     ev = (
         load(spark, sf_dir, "events")
         .filter(F.col("event_type").isin(*_FUNNEL_STAGES))
@@ -297,20 +300,7 @@ def test_funnel_state_carries_across_batches(spark, sf_dir):
     second = ev.filter(F.col("us") > bound)
     assert first.count() > 0 and second.count() > 0
 
-    for i, half in enumerate((first, second)):
-        tmp = os.path.join(base, f"half{i}")
-        half.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dest = os.path.join(data_dir, f"{chr(97 + i)}.parquet")
-        shutil.copy(os.path.join(tmp, part), dest)
-        ts_file = time.time() - (10 - i)
-        os.utime(dest, (ts_file, ts_file))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir)
-    )
+    stream, base = _two_file_stream(spark, "multibatch_funnel", first, second)
     out = stream.groupBy("user_id").applyInPandasWithState(
         _funnel_fn,
         outputStructType=_FUNNEL_OUT,
@@ -363,23 +353,25 @@ def test_funnel_state_carries_across_batches(spark, sf_dir):
     assert crossers, "fixture split produced no cross-batch conversions"
 
 
-def test_cohort_state_carries_across_batches(spark, sf_dir):
-    """Two-file replay for the stateful cohort: a user's distinct-day SET
-    must merge across batches (days from batch 1 kept when batch 2 adds
-    more), and the collapsed grid must equal the batch retention grid."""
-    from dig_aggregator_core_spark.streaming.stateful import (
-        _COHORT_OUT,
-        _COHORT_STATE,
-        _cohort_fn,
-    )
-    from dig_aggregator_core_spark.tables import ntz_epoch_us
+def _drained_run(spark, caplog, df, checkpoint):
+    """``df`` run to idle by ``run_available_now`` in complete mode: the
+    drained rows and the run's ``stream_run`` record."""
+    caplog.set_level(logging.INFO, logger=stateful.__name__)
+    caplog.clear()
+    rows = stateful.run_available_now(df, "complete", checkpoint=checkpoint).collect()
+    (run,) = [
+        json.loads(r.getMessage())
+        for r in caplog.records
+        if '"stream_run"' in r.getMessage()
+    ]
+    return rows, run
 
-    base = os.path.join(
-        tempfile.gettempdir(), "spark_graft_scratch", "multibatch_cohort"
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    data_dir = os.path.join(base, "data")
-    os.makedirs(data_dir, exist_ok=True)
+
+def test_cohort_state_carries_across_batches(spark, sf_dir, caplog):
+    """Two-file replay for the streaming cohort: a user's distinct-day SET
+    must merge across batches (days from batch 1 kept when batch 2 adds
+    more), and the complete-mode drain must hold each user's full set."""
+    from dig_aggregator_core_spark.tables import ntz_epoch_us
 
     ev = load(spark, sf_dir, "events").select(
         "user_id",
@@ -394,49 +386,14 @@ def test_cohort_state_carries_across_batches(spark, sf_dir):
     second = ev.filter(F.col("eday") > bound)
     assert first.count() > 0 and second.count() > 0
 
-    for i, half in enumerate((first, second)):
-        tmp = os.path.join(base, f"half{i}")
-        half.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dest = os.path.join(data_dir, f"{chr(97 + i)}.parquet")
-        shutil.copy(os.path.join(tmp, part), dest)
-        ts_file = time.time() - (10 - i)
-        os.utime(dest, (ts_file, ts_file))
+    stream, base = _two_file_stream(spark, "multibatch_cohort", first, second)
+    rows, run = _drained_run(
+        spark, caplog, stateful._cohort_days(stream), os.path.join(base, "chk")
+    )
+    assert run["batches"] >= 2
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir)
-    )
-    out = stream.groupBy("user_id").applyInPandasWithState(
-        _cohort_fn,
-        outputStructType=_COHORT_OUT,
-        stateStructType=_COHORT_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = "multibatch_cohort_sink"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(base, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert len(q.recentProgress) >= 2
-
-    from pyspark.sql import Window
-
-    result = spark.table(sink)
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_days"))
-    final = (
-        result.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("user_id", "days")
-    )
-    got = {r["user_id"]: sorted(r["days"]) for r in final.collect()}
+    got = {r["user_id"]: sorted(r["days"]) for r in rows}
+    assert len(got) == len(rows)
     expected = {
         r["user_id"]: sorted(r["days"])
         for r in ev.groupBy("user_id")
@@ -453,6 +410,35 @@ def test_cohort_state_carries_across_batches(spark, sf_dir):
     assert crossers, "fixture split produced no cross-batch users"
 
 
+def test_user_stats_state_carries_across_batches(spark, sf_dir, caplog):
+    """Two-file replay for the streaming user stats: (count, sum, max)
+    must merge across batches, and the complete-mode drain must hold one
+    row per user equal to the batch aggregate."""
+    ev = load(spark, sf_dir, "events").select("user_id", "ts", "value")
+    bound = sorted(r["ts"] for r in ev.select("ts").collect())[ev.count() // 2]
+    first = ev.filter(F.col("ts") <= F.lit(bound))
+    second = ev.filter(F.col("ts") > F.lit(bound))
+    assert first.count() > 0 and second.count() > 0
+
+    stream, base = _two_file_stream(spark, "multibatch_user_stats", first, second)
+    rows, run = _drained_run(
+        spark, caplog, stateful._user_stats(stream), os.path.join(base, "chk")
+    )
+    assert run["batches"] >= 2
+
+    got = {r["user_id"]: tuple(r)[1:] for r in rows}
+    assert len(got) == len(rows)
+    expected = {
+        r["user_id"]: tuple(r)[1:] for r in stateful._user_stats(ev).collect()
+    }
+    assert got == expected
+    # the split must actually exercise the cross-batch merge
+    crossers = set(
+        r["user_id"] for r in first.select("user_id").distinct().collect()
+    ) & set(r["user_id"] for r in second.select("user_id").distinct().collect())
+    assert crossers, "fixture split produced no cross-batch users"
+
+
 def test_attribution_state_carries_across_batches(spark, sf_dir):
     """Two-file replay for online attribution: a purchase in batch 2 must
     credit a touch from batch 1 — the last-touch state has to round-trip
@@ -466,13 +452,6 @@ def test_attribution_state_carries_across_batches(spark, sf_dir):
         _attr_fn,
     )
     from dig_aggregator_core_spark.tables import ntz_epoch_us
-
-    base = os.path.join(
-        tempfile.gettempdir(), "spark_graft_scratch", "multibatch_attr"
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    data_dir = os.path.join(base, "data")
-    os.makedirs(data_dir, exist_ok=True)
 
     ev = (
         load(spark, sf_dir, "events")
@@ -492,20 +471,7 @@ def test_attribution_state_carries_across_batches(spark, sf_dir):
     second = ev.filter(F.col("us") > bound)
     assert first.count() > 0 and second.count() > 0
 
-    for i, half in enumerate((first, second)):
-        tmp = os.path.join(base, f"half{i}")
-        half.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dest = os.path.join(data_dir, f"{chr(97 + i)}.parquet")
-        shutil.copy(os.path.join(tmp, part), dest)
-        ts_file = time.time() - (10 - i)
-        os.utime(dest, (ts_file, ts_file))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir)
-    )
+    stream, base = _two_file_stream(spark, "multibatch_attr", first, second)
     out = stream.groupBy("user_id").applyInPandasWithState(
         _attr_fn,
         outputStructType=_ATTR_OUT,
@@ -558,13 +524,6 @@ def test_zscore_anomaly_state_carries_across_batches(spark, sf_dir):
     )
     from dig_aggregator_core_spark.tables import ntz_epoch_us
 
-    base = os.path.join(
-        tempfile.gettempdir(), "spark_graft_scratch", "multibatch_zanom"
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    data_dir = os.path.join(base, "data")
-    os.makedirs(data_dir, exist_ok=True)
-
     ev = load(spark, sf_dir, "events").select(
         "user_id",
         ntz_epoch_us("ts").alias("us"),
@@ -578,20 +537,7 @@ def test_zscore_anomaly_state_carries_across_batches(spark, sf_dir):
     second = ev.filter(F.col("us") > bound)
     assert first.count() > 0 and second.count() > 0
 
-    for i, half in enumerate((first, second)):
-        tmp = os.path.join(base, f"half{i}")
-        half.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dest = os.path.join(data_dir, f"{chr(97 + i)}.parquet")
-        shutil.copy(os.path.join(tmp, part), dest)
-        ts_file = time.time() - (10 - i)
-        os.utime(dest, (ts_file, ts_file))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir)
-    )
+    stream, base = _two_file_stream(spark, "multibatch_zanom", first, second)
     out = stream.groupBy("user_id").applyInPandasWithState(
         _zanom_fn,
         outputStructType=_ZANOM_OUT,
@@ -660,13 +606,6 @@ def test_cdc_upsert_state_carries_across_batches(spark, sf_dir):
     arriving in a DIFFERENT batch than the change they shadow."""
     from dig_aggregator_core_spark.streaming.stateful import _cdc_apply
 
-    base = os.path.join(
-        tempfile.gettempdir(), "spark_graft_scratch", "multibatch_cdc"
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    data_dir = os.path.join(base, "data")
-    os.makedirs(data_dir, exist_ok=True)
-
     ev = load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "value", "event_type"
     )
@@ -675,20 +614,7 @@ def test_cdc_upsert_state_carries_across_batches(spark, sf_dir):
     # (ts, event_id) last-writer rule must resolve cross-batch conflicts
     first = ev.filter(F.col("event_id") % 2 == 0)
     second = ev.filter(F.col("event_id") % 2 == 1)
-    for i, half in enumerate((first, second)):
-        tmp = os.path.join(base, f"half{i}")
-        half.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dest = os.path.join(data_dir, f"{chr(97 + i)}.parquet")
-        shutil.copy(os.path.join(tmp, part), dest)
-        ts_file = time.time() - (10 - i)
-        os.utime(dest, (ts_file, ts_file))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir)
-    )
+    stream, base = _two_file_stream(spark, "multibatch_cdc", first, second)
     final = _cdc_apply(spark, stream, checkpoint=os.path.join(base, "chk"))
     got = {
         r["user_id"]: (round(r["last_value"], 4), r["n_changes"])
@@ -841,13 +767,6 @@ def test_transition_seam_pair_across_batches(spark, sf_dir):
         _transition_fn,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(), "spark_graft_scratch", "multibatch_trans"
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    data_dir = os.path.join(base, "data")
-    os.makedirs(data_dir, exist_ok=True)
-
     ev = load(spark, sf_dir, "events").select(
         "user_id",
         F.unix_micros(
@@ -871,20 +790,7 @@ def test_transition_seam_pair_across_batches(spark, sf_dir):
     first = ev.filter(F.col("us") <= bound)
     second = ev.filter(F.col("us") > bound)
     assert first.count() > 0 and second.count() > 0
-    for i, half in enumerate((first, second)):
-        tmp = os.path.join(base, f"half{i}")
-        half.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dest = os.path.join(data_dir, f"{chr(97 + i)}.parquet")
-        shutil.copy(os.path.join(tmp, part), dest)
-        ts_file = time.time() - (10 - i)
-        os.utime(dest, (ts_file, ts_file))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir)
-    )
+    stream, base = _two_file_stream(spark, "multibatch_trans", first, second)
     out = stream.groupBy("user_id").applyInPandasWithState(
         _transition_fn,
         outputStructType=_TRANS_OUT,

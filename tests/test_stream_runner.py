@@ -3,8 +3,8 @@ and the one fixture source (streaming.stateful._fixture_stream).
 
 Contracts pinned here:
   * state partitions are capped at the session's task slots: a fold asks
-    for 16, a stream-stream join for 4, and each query's own progress
-    reports min(ask, defaultParallelism);
+    for 16, a stream-stream join or a per-key aggregate for 4, and each
+    query's own progress reports min(ask, defaultParallelism);
   * every finished query logs one JSON record (batches, input rows,
     per-batch durationMs phases, partitions and rows per state operator);
   * the query keeps the partition count set around start(), while the
@@ -40,6 +40,7 @@ from dig_aggregator_core_spark.operators.similarity import (
 )
 from dig_aggregator_core_spark.streaming import stateful
 from dig_aggregator_core_spark.streaming.stateful import (
+    stream_ewma_stateful,
     stream_stateful_user_stats,
     stream_stream_interval_join,
 )
@@ -75,17 +76,22 @@ def test_state_partitions_capped_at_task_slots(spark, sf_dir, caplog):
     caplog.set_level(logging.INFO, logger=stateful.__name__)
     slots = spark.sparkContext.defaultParallelism
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    stream_stateful_user_stats(spark, sf_dir)
+    stream_ewma_stateful(spark, sf_dir)
     stream_stream_interval_join(spark, sf_dir)
-    fold, join = _runs(caplog)
+    stream_stateful_user_stats(spark, sf_dir)
+    fold, join, agg = _runs(caplog)
     assert _partitions(fold) == {min(16, slots)}
     assert _partitions(join) == {min(4, slots)}
+    # user stats is a built-in aggregate: a JVM state operator, join family
+    assert [
+        (o["operatorName"], o["numShufflePartitions"]) for o in agg["stateOperators"]
+    ] == [("stateStoreSave", min(4, slots))]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_run_record_explains_the_query(spark, sf_dir, caplog):
     caplog.set_level(logging.INFO, logger=stateful.__name__)
-    got = stream_stateful_user_stats(spark, sf_dir)
+    got = stream_ewma_stateful(spark, sf_dir)
     (run,) = _runs(caplog)
     events = load(spark, sf_dir, "events")
     assert run["batches"] == len(run["durationMs"]) >= 1
@@ -143,7 +149,7 @@ def test_shared_conf_survives_concurrent_runs(spark, sf_dir, tmp_path):
     _deleted_index(spark, sf_dir, serial_idx)
     shutil.copytree(serial_idx, threaded_idx)
 
-    fold = lambda: _rows(stream_stateful_user_stats(spark, sf_dir))  # noqa: E731
+    fold = lambda: _rows(stream_ewma_stateful(spark, sf_dir))  # noqa: E731
     window = lambda: _rows(stream_tumbling_availablenow(spark, sf_dir))  # noqa: E731
     want = {"fold": fold(), "window": window()}
     want["compact"] = _compacted(spark, serial_idx)
